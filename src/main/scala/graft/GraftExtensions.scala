@@ -2,49 +2,29 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.VectorFunctions
 
 /** Cluster-wide installation point for the engine's native functions.
   *
   * `GraftSession.local` registers the functions per-session for the
   * driver-owned entry points; this class is the production path —
   * `spark.sql.extensions=graft.GraftExtensions` in spark-defaults makes
-  * `cosine_sim`/`vec_dot`/`l2_dist_sq`/`l2_norm` available to every
-  * session on the cluster (SQL, thriftserver, notebooks) without any
-  * driver code, the idiomatic Spark deployment for custom Catalyst
-  * expressions.
+  * every function of [[VectorFunctions.sqlFunctions]] (the vector,
+  * int8-quantized and PQ kernels) available to every session on the
+  * cluster (SQL, thriftserver, notebooks) without any driver code, the
+  * idiomatic Spark deployment for custom Catalyst expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
-
-  private def arity(name: String, n: Int)(build: Seq[Expression] => Expression)
-      : Seq[Expression] => Expression = { xs =>
-    if (xs.length != n) throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-      messageParameters = Map("functionName" -> name,
-        "expectedNum" -> n.toString, "actualNum" -> xs.length.toString,
-        "docroot" -> "https://spark.apache.org/docs/latest"))
-    build(xs)
-  }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // opt-in ANN rewrite: cosine top-k over a written IVF index ->
     // centroid-pruned scan (spark.graft.ivf.rewrite.enabled=true)
     ext.injectOptimizerRule(spark => graft.search.IvfTopKRewrite(spark))
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      info("vec_dot", "vec_dot(a, b) - dot product of two float vectors"),
-      arity("vec_dot", 2)(xs => DotProduct(xs(0), xs(1)))))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors"),
-      arity("cosine_sim", 2)(xs => CosineSimilarity(xs(0), xs(1)))))
-    ext.injectFunction((FunctionIdentifier("l2_dist_sq"),
-      info("l2_dist_sq", "l2_dist_sq(a, b) - squared L2 distance of two float vectors"),
-      arity("l2_dist_sq", 2)(xs => L2DistanceSq(xs(0), xs(1)))))
-    ext.injectFunction((FunctionIdentifier("l2_norm"),
-      info("l2_norm", "l2_norm(a) - L2 norm of a float vector"),
-      arity("l2_norm", 1)(xs => L2Norm(xs(0)))))
+    VectorFunctions.sqlFunctions.foreach { case (name, usage, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
+        VectorFunctions.checkedBuilder(name, arity, build)))
+    }
   }
 }

@@ -432,16 +432,47 @@ object VectorFunctions {
   def pq_encode(v: Column, centroids: Array[Float], m: Int, ks: Int, dsub: Int): Column =
     col(PqEncode(e(v), centroids, m, ks, dsub))
 
+  /** The one SQL function table — (name, usage, arity, builder) — that
+    * both install paths read: [[register]] (per session) and
+    * [[graft.GraftExtensions]] (cluster-wide `spark.sql.extensions`),
+    * so the two can never offer different functions. */
+  private[graft] val sqlFunctions
+      : Seq[(String, String, Int, Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", "vec_dot(a, b) - dot product of two float vectors", 2,
+      xs => DotProduct(xs(0), xs(1))),
+    ("cosine_sim", "cosine_sim(a, b) - cosine similarity of two float vectors", 2,
+      xs => CosineSimilarity(xs(0), xs(1))),
+    ("l2_dist_sq", "l2_dist_sq(a, b) - squared L2 distance of two float vectors", 2,
+      xs => L2DistanceSq(xs(0), xs(1))),
+    ("l2_norm", "l2_norm(a) - L2 norm of a float vector", 1,
+      xs => L2Norm(xs(0))),
+    ("vec_quantize_i8", "vec_quantize_i8(a) - int8 codes and scale of a float vector", 1,
+      xs => QuantizeI8(xs(0))),
+    ("cosine_sim_i8", "cosine_sim_i8(q1, q2) - cosine similarity of two int8 code vectors", 2,
+      xs => CosineSimI8(xs(0), xs(1))),
+    ("vec_dequantize_i8", "vec_dequantize_i8(q, scale) - float vector from int8 codes", 2,
+      xs => DequantizeI8(xs(0), xs(1))),
+    ("pq_adc_dot", "pq_adc_dot(codes, lut) - PQ asymmetric dot product over a lookup table", 2,
+      xs => PqAdcDot(xs(0), xs(1))))
+
+  /** `build` behind an arity check: a wrong argument count fails analysis
+    * with a proper AnalysisException, not an IndexOutOfBounds. */
+  private[graft] def checkedBuilder(name: String, arity: Int,
+                                    build: Seq[Expression] => Expression)
+      : Seq[Expression] => Expression = { xs =>
+    if (xs.length != arity) throw new org.apache.spark.sql.AnalysisException(
+      errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+      messageParameters = Map("functionName" -> name,
+        "expectedNum" -> arity.toString, "actualNum" -> xs.length.toString,
+        "docroot" -> "https://spark.apache.org/docs/latest"))
+    build(xs)
+  }
+
   /** Register as SQL functions so `spark.sql("... cosine_sim(a,b) ...")` works. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot", xs => DotProduct(xs(0), xs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim", xs => CosineSimilarity(xs(0), xs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("l2_dist_sq", xs => L2DistanceSq(xs(0), xs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("l2_norm", xs => L2Norm(xs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_quantize_i8", xs => QuantizeI8(xs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction("cosine_sim_i8", xs => CosineSimI8(xs(0), xs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("vec_dequantize_i8", xs => DequantizeI8(xs(0), xs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("pq_adc_dot", xs => PqAdcDot(xs(0), xs(1)), "scala_udf")
+    sqlFunctions.foreach { case (name, _, arity, build) =>
+      reg.createOrReplaceTempFunction(name, checkedBuilder(name, arity, build), "scala_udf")
+    }
   }
 }

@@ -77,7 +77,7 @@ object InvertedIndex {
     case other => throw new IllegalArgumentException(s"unknown tokenizer '$other'")
   }
 
-  private final case class Meta(buckets: Int, nDocs: Long, nTokened: Long,
+  private[search] final case class Meta(buckets: Int, nDocs: Long, nTokened: Long,
                                 totalLen: Long, tok: String)
 
   /** Version-keyed meta memo: the 1-row meta table is re-read on every
@@ -87,37 +87,43 @@ object InvertedIndex {
     * keyed by (table path, version) can never serve stale — the same
     * contract as a table format's manifest cache.
     *
-    * Bounded + race-hardened (r20, the r19 advisor's two findings):
-    * a memo hit evicts the same path's OTHER versions (a long-lived
-    * process touching many temp indexes holds one live entry per path,
-    * never one per mutation epoch), a global cap clears the map
-    * outright if distinct paths somehow exceed it, and an entry is
-    * only memoized when the version re-reads UNCHANGED after the data
-    * read — a commit racing between the version probe and the read can
-    * therefore never cache new meta under the old version key (the
-    * racy read is served unmemoized instead). */
+    * Bounded + race-hardened: [[remember]] evicts the same path's
+    * OLDER versions (a long-lived process touching many temp indexes
+    * holds one live entry per path, never one per mutation epoch), a
+    * global cap clears the map outright if distinct paths somehow
+    * exceed it, and an entry is only memoized when the version re-reads
+    * UNCHANGED after the data read — a commit racing between the
+    * version probe and the read can therefore never cache new meta
+    * under the old version key (the racy read is served unmemoized
+    * instead). */
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), Meta]()
   private val MetaCacheMaxEntries = 512
   /** Spec seam: the memo must stay bounded in a long-lived process. */
   private[graft] def metaCacheSize: Int = metaCache.size
 
+  private[search] def memoized(path: String, v: Int): Option[Meta] =
+    Option(metaCache.get((path, v)))
+
+  /** Memoize `meta` as `path`'s version `v` and sweep only the path's
+    * OLDER epochs: a slow reader landing its stale put after a newer
+    * epoch's must never evict that newer entry. */
+  private[search] def remember(path: String, v: Int, meta: Meta): Unit = {
+    if (metaCache.size >= MetaCacheMaxEntries) metaCache.clear()
+    metaCache.put((path, v), meta)
+    metaCache.keySet.removeIf(k => k._1 == path && k._2 < v)
+  }
+
   private def readMeta(store: DocumentStore): Meta = {
     val path = store.tablePath("meta")
     var attempts = 0
     while (attempts < 5) {
       val v0 = store.version("meta")
-      val hit = metaCache.get((path, v0))
-      if (hit != null) return hit
+      val hit = memoized(path, v0)
+      if (hit.isDefined) return hit.get
       val r = store.read("meta").head()
       val m = Meta(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))
-      if (store.version("meta") == v0) {
-        if (metaCache.size >= MetaCacheMaxEntries) metaCache.clear()
-        metaCache.put((path, v0), m)
-        // one live version per path: drop this path's stale epochs
-        metaCache.keySet.removeIf(k => k._1 == path && k._2 != v0)
-        return m
-      }
+      if (store.version("meta") == v0) { remember(path, v0, m); return m }
       attempts += 1 // version moved mid-read: retry against the new epoch
     }
     // writers racing faster than we can read: serve the latest, unmemoized
@@ -140,11 +146,7 @@ object InvertedIndex {
     // the CAS makes it possible to observe), the delta isn't exactly +1
     // and we memoize nothing — readMeta then re-reads from disk.
     val v1 = store.version("meta")
-    if (v1 == v0 + 1) {
-      if (metaCache.size >= MetaCacheMaxEntries) metaCache.clear()
-      metaCache.put((path, v1), m)
-      metaCache.keySet.removeIf(k => k._1 == path && k._2 != v1)
-    }
+    if (v1 == v0 + 1) remember(path, v1, m)
   }
 
   /** Term → bucket routing, computed by the ENGINE'S OWN column

@@ -1,10 +1,10 @@
 package graft.store
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path => HPath}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch
 
 /** Versioned copy-on-write parquet store: the engine's answer to the
@@ -13,9 +13,12 @@ import org.apache.spark.util.sketch
   *
   * Layout per table:
   * {{{
-  *   <root>/<table>/data/v<N>/<part>/...parquet   physical segments
-  *   <root>/<table>/_versions/v<N>.manifest       partition -> segment dir(s)
-  *   <root>/<table>/_CURRENT                      current version number
+  *   <root>/<table>/data/v<N>-<token>/<part>/...parquet  physical segments
+  *   <root>/<table>/_versions/v<N>.manifest   the version's one record:
+  *                                            schema, partition column,
+  *                                            partition -> segment dir(s)
+  *   <root>/<table>/_versions/v<N>.stats|.bloom.<col>  pruning sidecars
+  *   <root>/<table>/_CURRENT                  current version number
   * }}}
   *
   * Every mutation commits a NEW manifest that reuses the segment dirs of
@@ -42,6 +45,7 @@ import org.apache.spark.util.sketch
   * single-writer contract carries the guarantee instead.
   */
 class DocumentStore(val spark: SparkSession, root: String) {
+  import DocumentStore._
 
   private val hconf = spark.sessionState.newHadoopConf()
   private val fs: FileSystem = new HPath(root).getFileSystem(hconf)
@@ -51,6 +55,9 @@ class DocumentStore(val spark: SparkSession, root: String) {
   private lazy val fc: FileContext = FileContext.getFileContext(rootPath.toUri, hconf)
 
   private def tdir(table: String): HPath = new HPath(rootPath, table)
+
+  private def vfile(table: String, name: String): HPath =
+    new HPath(new HPath(tdir(table), "_versions"), name)
 
   /** Qualified table directory — where index sidecars that travel with
     * a table (e.g. [[graft.search.ServePoint]]) live. */
@@ -85,49 +92,61 @@ class DocumentStore(val spark: SparkSession, root: String) {
   private def dirsOf(m: Map[String, String]): Seq[String] =
     m.values.flatMap(splitDirs).toSeq
 
-  private[store] def manifest(table: String, v: Int): Map[String, String] = {
-    if (v == 0) return Map.empty // table never created
-    val f = new HPath(new HPath(tdir(table), "_versions"), s"v$v.manifest")
+  /** Version `v` of `table` exactly as committed, from ONE read of its
+    * record. A mutation takes one snapshot and derives everything from
+    * it — the parts it rewrites, the schema it reads them under, the
+    * partition column it locates victims with — so a commit racing
+    * between two reads can never hand it a mix of two versions. Version
+    * 0 is the never-created table. */
+  private[store] def snapshot(table: String, v: Int): Snapshot = {
+    if (v == 0) return Snapshot(0, Map.empty, new StructType(), None)
+    val f = vfile(table, s"v$v.manifest")
     // a committed version MUST have its manifest: reading a corrupted
     // table (_CURRENT pointing at a missing manifest) as empty would
     // silently turn data loss into an empty-table answer
-    val body = readString(f).getOrElse(throw new IllegalStateException(
-      s"table '$table' is corrupted: _CURRENT points at version $v but $f is missing"))
-    body.split("\n").iterator
-      .filter(_.nonEmpty).map { l =>
-        val Array(k, dir) = l.split("\t", 2); k -> dir
-      }.toMap
+    def corrupted(what: String) = new IllegalStateException(
+      s"table '$table' is corrupted: _CURRENT points at version $v but $f is $what")
+    val lines = readString(f).getOrElse(throw corrupted("missing"))
+      .split("\n").toSeq.filter(_.nonEmpty).map { l =>
+        val Array(k, d) = l.split("\t", 2); k -> d
+      }
+    val (meta, parts) = lines.partition(_._1.startsWith("#"))
+    val m = meta.toMap
+    Snapshot(v, parts.toMap,
+      DataType.fromJson(m.getOrElse(SchemaKey, throw corrupted("unreadable")))
+        .asInstanceOf[StructType],
+      m.get(PartColKey).filter(_.nonEmpty))
   }
 
-  /** Commit manifest `m` as version `v = base + 1`, with `base` the
-    * version this mutation READ. The epoch claim is a DIRECTORY rename
-    * without overwrite (`.claim-v<N>-<token>` → `v<N>.claim`) — the CAS
-    * primitive: POSIX rename atomically refuses a non-empty destination
-    * directory (the marker file inside guarantees non-emptiness), and
-    * HDFS refuses any existing destination at the namenode, so of two
-    * racing committers exactly one owns epoch `v`. (A FILE rename is
-    * NOT a CAS on local filesystems: POSIX rename overwrites files
-    * silently.) Only the claim winner writes `v$v.manifest` and swaps
-    * `_CURRENT`. A losing committer deletes its own just-written
-    * segment dirs (the entries of `m` not carried from the base
-    * manifest) and fails loudly; it never publishes, so no mutation
-    * epoch is silently lost. Crash debris (a claimed epoch whose
-    * `_CURRENT` swap never happened) blocks the epoch until [[vacuum]]
-    * clears it — commit NEVER clears a claim itself, because a claim it
-    * cannot distinguish from debris may belong to a live committer
-    * between claim and swap. */
-  /** @param pc Some(newLayout) when this commit CHANGES the partition
-    *   column (create/repartitionBy); None carries the base version's
-    *   layout forward. The effective layout is published as
-    *   `v<N>.partcol` under the SAME claim protection as the manifest,
-    *   so a layout change and its data always become visible in one
-    *   atomic swap — a table-level pointer alone would leave a crash
-    *   window where pruned reads consult the new column against an
-    *   old-layout manifest (silently empty results). */
-  private[store] def commit(table: String, base: Int, v: Int, m: Map[String, String],
-                     schemaJson: Option[String],
-                     pc: Option[Option[String]] = None): Unit = {
-    require(v == base + 1, s"commit must target base+1 (got base=$base v=$v)")
+  private[store] def snapshot(table: String): Snapshot =
+    snapshot(table, currentVersion(table))
+
+  /** Commit `next` over `base`, the snapshot this mutation READ
+    * (`next.version` must be `base.version + 1`). The epoch claim is a
+    * DIRECTORY rename without overwrite (`.claim-v<N>-<token>` →
+    * `v<N>.claim`) — the CAS primitive: POSIX rename atomically refuses
+    * a non-empty destination directory (the marker file inside
+    * guarantees non-emptiness), and HDFS refuses any existing
+    * destination at the namenode, so of two racing committers exactly
+    * one owns epoch `v`. (A FILE rename is NOT a CAS on local
+    * filesystems: POSIX rename overwrites files silently.) Only the claim
+    * winner writes `v<N>.manifest` and swaps `_CURRENT`. A losing
+    * committer deletes its own just-written segment dirs (the entries of
+    * `next` not carried from `base`) and fails loudly; it never
+    * publishes, so no mutation epoch is silently lost. Crash debris (a
+    * claimed epoch whose `_CURRENT` swap never happened) blocks the epoch
+    * until [[vacuum]] clears it — commit NEVER clears a claim itself,
+    * because a claim it cannot distinguish from debris may belong to a
+    * live committer between claim and swap.
+    *
+    * The manifest carries the version's schema and partition column, so
+    * a layout change (create/repartitionBy) and its data become visible
+    * in the same atomic swap, and time travel reads every version under
+    * its own layout. */
+  private[store] def commit(table: String, base: Snapshot, next: Snapshot): Unit = {
+    val v = next.version
+    require(v == base.version + 1,
+      s"commit must target base+1 (got base=${base.version} v=$v)")
     val vd = new HPath(tdir(table), "_versions"); fs.mkdirs(vd)
     val token = java.util.UUID.randomUUID().toString
     val claimDir = new HPath(vd, s"v$v.claim")
@@ -151,25 +170,21 @@ class DocumentStore(val spark: SparkSession, root: String) {
       // lost the race: drop the segment dirs this attempt wrote (the
       // manifest entries not carried over from the base version)
       fs.delete(tmpDir, true)
-      val carried = dirsOf(manifest(table, base)).toSet
-      dirsOf(m).toSet.diff(carried).foreach { dir =>
+      dirsOf(next.parts).toSet.diff(dirsOf(base.parts).toSet).foreach { dir =>
         val p = new HPath(dir)
         if (fs.exists(p)) fs.delete(p, true)
       }
       throw new java.util.ConcurrentModificationException(
-        s"concurrent commit on table '$table': read version $base but epoch $v " +
+        s"concurrent commit on table '$table': read version ${base.version} but epoch $v " +
           s"was claimed by another writer; mutation NOT applied (segments cleaned). " +
           s"If no writer is live, the claim is crash debris — run vacuum to clear it")
     }
-    val body = m.toSeq.sorted.map { case (k, d) => s"$k\t$d" }.mkString("\n")
-    writeString(new HPath(vd, s"v$v.manifest"), body)
-    schemaJson.foreach(js => writeString(new HPath(vd, s"v$v.schema"), js))
-    // layout rides with the version (carry-forward when unchanged), so
-    // every committed version knows its own partition column
-    writeString(new HPath(vd, s"v$v.partcol"),
-      pc.getOrElse(partColAt(table, base)).getOrElse(""))
-    graft.tools.Timing(s"commit-stats-$table")(refreshStats(table, base, v, m))
-    graft.tools.Timing(s"commit-blooms-$table")(refreshBlooms(table, base, v, m))
+    val record = Seq(SchemaKey -> next.schema.json, PartColKey -> next.partCol.getOrElse("")) ++
+      next.parts.toSeq.sorted
+    writeString(new HPath(vd, s"v$v.manifest"),
+      record.map { case (k, d) => s"$k\t$d" }.mkString("\n"))
+    graft.tools.Timing(s"commit-stats-$table")(refreshStats(table, base, next))
+    graft.tools.Timing(s"commit-blooms-$table")(refreshBlooms(table, base, next))
     val tmp = new HPath(tdir(table), s"_CURRENT.tmp$v")
     writeString(tmp, v.toString)
     fc.rename(tmp, new HPath(tdir(table), "_CURRENT"), Options.Rename.OVERWRITE)
@@ -183,20 +198,20 @@ class DocumentStore(val spark: SparkSession, root: String) {
     case None => lit("all")
   }
 
-  /** Write `df`'s segments under an ATTEMPT-UNIQUE directory
-    * (`data/v<N>-<token>`): two optimistic committers racing toward the
-    * same epoch must never share a physical dir, or the loser's write
-    * would clobber the winner's data before the CAS even runs. Returns
-    * the partition→dir map plus the schema JSON for the commit to
-    * publish — the version's logical schema rides next to its manifest
-    * so reads NEVER infer (or merge) schemas from data files: at 100 TB
-    * footer sniffing across segment dirs is an IO pass of its own, and
-    * schema evolution (upsert adding a column) would otherwise depend
-    * on which segment the reader lists first. */
+  /** Caller-named partition values, made directory-name-safe like
+    * [[partExpr]]. */
+  private def safeKeys(ps: Seq[String]): Set[String] =
+    ps.map(_.replaceAll("[^A-Za-z0-9_\\-]", "_")).toSet
+
+  /** The distinct partition keys of `df`'s rows (one small collect). */
+  private def partKeys(df: DataFrame, partCol: Option[String]): Set[String] =
+    df.select(partExpr(partCol).as("__part")).distinct()
+      .collect().map(_.getString(0)).toSet
+
   /** Rows of a LocalRelation-rooted plan (unwrapping repartition/coalesce
-    * wrappers), when at most `maxRows` — the driver-local write fast
-    * path's gate. None for anything distributed: this must NEVER pull
-    * computed data to the driver, only recognize data already there. */
+    * wrappers), when at most `maxRows`. None for anything distributed:
+    * this must NEVER pull computed data to the driver, only recognize
+    * data already there. */
   private def localTinyRows(df: DataFrame, maxRows: Int = 10000): Option[Seq[Row]] = {
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Repartition, RepartitionByExpression}
     @annotation.tailrec
@@ -225,40 +240,76 @@ class DocumentStore(val spark: SparkSession, root: String) {
           if (r.isNullAt(idx)) "__null"
           else r.get(idx).toString.replaceAll("[^A-Za-z0-9_\\-]", "_")
         schema(idx).dataType match {
-          case org.apache.spark.sql.types.StringType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.BooleanType =>
-            Some(sanitized(_))
+          case StringType | IntegerType | LongType | BooleanType => Some(sanitized(_))
           case _ => None
         }
     }
 
-  private[store] def writeSegments(table: String, df: DataFrame, v: Int,
-                            partitionCol: Option[String],
-                            sortBy: Seq[String] = Nil): (Map[String, String], String) = {
+  /** The ONE gate that picks the driver-local write over a Spark job —
+    * for metadata-scale frames (1-row meta tables, a chat session row),
+    * where plan+schedule+commit of a Spark write costs ~200-900 ms per
+    * call and parquet-mr writes the same file in ~10 ms (guide §5).
+    * Returns `df`'s rows and their partition-key function when every
+    * condition holds, None (nothing collected) otherwise:
+    *
+    *  - `df` is a LocalRelation of ≤ 10k rows ([[localTinyRows]] —
+    *    never collects distributed data);
+    *  - all types atomic ([[LocalParquet.supports]]) and the partition
+    *    key driver-replicable ([[localPartKey]]);
+    *  - no `keys` column (the match keys of a keyed rewrite) is a
+    *    timestamp/date — key equality must not depend on the session's
+    *    java8API row representation — or a float/double: Spark's join
+    *    keys normalize NaN = NaN (and -0.0 = 0.0), JVM equality on
+    *    doubles does not (NaN != NaN), so a driver-side match would keep
+    *    a stored NaN-keyed row that the anti-join replaces. */
+  private def localRows(df: DataFrame, partCol: Option[String],
+                        keys: Seq[String]): Option[(Seq[Row], Row => String)] = {
+    val sc = df.schema
+    val unsafeKey = keys.exists(k => sc(k).dataType match {
+      case TimestampType | DateType | FloatType | DoubleType => true
+      case _ => false
+    })
+    if (unsafeKey || !LocalParquet.supports(sc)) None
+    else for {
+      keyFn <- localPartKey(partCol, sc)
+      rows <- localTinyRows(df)
+    } yield (rows, keyFn)
+  }
+
+  /** A fresh attempt-unique segment root (`data/v<N>-<token>`) and its
+    * token: two optimistic committers racing toward the same epoch must
+    * never share a physical dir, or the loser's write would clobber the
+    * winner's data before the CAS even runs. */
+  private def segmentRoot(table: String, v: Int): (HPath, String) = {
     val token = java.util.UUID.randomUUID().toString.take(8)
-    val out = new HPath(new HPath(tdir(table), "data"), s"v$v-$token")
-    // METADATA-SCALE FAST PATH (guide §5): a tiny frame already on the
-    // driver (1-row meta tables, a chat session row) does not need a
-    // Spark write job — plan+schedule+commit cost ~200-900 ms per call
-    // where parquet-mr writes the same file in ~10 ms. Strictly gated:
-    // rows must be a LocalRelation (never collects computed data),
-    // atomic types only, no sortBy, replicable partition key.
-    if (sortBy.isEmpty && LocalParquet.supports(df.schema)) {
-      localPartKey(partitionCol, df.schema).foreach { keyFn =>
-        localTinyRows(df).foreach { rows =>
-          val parts = rows.groupBy(keyFn).map { case (k, rs) =>
-            val dir = new HPath(out, s"__part=$k")
-            fs.mkdirs(dir)
-            LocalParquet.write(hconf, new HPath(dir, s"part-00000-$token.parquet"),
-              df.schema, rs)
-            k -> dir.toString
-          }
-          return (parts, df.schema.json)
-        }
-      }
+    (new HPath(new HPath(tdir(table), "data"), s"v$v-$token"), token)
+  }
+
+  /** The driver-local writer: one parquet file per partition. */
+  private def writeLocal(table: String, v: Int, schema: StructType, rows: Seq[Row],
+                         keyFn: Row => String): Map[String, String] = {
+    val (out, token) = segmentRoot(table, v)
+    rows.groupBy(keyFn).map { case (k, rs) =>
+      val dir = new HPath(out, s"__part=$k")
+      fs.mkdirs(dir)
+      LocalParquet.write(hconf, new HPath(dir, s"part-00000-$token.parquet"), schema, rs)
+      k -> dir.toString
     }
+  }
+
+  /** Write `df`'s segments for version `v`; returns partition → dir. The
+    * version's logical schema (`df.schema`) is the caller's to commit —
+    * it rides in the manifest so reads NEVER infer (or merge) schemas
+    * from data files: at 100 TB footer sniffing across segment dirs is an
+    * IO pass of its own, and schema evolution (upsert adding a column)
+    * would otherwise depend on which segment the reader lists first. */
+  private[store] def writeSegments(table: String, df: DataFrame, v: Int,
+                                   partitionCol: Option[String],
+                                   sortBy: Seq[String] = Nil): Map[String, String] = {
+    if (sortBy.isEmpty) localRows(df, partitionCol, Nil).foreach { case (rows, keyFn) =>
+      return writeLocal(table, v, df.schema, rows, keyFn)
+    }
+    val (out, _) = segmentRoot(table, v)
     val keyed = df.withColumn("__part", partExpr(partitionCol))
     // the dynamic-partition writer sorts each task by __part (unstably)
     // unless the incoming ordering already leads with it — so clustering
@@ -269,31 +320,63 @@ class DocumentStore(val spark: SparkSession, root: String) {
       else keyed.sortWithinPartitions(col("__part") +: sortBy.map(col): _*)
     graft.tools.Timing(s"ws-$table")(
       prepared.write.mode("overwrite").partitionBy("__part").parquet(out.toString))
-    val parts = fs.listStatus(out).iterator
+    fs.listStatus(out).iterator
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("__part="))
-      .map { st =>
-        val key = st.getPath.getName.stripPrefix("__part=")
-        key -> st.getPath.toString
-      }.toMap
-    (parts, df.schema.json)
+      .map(st => st.getPath.getName.stripPrefix("__part=") -> st.getPath.toString)
+      .toMap
   }
 
-  /** The committed logical schema of version `v` (minus the physical
-    * `__part` layout column). None for tables written before schema
-    * tracking — readers then fall back to parquet inference. */
-  private def schemaOf(table: String, v: Int): Option[StructType] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.schema"))
-      .map(s => StructType(DataType.fromJson(s).asInstanceOf[StructType]
-        .filterNot(_.name == "__part")))
-
-  /** Read segment dirs under version `v`'s committed schema: old files
+  /** Read segment dirs under snapshot `s`'s committed schema: old files
     * missing a later-added column yield nulls (standard parquet column
     * clipping), and no footer is ever opened for schema discovery. */
-  private def readDirs(table: String, v: Int, dirs: Seq[String]): DataFrame =
-    schemaOf(table, v) match {
-      case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
-      case None => spark.read.parquet(dirs: _*)
-    }
+  private def readDirs(s: Snapshot, dirs: Seq[String]): DataFrame =
+    spark.read.schema(s.schema).parquet(dirs: _*)
+
+  /** Rows of `s`'s partitions `keys` — an empty frame of the table's
+    * schema when none of them holds data, so a rewrite that touches no
+    * stored partition can never narrow the committed schema. */
+  private def readParts(s: Snapshot, keys: Set[String]): DataFrame = {
+    val dirs = dirsOf(s.parts.filter { case (k, _) => keys.contains(k) })
+    if (dirs.nonEmpty) readDirs(s, dirs)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), s.schema)
+  }
+
+  /** Data files of segment dirs (sidecars like `_SUCCESS` excluded). */
+  private def dataFiles(dirs: Seq[String]): Seq[FileStatus] =
+    dirs.flatMap(d => fs.listStatus(new HPath(d)).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    })
+
+  /** The victim locator: partitions of `s` holding rows whose `keys`
+    * tuple appears in `keyRows` (SQL equi-join — null key components
+    * never match). When the partition column is part of the key, the
+    * key rows' own partitions bound the set and nothing is read;
+    * otherwise a column-pruned semi-join over the partitions not in
+    * `skip` locates them. An unpartitioned table's one partition is the
+    * victim without a scan, unless `exact` asks for actual matches. */
+  private def victims(s: Snapshot, keyRows: DataFrame, keys: Seq[String],
+                      skip: Set[String] = Set.empty, exact: Boolean = false): Set[String] = {
+    val keySet = keyRows.select(keys.map(col): _*).distinct()
+    val dirs = dirsOf(s.parts -- skip)
+    if (s.partCol.isEmpty && !exact) Set("all")
+    else if (s.partCol.exists(keys.contains)) partKeys(keySet, s.partCol)
+    else if (dirs.isEmpty) Set.empty
+    else partKeys(readDirs(s, dirs).join(keySet, keys, "left_semi"), s.partCol)
+  }
+
+  /** The one rewrite-and-commit step of every rewriting mutation: read
+    * `s`'s `touched` partitions ([[readParts]]), let the caller's
+    * `rows` turn them into those partitions' new contents, write them,
+    * and commit the result over `s` — every other partition carried by
+    * manifest reference, `rows`' schema as the new committed schema. */
+  private def rewrite(table: String, s: Snapshot, touched: Set[String],
+                      sortBy: Seq[String] = Nil)(rows: DataFrame => DataFrame): Unit = {
+    val out = rows(readParts(s, touched))
+    val written = writeSegments(table, out, s.version + 1, s.partCol, sortBy)
+    commit(table, s,
+      Snapshot(s.version + 1, (s.parts -- touched) ++ written, out.schema, s.partCol))
+  }
 
   def exists(table: String): Boolean = fs.exists(new HPath(tdir(table), "_CURRENT"))
 
@@ -303,28 +386,11 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * columns at read time (the same lever compact exposes). */
   def create(table: String, df: DataFrame, partitionCol: Option[String] = None,
              sortBy: Seq[String] = Nil): Unit = {
-    val v0 = currentVersion(table); val v = v0 + 1
+    val s = snapshot(table)
     fs.mkdirs(tdir(table))
-    savePartCol(table, partitionCol)
-    val (written, schema) = writeSegments(table, df, v, partitionCol, sortBy)
-    commit(table, v0, v, written, Some(schema), pc = Some(partitionCol))
+    val written = writeSegments(table, df, s.version + 1, partitionCol, sortBy)
+    commit(table, s, Snapshot(s.version + 1, written, df.schema, partitionCol))
   }
-
-  private def savePartCol(table: String, pc: Option[String]): Unit =
-    writeString(new HPath(tdir(table), "_PARTCOL"), pc.getOrElse(""))
-
-  /** The layout effective at version `v`: the version's own partcol
-    * record, falling back to the table-level `_PARTCOL` for versions
-    * committed before per-version layouts existed. */
-  private def partColAt(table: String, v: Int): Option[String] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.partcol")) match {
-      case Some(s) => Some(s.trim).filter(_.nonEmpty)
-      case None =>
-        readString(new HPath(tdir(table), "_PARTCOL")).map(_.trim).filter(_.nonEmpty)
-    }
-
-  private def partCol(table: String): Option[String] =
-    partColAt(table, currentVersion(table))
 
   /** Change the table's partition column ONLINE — the
     * `ALTER TABLE … PARTITIONED BY` of the store: one full COW rewrite
@@ -333,25 +399,23 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * rewrite (one scan + one write is the honest price of a layout
     * change; the return is every later partition-pruned read against
     * the new column). Readers never block; time travel keeps serving
-    * old versions under THEIR OWN layout (per-version partcol), and the
-    * optional `sortBy` clusters files within the new partitions (the
-    * min/max-skipping lever, as in create). */
+    * old versions under THEIR OWN layout (each manifest records its
+    * partition column), and the optional `sortBy` clusters files within
+    * the new partitions (the min/max-skipping lever, as in create). */
   def repartitionBy(table: String, newPartitionCol: Option[String],
                     sortBy: Seq[String] = Nil): Unit = {
-    val v0 = currentVersion(table); val v = v0 + 1
-    val snap = readVersion(table, v0)
-    val (written, schema) = writeSegments(table, snap, v, newPartitionCol, sortBy)
-    commit(table, v0, v, written, Some(schema), pc = Some(newPartitionCol))
-    savePartCol(table, newPartitionCol) // legacy mirror, post-publish
+    val s = snapshot(table)
+    require(s.version >= 1, s"table '$table' does not exist")
+    val rows = readParts(s, s.parts.keySet)
+    val written = writeSegments(table, rows, s.version + 1, newPartitionCol, sortBy)
+    commit(table, s, Snapshot(s.version + 1, written, rows.schema, newPartitionCol))
   }
 
   /** Snapshot read of the current version (no partial states visible). */
-  def read(table: String): DataFrame = {
-    val v = currentVersion(table)
-    val m = manifest(table, v)
-    if (m.isEmpty) spark.emptyDataFrame
-    else readDirs(table, v, dirsOf(m))
-  }
+  def read(table: String): DataFrame = readSnapshot(snapshot(table))
+
+  private def readSnapshot(s: Snapshot): DataFrame =
+    if (s.parts.isEmpty) spark.emptyDataFrame else readDirs(s, dirsOf(s.parts))
 
   /** Time-travel read: the table exactly as of committed version `v`
     * (1-based; `version(table)` is the newest). COW segments are
@@ -362,9 +426,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
   def readVersion(table: String, v: Int): DataFrame = {
     val cur = currentVersion(table)
     require(v >= 1 && v <= cur, s"version $v out of range 1..$cur for table '$table'")
-    val m = manifest(table, v)
-    if (m.isEmpty) spark.emptyDataFrame
-    else readDirs(table, v, dirsOf(m))
+    readSnapshot(snapshot(table, v))
   }
 
   /** Committed versions whose manifests are currently retained
@@ -448,101 +510,53 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * are never even listed, let alone opened. The IVF search path reads
     * only its nprobe centroid partitions through this. */
   def readPartitions(table: String, partKeys: Seq[String]): DataFrame = {
-    val v = currentVersion(table)
-    val m = manifest(table, v)
-    val safe = partKeys.map(_.replaceAll("[^A-Za-z0-9_\\-]", "_")).toSet
-    val dirs = m.filter { case (k, _) => safe.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    if (dirs.nonEmpty) readDirs(table, v, dirs)
+    val s = snapshot(table)
     // no matching partitions: keep the TABLE's schema (a zero-column
     // emptyDataFrame would crash callers selecting result columns)
-    else if (m.nonEmpty) read(table).limit(0)
-    else spark.emptyDataFrame
+    if (s.parts.isEmpty) spark.emptyDataFrame else readParts(s, safeKeys(partKeys))
   }
 
-  /** The keyed-upsert driver-local fast path. Applies — and commits —
-    * the upsert entirely on the driver when EVERY gate holds, returning
-    * true; any failed gate returns false with nothing written and the
-    * caller runs the generic Spark path. Gates:
+  /** The keyed-upsert driver-local fast path: applies — and commits —
+    * the upsert entirely on the driver when every condition holds,
+    * returning true; otherwise false with nothing written, and the
+    * caller runs the generic Spark path. On top of the write gate
+    * ([[localRows]], with the upsert keys as match keys):
     *
-    *  - updates is a LocalRelation of ≤ 10k rows ([[localTinyRows]] —
-    *    never collects distributed data);
-    *  - all types atomic ([[LocalParquet.supports]]), no timestamp/date
-    *    KEY columns (key equality must not depend on the session's
-    *    java8API row representation);
     *  - the partition column is part of the key (victim location needs
-    *    no scan) and driver-replicable ([[localPartKey]]);
+    *    no scan);
     *  - updates' fields match the committed schema by (name, type) —
     *    schema-evolution upserts take the generic path;
-    *  - every touched partition totals ≤
-    *    `spark.graft.store.localUpsertMaxBytes` (default 8 MB) and every
+    *  - the touched partitions' files total ≤ [[LocalMaxBytes]] COMBINED
+    *    — the bound on the driver heap the merge holds — and every
     *    file's footer matches the committed layout byte-for-byte
     *    ([[LocalParquet.readIfExact]] — INT96/evolved files decline).
     *
     * Semantics mirror the generic path exactly: SQL anti-join (null
     * keys never match), update-batch duplicates all survive, commit is
     * the same CAS + sidecar refresh + `_CURRENT` swap. */
-  private def localUpsert(table: String, updates: DataFrame, keys: Seq[String],
-                          v0: Int, v: Int, m0: Map[String, String],
-                          pc: Option[String]): Boolean = {
-    if (pc.nonEmpty && !keys.contains(pc.get)) return false
-    val uSchema = updates.schema
-    if (!LocalParquet.supports(uSchema)) return false
-    if (keys.exists(k => uSchema(k).dataType == org.apache.spark.sql.types.TimestampType ||
-        uSchema(k).dataType == org.apache.spark.sql.types.DateType)) return false
-    val keyFnOpt = localPartKey(pc, uSchema)
-    if (keyFnOpt.isEmpty) return false
-    val committed: StructType =
-      if (m0.isEmpty) uSchema
-      else schemaOf(table, v0) match {
-        case Some(sc) => sc
-        case None => return false // pre-schema-tracking table: can't pin layout
-      }
-    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-    if (shape(committed) != shape(uSchema)) return false
-    val uRows = localTinyRows(updates) match {
-      case Some(rs) => rs
-      case None => return false
-    }
-    val keyFn = keyFnOpt.get
-    val updatePartKeys = uRows.map(keyFn).toSet
-    val touchedDirs = m0.filter { case (k, _) => updatePartKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    val maxBytes = spark.conf.getOption("spark.graft.store.localUpsertMaxBytes")
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0)
-      .getOrElse(8L << 20)
-    val files = touchedDirs.flatMap { d =>
-      fs.listStatus(new HPath(d)).toSeq
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-    }
-    if (files.map(_.getLen).sum > maxBytes) return false
-    val keptAll = Seq.newBuilder[Row]
-    files.foreach { st =>
-      LocalParquet.readIfExact(hconf, st.getPath, committed) match {
-        case Some(rs) => keptAll ++= rs
-        case None => return false // foreign footer layout: generic path
-      }
-    }
+  private def localUpsert(table: String, s: Snapshot, updates: DataFrame,
+                          keys: Seq[String]): Boolean = {
+    val committed = if (s.parts.isEmpty) updates.schema else s.schema
+    def shape(sc: StructType) = sc.fields.map(f => (f.name, f.dataType)).toSeq
+    if (!s.partCol.forall(keys.contains) || shape(committed) != shape(updates.schema))
+      return false
+    val (uRows, keyFn) = localRows(updates, s.partCol, keys).getOrElse(return false)
+    val touched = uRows.map(keyFn).toSet
+    val files = dataFiles(dirsOf(s.parts.filter { case (k, _) => touched.contains(k) }))
+    if (files.map(_.getLen).sum > LocalMaxBytes) return false
+    val kept = files.flatMap(st =>
+      LocalParquet.readIfExact(hconf, st.getPath, committed).getOrElse(return false))
     // SQL left_anti on the key columns: null key components never match
     val kidx = keys.map(committed.fieldIndex)
     def keyOf(r: Row): Option[Seq[Any]] = {
       val vs = kidx.map(r.get)
       if (vs.contains(null)) None else Some(vs)
     }
-    val upKeySet = uRows.flatMap(keyOf).toSet
-    val merged = keptAll.result().filter(r =>
-      keyOf(r).forall(k => !upKeySet.contains(k))) ++ uRows
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val out = new HPath(new HPath(tdir(table), "data"), s"v$v-$token")
-    val written = merged.groupBy(keyFn).map { case (k, rs) =>
-      val dir = new HPath(out, s"__part=$k")
-      fs.mkdirs(dir)
-      LocalParquet.write(hconf, new HPath(dir, s"part-00000-$token.parquet"),
-        committed, rs)
-      k -> dir.toString
-    }
-    commit(table, v0, v, (m0 -- updatePartKeys) ++ written, Some(committed.json))
+    val upKeys = uRows.flatMap(keyOf).toSet
+    val merged = kept.filter(r => keyOf(r).forall(k => !upKeys.contains(k))) ++ uRows
+    val written = writeLocal(table, s.version + 1, committed, merged, keyFn)
+    commit(table, s, Snapshot(s.version + 1, (s.parts -- touched) ++ written,
+      committed, s.partCol))
     true
   }
 
@@ -557,58 +571,28 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * also omit existing columns (filled null on the inserted rows).
     * Type changes fail loudly in the union resolution. */
   def upsert(table: String, updates: DataFrame, keys: Seq[String]): Unit = {
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    // METADATA-SCALE FAST PATH (r20, guide §5 — the r19 LocalParquet
-    // write path extended to the keyed COW upsert): a tiny LocalRelation
-    // update against kB-sized touched partitions (chat sessions,
-    // semantic caches, stream verdicts) pays ~2 Spark jobs per call on
-    // the generic path where the whole read-merge-write cycle is
-    // driver-trivial. Strictly gated (localUpsert checks every
-    // condition and declines otherwise — never collects distributed
-    // data, never guesses a footer layout); the commit protocol,
-    // manifests, and sidecar refreshes are IDENTICAL either way.
-    if (localUpsert(table, updates, keys, v0, v, m0, pc)) return
-    val updatePartKeys = updates.select(partExpr(pc).as("__part")).distinct()
-      .collect().map(_.getString(0)).toSet
+    val s = snapshot(table)
+    // METADATA-SCALE FAST PATH (guide §5): a tiny LocalRelation update
+    // against kB-sized touched partitions (chat sessions, semantic
+    // caches, stream verdicts) pays ~2 Spark jobs per call on the
+    // generic path where the whole read-merge-write cycle is
+    // driver-trivial. The commit protocol, manifests, and sidecar
+    // refreshes are IDENTICAL either way.
+    if (localUpsert(table, s, updates, keys)) return
     // A matching OLD row may live in a different partition than its
     // replacement when the update moves the partition column. If the
     // partition column is part of the key (the reference's compound keys
     // always include it: (categoryId,_id) etc.), updates' partitions are
-    // exactly the victims — no scan. Otherwise, locate victims with a
-    // column-pruned key scan over the rest of the table.
-    val touchedKeys: Set[String] =
-      if (pc.isEmpty || keys.contains(pc.get)) updatePartKeys
-      else {
-        val restDirs = m0.filter { case (k, _) => !updatePartKeys.contains(k) }
-          .values.flatMap(splitDirs).toSeq
-        if (restDirs.isEmpty) updatePartKeys
-        else updatePartKeys ++ readDirs(table, v0, restDirs)
-          .join(updates.select(keys.map(col): _*).distinct(), keys, "left_semi")
-          .select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0))
-      }
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    // the survivor side always carries the TABLE's schema — when no
-    // partition is touched it is an empty frame of that schema, so an
-    // insert-only update into fresh partitions can never narrow the
-    // committed schema for the rest of the table
-    val tableSchema: Option[StructType] =
-      if (m0.isEmpty) None
-      else schemaOf(table, v0).orElse(Some(readDirs(table, v0, dirsOf(m0)).schema))
-    val kept =
-      if (touchedDirs.nonEmpty)
-        readDirs(table, v0, touchedDirs)
-          .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      else tableSchema match {
-        case Some(sc) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sc)
-        case None => updates.limit(0)
-      }
-    val merged = kept.unionByName(updates, allowMissingColumns = true)
-    val (written, schema) = writeSegments(table, merged, v, pc)
-    commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema))
+    // exactly the victims — no scan. Otherwise the locator scans the
+    // rest of the table.
+    val own = partKeys(updates, s.partCol)
+    val touched =
+      if (s.partCol.forall(keys.contains)) own
+      else own ++ victims(s, updates, keys, skip = own)
+    if (s.parts.isEmpty) rewrite(table, s, touched)(_ => updates)
+    else rewrite(table, s, touched)(_
+      .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .unionByName(updates, allowMissingColumns = true))
   }
 
   /** Keyed upsert that ALSO drops rows matching `dropKeysDf` in the SAME
@@ -624,58 +608,28 @@ class DocumentStore(val spark: SparkSession, root: String) {
                      dropKeysDf: DataFrame, dropKeys: Seq[String],
                      dropParts: Option[Seq[String]] = None): Unit = {
     require(keys.nonEmpty && dropKeys.nonEmpty, "need key columns")
-    import graft.tools.Timing
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    val updatePartKeys = Timing(s"ud-$table-partkeys")(
-      updates.select(partExpr(pc).as("__part")).distinct()
-        .collect().map(_.getString(0)).toSet)
-    require(pc.isEmpty || keys.contains(pc.get),
+    val s = snapshot(table)
+    val own = graft.tools.Timing(s"ud-$table-partkeys")(partKeys(updates, s.partCol))
+    require(s.partCol.forall(keys.contains),
       "upsertDropping requires the partition column in the upsert key " +
         "(the reference-shape compound keys); use upsert + delete otherwise")
-    val dropSet = dropKeysDf.select(dropKeys.map(col): _*).distinct()
-    val dropPartKeys: Set[String] = dropParts match {
-      case Some(ps) => ps.map(_.replaceAll("[^A-Za-z0-9_\\-]", "_")).toSet
-      case None =>
-        if (pc.isEmpty) Set("all")
-        else if (dropKeys.contains(pc.get))
-          dropSet.select(partExpr(pc).as("__part")).distinct()
-            .collect().map(_.getString(0)).toSet
-        else readDirs(table, v0, dirsOf(m0))
-          .join(dropSet, dropKeys, "left_semi")
-          .select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0)).toSet
-    }
-    val touchedKeys = updatePartKeys ++ dropPartKeys
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    val tableSchema: Option[StructType] =
-      if (m0.isEmpty) None
-      else schemaOf(table, v0).orElse(Some(readDirs(table, v0, dirsOf(m0)).schema))
-    val kept =
-      if (touchedDirs.nonEmpty)
-        readDirs(table, v0, touchedDirs)
-          .join(dropSet, dropKeys, "left_anti")
-          .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      else tableSchema match {
-        case Some(sc) => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sc)
-        case None => updates.limit(0)
+    val touched = own ++
+      dropParts.map(safeKeys).getOrElse(victims(s, dropKeysDf, dropKeys))
+    rewrite(table, s, touched) { cur =>
+      val merged = cur
+        .join(dropKeysDf.select(dropKeys.map(col): _*).distinct(), dropKeys, "left_anti")
+        .join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")
+        .unionByName(updates, allowMissingColumns = true)
+      // cluster the rewrite by partition: without this every shuffle task
+      // sprays a sliver into every touched partition dir (tasks×partitions
+      // small files per commit — the classic partitionBy mistake the bulk
+      // build already avoids), and the NEXT mutation's read pays the
+      // file-count back with interest
+      s.partCol match {
+        case Some(c) if touched.size > 1 => merged.repartition(col(c))
+        case _ => merged
       }
-    // cluster the rewrite by partition: without this every shuffle task
-    // sprays a sliver into every touched partition dir (tasks×partitions
-    // small files per commit — the classic partitionBy mistake the bulk
-    // build already avoids), and the NEXT mutation's read pays the
-    // file-count back with interest
-    val merged0 = kept.unionByName(updates, allowMissingColumns = true)
-    val merged = pc match {
-      case Some(c) if touchedKeys.size > 1 => merged0.repartition(col(c))
-      case _ => merged0
     }
-    val (written, schema) = Timing(s"ud-$table-write")(
-      writeSegments(table, merged, v, pc))
-    Timing(s"ud-$table-commit")(
-      commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema)))
   }
 
   /** Append-only insert commit — the LSM half of the COW store: `rows`
@@ -702,9 +656,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * appended partition counts as changed and is rescanned (segment-
     * granular sidecars would make that O(batch) too; not yet needed). */
   def append(table: String, rows: DataFrame): Unit = {
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
+    val s = snapshot(table)
     // cluster the append by partition — the same discipline as
     // upsertDropping's rewrite: without it every task of `rows` sprays
     // a sliver file into every partition dir it holds rows for
@@ -712,22 +664,19 @@ class DocumentStore(val spark: SparkSession, root: String) {
     // append), and every later read/rewrite pays the file count back.
     // The un-numbered repartition is AQE-sized: a 20-doc trigger
     // coalesces to one write task, a bulk append spreads.
-    val clustered = pc match {
+    val clustered = s.partCol match {
       case Some(c) => rows.repartition(col(c))
       case None => rows
     }
-    val (written, schemaJson) = writeSegments(table, clustered, v, pc)
-    val schema: String =
-      if (m0.isEmpty) schemaJson
-      else schemaOf(table, v0) match {
-        case Some(sc) => StructType(sc.fields ++
-          rows.schema.fields.filterNot(f => sc.fieldNames.contains(f.name))).json
-        case None => schemaJson
-      }
-    val merged = written.foldLeft(m0) { case (m, (k, d)) =>
+    val written = writeSegments(table, clustered, s.version + 1, s.partCol)
+    val schema =
+      if (s.parts.isEmpty) rows.schema
+      else StructType(s.schema.fields ++
+        rows.schema.fields.filterNot(f => s.schema.fieldNames.contains(f.name)))
+    val merged = written.foldLeft(s.parts) { case (m, (k, d)) =>
       m.updated(k, m.get(k).map(old => s"$old,$d").getOrElse(d))
     }
-    commit(table, v0, v, merged, Some(schema))
+    commit(table, s, Snapshot(s.version + 1, merged, schema, s.partCol))
   }
 
   /** Partial-column merge — the `$set` half of the reference's update
@@ -742,39 +691,22 @@ class DocumentStore(val spark: SparkSession, root: String) {
                setCols: Seq[String]): Unit = {
     require(setCols.nonEmpty && setCols.intersect(keys).isEmpty,
       s"setCols must be non-empty and disjoint from keys: $setCols / $keys")
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    if (m0.isEmpty) return
-    // one row per key (a multi-valued $set batch is caller error);
-    // the join side stays un-hinted — AQE broadcasts a small batch and
+    val s = snapshot(table)
+    if (s.parts.isEmpty) return
+    val touched = victims(s, updates, keys, exact = true)
+    if (!s.parts.keys.exists(touched.contains)) return
+    // one row per key (a multi-valued $set batch is caller error); the
+    // join side stays un-hinted — AQE broadcasts a small batch and
     // shuffles a corpus-scale one
-    val u = updates.select((keys ++ setCols).map(col): _*)
-      .dropDuplicates(keys)
-      .withColumn("__matched", lit(true))
-    // victims: partitions holding a matched key. When the partition
-    // column is part of the key, updates' own partitions bound the set;
-    // otherwise locate them with a column-pruned key scan.
-    val touchedKeys: Set[String] =
-      if (pc.nonEmpty && keys.contains(pc.get))
-        updates.select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0)).toSet
-      else readDirs(table, v0, dirsOf(m0))
-        .join(updates.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        .select(partExpr(pc).as("__part")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    if (touchedDirs.isEmpty) return
-    val cur = readDirs(table, v0, touchedDirs)
-    val renamed = setCols.foldLeft(u)((d, c) => d.withColumnRenamed(c, s"__set_$c"))
-    val merged0 = cur.join(renamed, keys, "left")
-    val merged = setCols.foldLeft(merged0) { (d, c) =>
-      d.withColumn(c, when(col("__matched"), col(s"__set_$c")).otherwise(col(c)))
-    }.drop("__matched" +: setCols.map(c => s"__set_$c"): _*)
-      .select(cur.columns.map(col): _*)
-    val (written, schema) = writeSegments(table, merged, v, pc)
-    commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema))
+    val renamed = setCols.foldLeft(updates.select((keys ++ setCols).map(col): _*)
+      .dropDuplicates(keys).withColumn("__matched", lit(true))) { (d, c) =>
+      d.withColumnRenamed(c, s"__set_$c")
+    }
+    rewrite(table, s, touched) { cur =>
+      setCols.foldLeft(cur.join(renamed, keys, "left")) { (d, c) =>
+        d.withColumn(c, when(col("__matched"), col(s"__set_$c")).otherwise(col(c)))
+      }.select(cur.columns.map(col): _*)
+    }
   }
 
   /** S6/S7: delete rows matching the predicate (point or bulk). The scan
@@ -782,33 +714,21 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * the partition column via the caller-supplied hint. */
   def delete(table: String, predicate: Column,
              touchedParts: Option[Seq[String]] = None): Unit = {
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    val victims: Map[String, String] = touchedParts match {
-      case Some(ps) =>
-        val safe = ps.map(_.replaceAll("[^A-Za-z0-9_\\-]", "_")).toSet
-        m0.filter { case (k, _) => safe.contains(k) }
-      case None => m0
-    }
-    if (victims.isEmpty) return
+    val s = snapshot(table)
+    val touched = touchedParts.map(safeKeys).getOrElse(s.parts.keySet)
+    if (!s.parts.keys.exists(touched.contains)) return
     // SQL DELETE semantics: remove only rows where the predicate is TRUE.
     // A bare !predicate would also drop rows where it evaluates to NULL
     // (e.g. a NULL column in col("price") > 100) — silent data loss.
-    val remaining = readDirs(table, v0, victims.values.flatMap(splitDirs).toSeq)
-      .filter(!coalesce(predicate, lit(false)))
-    val (written, schema) = writeSegments(table, remaining, v, pc)
-    commit(table, v0, v, (m0 -- victims.keySet) ++ written, Some(schema))
+    rewrite(table, s, touched)(_.filter(!coalesce(predicate, lit(false))))
   }
 
   /** Keyed bulk delete — the anti-join form of S6/S7 for key sets too
     * large (or too compound) for a predicate literal: rows whose key
-    * tuple appears in `keysDf` are removed. Victim location mirrors
-    * [[upsert]]: when the partition column is part of the key the key
-    * frame's own partitions bound the victims; otherwise a column-pruned
-    * key scan locates them. Only victim partitions are read and
-    * rewritten (anti-joined against the key frame), so the keys never
-    * visit the driver — a retention purge of millions of keys (the CDC
+    * tuple appears in `keysDf` are removed. Victims come from the
+    * locator ([[victims]]), and only they are read and rewritten
+    * (anti-joined against the key frame), so the keys never visit the
+    * driver — a retention purge of millions of keys (the CDC
     * delete-batch shape) stays distributed end-to-end. Compound keys are
     * first-class: the reference's own mutation key is
     * (Type, SessionId, Id) (MongoDbService.cs:573-575). Null key values
@@ -816,27 +736,12 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * null-is-not-deleted rule. */
   def delete(table: String, keysDf: DataFrame, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "keyed delete needs key columns")
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    if (m0.isEmpty) return
-    val keySet = keysDf.select(keys.map(col): _*).distinct()
-    val touchedKeys: Set[String] =
-      if (pc.isEmpty) Set("all")
-      else if (keys.contains(pc.get))
-        keySet.select(partExpr(pc).as("__part")).distinct()
-          .collect().map(_.getString(0)).toSet
-      else readDirs(table, v0, dirsOf(m0))
-        .join(keySet, keys, "left_semi")
-        .select(partExpr(pc).as("__part")).distinct()
-        .collect().map(_.getString(0)).toSet
-    val touchedDirs = m0.filter { case (k, _) => touchedKeys.contains(k) }
-      .values.flatMap(splitDirs).toSeq
-    if (touchedDirs.isEmpty) return
-    val remaining = readDirs(table, v0, touchedDirs)
-      .join(keySet, keys, "left_anti")
-    val (written, schema) = writeSegments(table, remaining, v, pc)
-    commit(table, v0, v, (m0 -- touchedKeys) ++ written, Some(schema))
+    val s = snapshot(table)
+    if (s.parts.isEmpty) return
+    val touched = victims(s, keysDf, keys)
+    if (!s.parts.keys.exists(touched.contains)) return
+    rewrite(table, s, touched)(
+      _.join(keysDf.select(keys.map(col): _*).distinct(), keys, "left_anti"))
   }
 
   def version(table: String): Int = currentVersion(table)
@@ -846,16 +751,16 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * COW locality: a mutation that touches partition P must leave every
     * other partition's segment dir ENTRY unchanged (carried by manifest
     * reference, bytes never rewritten). */
-  def layout(table: String): Map[String, String] =
-    manifest(table, currentVersion(table))
+  def layout(table: String): Map[String, String] = snapshot(table).parts
 
   /** Per-partition physical layout: (partition key, file count, bytes).
     * Metadata-only (one listing per partition dir, no data read) — the
     * health check an operator runs before deciding to [[compact]]. */
-  def fileStats(table: String): Seq[(String, Int, Long)] =
-    manifest(table, currentVersion(table)).toSeq.sortBy(_._1).map { case (k, dirs) =>
-      val files = splitDirs(dirs).flatMap(d => fs.listStatus(new HPath(d))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_")))
+  def fileStats(table: String): Seq[(String, Int, Long)] = fileStatsOf(snapshot(table))
+
+  private def fileStatsOf(s: Snapshot): Seq[(String, Int, Long)] =
+    s.parts.toSeq.sortBy(_._1).map { case (k, dirs) =>
+      val files = dataFiles(splitDirs(dirs))
       (k, files.length, files.map(_.getLen).sum)
     }
 
@@ -891,28 +796,24 @@ class DocumentStore(val spark: SparkSession, root: String) {
   def compact(table: String, maxFileBytes: Long = 128L << 20,
               sortBy: Seq[String] = Nil): Boolean = {
     require(maxFileBytes > 0, s"bad maxFileBytes $maxFileBytes")
-    val pc = partCol(table)
-    val v0 = currentVersion(table); val v = v0 + 1
-    val m0 = manifest(table, v0)
-    if (m0.isEmpty) return false
+    val s = snapshot(table)
     def idealFiles(bytes: Long): Int =
       math.max(1, math.ceil(bytes.toDouble / maxFileBytes).toInt)
-    val victims = fileStats(table).filter { case (_, n, bytes) => n > idealFiles(bytes) }
-    if (victims.isEmpty) return false
-    val slotsByPart = victims.map { case (k, _, bytes) => k -> idealFiles(bytes) }.toMap
-    val victimDirs = victims.flatMap { case (k, _, _) => splitDirs(m0(k)) }
-    val df0 = readDirs(table, v0, victimDirs)
+    val slotsByPart = fileStatsOf(s).collect {
+      case (k, n, bytes) if n > idealFiles(bytes) => k -> idealFiles(bytes)
+    }.toMap
+    if (slotsByPart.isEmpty) return false
     import spark.implicits._
     val slotsDf = slotsByPart.toSeq.toDF("__part", "__slots")
-    val salted = df0.withColumn("__part", partExpr(pc))
-      .join(broadcast(slotsDf), Seq("__part"))
-      .withColumn("__slot", pmod(xxhash64(struct(df0.columns.map(col): _*)), col("__slots")))
-      .repartition(slotsByPart.values.sum, col("__part"), col("__slot"))
-      .drop("__part", "__slots", "__slot")
     // clustering (sortBy) happens inside writeSegments, where the write
     // task's (__part, sortBy...) sort survives the dynamic-partition writer
-    val (written, schema) = writeSegments(table, salted, v, pc, sortBy)
-    commit(table, v0, v, (m0 -- slotsByPart.keySet) ++ written, Some(schema))
+    rewrite(table, s, slotsByPart.keySet, sortBy) { df0 =>
+      df0.withColumn("__part", partExpr(s.partCol))
+        .join(broadcast(slotsDf), Seq("__part"))
+        .withColumn("__slot", pmod(xxhash64(struct(df0.columns.map(col): _*)), col("__slots")))
+        .repartition(slotsByPart.values.sum, col("__part"), col("__slot"))
+        .drop("__part", "__slots", "__slot")
+    }
     true
   }
 
@@ -923,11 +824,10 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * keyed to the version they describe: any later mutation makes them
     * silently unused (never wrong), until the next analyze. */
   def analyze(table: String, cols: Seq[String]): Unit = {
-    val v = currentVersion(table)
-    val m = manifest(table, v)
-    if (m.isEmpty || cols.isEmpty) return
-    writeString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.stats"),
-      statsLines(table, v, dirsOf(m), cols).mkString("\n"))
+    val s = snapshot(table)
+    if (s.parts.isEmpty || cols.isEmpty) return
+    writeString(vfile(table, s"v${s.version}.stats"),
+      statsLines(s, dirsOf(s.parts), cols).mkString("\n"))
   }
 
   /** One column-pruned min/max scan over `dirs`, one stats line per
@@ -935,16 +835,14 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * ([[readDirs]]) — parquet footer inference on an evolved table
     * would sample an arbitrary segment's schema and either throw or
     * nondeterministically skip stats for old partitions. */
-  private def statsLines(table: String, v: Int, dirs: Seq[String],
-                         cols: Seq[String]): Seq[String] = {
-    val pc = partCol(table)
-    val df = readDirs(table, v, dirs)
+  private def statsLines(s: Snapshot, dirs: Seq[String], cols: Seq[String]): Seq[String] = {
+    val df = readDirs(s, dirs)
     val present = cols.filter(df.columns.contains)
     if (present.isEmpty) return Seq.empty
     val aggs = present.flatMap(c => Seq(
       min(col(c)).cast("double").as(s"__min_$c"),
       max(col(c)).cast("double").as(s"__max_$c")))
-    df.groupBy(partExpr(pc).as("__part"))
+    df.groupBy(partExpr(s.partCol).as("__part"))
       .agg(aggs.head, aggs.tail: _*)
       .collect().toSeq
       .flatMap { r =>
@@ -965,26 +863,24 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * partitions are scanned (column-pruned), so refresh cost tracks the
     * mutation, not the table size. Runs before the `_CURRENT` swap, so
     * a version is never visible without its stats. */
-  private def refreshStats(table: String, base: Int, v: Int,
-                           m: Map[String, String]): Unit = {
-    val baseStats = readStats(table, base).getOrElse(return)
+  private def refreshStats(table: String, base: Snapshot, next: Snapshot): Unit = {
+    val baseStats = readStats(table, base.version).getOrElse(return)
     val cols = baseStats.keys.map(_._2).toSeq.distinct.sorted
     if (cols.isEmpty) return
-    val mBase = manifest(table, base)
-    val (carried, changed) = m.partition { case (k, d) => mBase.get(k).contains(d) }
+    val (carried, changed) = next.parts.partition { case (k, d) => base.parts.get(k).contains(d) }
     val carriedLines = for {
       k <- carried.keys.toSeq.sorted; c <- cols
       (lo, hi) <- baseStats.get((k, c))
     } yield s"$k\t$c\t$lo\t$hi"
     val changedLines =
       if (changed.isEmpty) Seq.empty
-      else statsLines(table, v, changed.values.flatMap(splitDirs).toSeq, cols)
-    writeString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.stats"),
+      else statsLines(next, dirsOf(changed), cols)
+    writeString(vfile(table, s"v${next.version}.stats"),
       (carriedLines ++ changedLines).mkString("\n"))
   }
 
   private def readStats(table: String, v: Int): Option[Map[(String, String), (Double, Double)]] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.stats")).map { body =>
+    readString(vfile(table, s"v$v.stats")).map { body =>
       body.split("\n").iterator.filter(_.nonEmpty).map { l =>
         val Array(p, c, lo, hi) = l.split("\t", 4)
         (p, c) -> (lo.toDouble, hi.toDouble)
@@ -998,10 +894,10 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * version, all-null column) keeps the partition, so the answer can
     * only over-read, never drop rows. */
   def statsPrunedParts(table: String, column: String, lo: Any, hi: Any): (Seq[String], Int) = {
-    val v = currentVersion(table)
-    val m = manifest(table, v)
+    val s = snapshot(table)
+    val m = s.parts
     val l = lo.toString.toDouble; val h = hi.toString.toDouble
-    readStats(table, v) match {
+    readStats(table, s.version) match {
       case None => (m.keys.toSeq.sorted, m.size)
       case Some(st) =>
         // stats are stored as doubles: a long beyond 2^53 rounds, so the
@@ -1067,14 +963,12 @@ class DocumentStore(val spark: SparkSession, root: String) {
     require(column.matches("[A-Za-z0-9_]+"), s"unsafe column name '$column'")
     require(expectedItemsPerPartition > 0 && fpp > 0 && fpp < 1,
       s"bad bloom params ($expectedItemsPerPartition, $fpp)")
-    val v = currentVersion(table)
-    val m = manifest(table, v)
-    if (m.isEmpty) return
+    val s = snapshot(table)
+    if (s.parts.isEmpty) return
     val numBits = sketch.BloomFilter.create(expectedItemsPerPartition, fpp).bitSize()
-    val lines = bloomLines(table, v, dirsOf(m), column,
-      expectedItemsPerPartition, numBits)
+    val lines = bloomLines(s, dirsOf(s.parts), column, expectedItemsPerPartition, numBits)
     if (lines.isEmpty) return // column absent from the committed schema
-    writeString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.bloom.$column"),
+    writeString(vfile(table, s"v${s.version}.bloom.$column"),
       (s"__meta\t$expectedItemsPerPartition\t$numBits" +: lines).mkString("\n"))
   }
 
@@ -1082,19 +976,18 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * of `column`, via Spark's own BloomFilterAggregate (the runtime-
     * filter kernel) — partial sketches merge map-side, the shuffle
     * carries bit arrays, not keys. */
-  private def bloomLines(table: String, v: Int, dirs: Seq[String], column: String,
+  private def bloomLines(s: Snapshot, dirs: Seq[String], column: String,
                          items: Long, numBits: Long): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val pc = partCol(table)
-    val df = readDirs(table, v, dirs)
+    val df = readDirs(s, dirs)
     if (!df.columns.contains(column)) return Seq.empty
     val child = org.apache.spark.sql.GraftSqlBridge.expression(
       xxhash64(col(column).cast("string")))
     val agg = org.apache.spark.sql.GraftSqlBridge.column(
       new BloomFilterAggregate(child, CatLit(items), CatLit(numBits))
         .toAggregateExpression())
-    df.groupBy(partExpr(pc).as("__part")).agg(agg.as("__bloom"))
+    df.groupBy(partExpr(s.partCol).as("__part")).agg(agg.as("__bloom"))
       .collect().toSeq.flatMap { r =>
         Option(r.get(1)).map { b =>
           val b64 = java.util.Base64.getEncoder
@@ -1106,7 +999,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
 
   private def readBlooms(table: String, v: Int,
                          column: String): Option[Map[String, sketch.BloomFilter]] =
-    readString(new HPath(new HPath(tdir(table), "_versions"), s"v$v.bloom.$column"))
+    readString(vfile(table, s"v$v.bloom.$column"))
       .map { body =>
         body.split("\n").iterator
           .filter(l => l.nonEmpty && !l.startsWith("__meta"))
@@ -1121,16 +1014,13 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * [[refreshStats]]: partitions whose segment dir is carried keep
     * their sketch lines verbatim; only rewritten partitions are
     * rescanned, so refresh cost tracks the mutation, not the table. */
-  private def refreshBlooms(table: String, base: Int, v: Int,
-                            m: Map[String, String]): Unit = {
+  private def refreshBlooms(table: String, base: Snapshot, next: Snapshot): Unit = {
     val vd = new HPath(tdir(table), "_versions")
-    if (!fs.exists(vd)) return
-    val prefix = s"v$base.bloom."
+    val prefix = s"v${base.version}.bloom."
     val sidecars = fs.listStatus(vd).iterator.map(_.getPath.getName)
       .filter(_.startsWith(prefix)).toSeq
     if (sidecars.isEmpty) return
-    val mBase = manifest(table, base)
-    val (carried, changed) = m.partition { case (k, d) => mBase.get(k).contains(d) }
+    val (carried, changed) = next.parts.partition { case (k, d) => base.parts.get(k).contains(d) }
     for {
       f <- sidecars
       body <- readString(new HPath(vd, f))
@@ -1145,9 +1035,8 @@ class DocumentStore(val spark: SparkSession, root: String) {
       }
       val changedLines =
         if (changed.isEmpty) Seq.empty
-        else bloomLines(table, v, changed.values.flatMap(splitDirs).toSeq,
-          column, itemsS.toLong, bitsS.toLong)
-      writeString(new HPath(vd, s"v$v.bloom.$column"),
+        else bloomLines(next, dirsOf(changed), column, itemsS.toLong, bitsS.toLong)
+      writeString(new HPath(vd, s"v${next.version}.bloom.$column"),
         (meta +: (carriedLines ++ changedLines)).mkString("\n"))
     }
   }
@@ -1164,9 +1053,9 @@ class DocumentStore(val spark: SparkSession, root: String) {
                        values: Seq[Any]): (Seq[String], Int) = {
     require(values.nonEmpty, "need at least one lookup value")
     import org.apache.spark.sql.catalyst.expressions.{XxHash64, Literal => CatLit}
-    val v = currentVersion(table)
-    val m = manifest(table, v)
-    readBlooms(table, v, column) match {
+    val s = snapshot(table)
+    val m = s.parts
+    readBlooms(table, s.version, column) match {
       case None => (m.keys.toSeq.sorted, m.size)
       case Some(bfs) =>
         val hashes = values.map { x =>
@@ -1190,14 +1079,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * no sidecar exists (still filtered, still correct). */
   def readByKeys(table: String, column: String, values: Seq[Any]): DataFrame = {
     val (kept, _) = bloomPrunedParts(table, column, values)
-    val base =
-      if (kept.nonEmpty) readPartitions(table, kept)
-      else schemaOf(table, currentVersion(table)) match {
-        case Some(sc) => spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], sc)
-        case None => read(table).filter(lit(false))
-      }
-    base.filter(col(column).isin(values: _*))
+    readParts(snapshot(table), kept.toSet).filter(col(column).isin(values: _*))
   }
 
   /** Garbage-collect segment directories referenced only by manifests
@@ -1220,7 +1102,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
     // hold them). Clearing them here — and only here — is what unblocks
     // the next committer without commit itself ever guessing.
     fs.listStatus(vd).iterator.map(_.getPath.getName).foreach { name =>
-      val ver = "^v(\\d+)\\.(manifest|schema|stats|partcol|claim|bloom\\..+)$".r
+      val ver = "^v(\\d+)\\.(manifest|stats|claim|bloom\\..+)$".r
       name match {
         case ver(n, _) if n.toInt > cur => fs.delete(new HPath(vd, name), true)
         case _ => if (name.startsWith(".claim-")) fs.delete(new HPath(vd, name), true)
@@ -1232,8 +1114,8 @@ class DocumentStore(val spark: SparkSession, root: String) {
         s.stripPrefix("v").stripSuffix(".manifest").toInt }
       .toSeq.sorted
     val (drop, keep) = all.partition(v => v <= cur - keepVersions)
-    val live = keep.flatMap(v => dirsOf(manifest(table, v))).toSet
-    val dead = drop.flatMap(v => dirsOf(manifest(table, v))).toSet -- live
+    val live = keep.flatMap(v => dirsOf(snapshot(table, v).parts)).toSet
+    val dead = drop.flatMap(v => dirsOf(snapshot(table, v).parts)).toSet -- live
     dead.foreach { dir =>
       val p = new HPath(dir)
       val dfs = p.getFileSystem(hconf)
@@ -1243,10 +1125,8 @@ class DocumentStore(val spark: SparkSession, root: String) {
       .filter(_.matches("^v\\d+\\.bloom\\..+$")).toSeq
     drop.foreach { v =>
       fs.delete(new HPath(vd, s"v$v.manifest"), false)
-      fs.delete(new HPath(vd, s"v$v.stats"), false)  // sidecars ride their
-      fs.delete(new HPath(vd, s"v$v.schema"), false) // version's lifetime
-      fs.delete(new HPath(vd, s"v$v.partcol"), false)
-      fs.delete(new HPath(vd, s"v$v.claim"), true)   // epoch-claim marker
+      fs.delete(new HPath(vd, s"v$v.stats"), false) // sidecars ride their
+      fs.delete(new HPath(vd, s"v$v.claim"), true)  // version's lifetime
       bloomFiles.filter(_.startsWith(s"v$v.bloom."))
         .foreach(f => fs.delete(new HPath(vd, f), false))
     }
@@ -1265,4 +1145,24 @@ class DocumentStore(val spark: SparkSession, root: String) {
       }
     }
   }
+}
+
+object DocumentStore {
+
+  /** One committed version: its number, partition → segment dir(s), the
+    * logical schema its segments are read under, and its partition
+    * column — exactly what `v<N>.manifest` records. */
+  private[store] final case class Snapshot(version: Int, parts: Map[String, String],
+                                           schema: StructType, partCol: Option[String])
+
+  // manifest record keys; partition keys are directory-name-safe
+  // ([A-Za-z0-9_-]), so a '#'-prefixed key can never collide with one
+  private val SchemaKey = "#schema"
+  private val PartColKey = "#partcol"
+
+  /** Combined file bytes of the touched partitions above which a keyed
+    * upsert declines the driver-local path. It bounds the driver heap the
+    * local merge holds (every kept row is materialized there), so it is
+    * a constant, not a knob. */
+  private[store] val LocalMaxBytes: Long = 8L << 20
 }

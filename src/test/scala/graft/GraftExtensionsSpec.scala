@@ -39,6 +39,21 @@ class GraftExtensionsSpec extends AnyFunSuite {
         s.sql("SELECT cosine_sim(array(CAST(1.0 AS FLOAT)))").head()
       }
       assert(e.getMessage.contains("cosine_sim"))
+      // the quantized and PQ kernels install through the same path
+      for (f <- Seq("vec_dot", "cosine_sim", "l2_dist_sq", "l2_norm", "vec_quantize_i8",
+          "cosine_sim_i8", "vec_dequantize_i8", "pq_adc_dot"))
+        assert(s.catalog.functionExists(f), s"$f not installed by GraftExtensions")
+      val q = s.sql(
+        """SELECT cosine_sim_i8(vec_quantize_i8(v).q, vec_quantize_i8(v).q) AS c,
+          |       vec_dequantize_i8(vec_quantize_i8(v).q, vec_quantize_i8(v).scale) AS dq,
+          |       pq_adc_dot(unhex('0001'), array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT),
+          |                                       CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS adc
+          |FROM (SELECT array(CAST(3.0 AS FLOAT), CAST(-1.0 AS FLOAT)) AS v)
+          |""".stripMargin).head()
+      assert(math.abs(q.getDouble(0) - 1.0) < 1e-12)
+      val dq = q.getSeq[Float](1)
+      assert(math.abs(dq(0) - 3.0) < 1e-5 && math.abs(dq(1) + 1.0) < 3.0 / 127)
+      assert(q.getDouble(2) == 5.0) // lut[0*2 + 0] + lut[1*2 + 1]
     } finally {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -368,4 +368,17 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(hits == Set(4L, 5L, 6L, 11L, 12L, 13L))
   }
+
+  test("meta memo: a stale put never evicts a newer epoch") {
+    val path = "memo-epoch-spec"
+    val m1 = InvertedIndex.Meta(1, 1L, 1L, 1L, "v1")
+    val m2 = InvertedIndex.Meta(2, 2L, 2L, 2L, "v2")
+    InvertedIndex.remember(path, 2, m2)
+    // a slow reader of epoch 1 lands its put after epoch 2's
+    InvertedIndex.remember(path, 1, m1)
+    assert(InvertedIndex.memoized(path, 2).contains(m2))
+    // a newer epoch still sweeps the older ones
+    InvertedIndex.remember(path, 3, m2.copy(tok = "v3"))
+    assert(InvertedIndex.memoized(path, 1).isEmpty && InvertedIndex.memoized(path, 2).isEmpty)
+  }
 }

@@ -82,9 +82,9 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
     val s = freshStore()
     s.create("t", Seq((1L, "pa", "x"), (2L, "pb", "y"), (3L, "pc", "z"))
       .toDF("id", "part", "v"), partitionCol = Some("part"))
-    val m1 = s.manifest("t", 1)
+    val m1 = s.snapshot("t", 1).parts
     s.delete("t", Seq((2L, "pb")).toDF("id", "part"), Seq("part", "id"))
-    val m2 = s.manifest("t", 2)
+    val m2 = s.snapshot("t", 2).parts
     // untouched partitions carried by manifest reference, not rewritten
     assert(m2("pa") == m1("pa") && m2("pc") == m1("pc"))
     assert(m2.get("pb") != m1.get("pb"))
@@ -263,9 +263,9 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
     val df = (1L to 40L).map(i => (i, s"p${i % 2}", s"q${i % 4}")).toDF("id", "pa", "pb")
     s.create("t", df, partitionCol = Some("pa"))
     s.repartitionBy("t", Some("pb"))
-    val before = s.manifest("t", 2) // new-layout manifest (private[store])
+    val before = s.snapshot("t", 2).parts // new-layout manifest (private[store])
     s.upsert("t", Seq((2L, "p0", "q2")).toDF("id", "pa", "pb"), keys = Seq("id"))
-    val after = s.manifest("t", 3)
+    val after = s.snapshot("t", 3).parts
     // only the touched NEW-column partition (q2) was rewritten
     assert(after.keySet == before.keySet)
     assert(after.filter { case (k, d) => before(k) != d }.keySet == Set("q2"))

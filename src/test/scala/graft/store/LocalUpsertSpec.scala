@@ -1,7 +1,8 @@
 package graft.store
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 
@@ -10,7 +11,8 @@ import graft.SparkSuite
   * anti-join semantics, null keys never matching, batch duplicates
   * surviving), same COW locality (untouched partitions carried by
   * manifest reference), and a clean fall-back whenever any gate fails
-  * (schema evolution, distributed updates, oversized partitions). */
+  * (schema evolution, distributed updates, oversized partitions,
+  * floating-point keys). */
 class LocalUpsertSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
@@ -78,19 +80,43 @@ class LocalUpsertSpec extends AnyFunSuite with SparkSuite {
 
   test("oversized touched partitions decline the fast path (byte gate)") {
     val store = newStore()
-    store.create("t", (1L to 500L).map(i => ("p", s"id$i", i)).toDF("sid", "id", "v"),
-      partitionCol = Some("sid"))
-    spark.conf.set("spark.graft.store.localUpsertMaxBytes", "64")
-    try {
-      store.upsert("t", Seq(("p", "id1", 100L)).toDF("sid", "id", "v"),
-        keys = Seq("sid", "id"))
-      // merged correctly through the generic path (Spark writer naming)
-      assert(store.read("t").count() == 500)
-      assert(store.read("t").filter(col("id") === "id1")
-        .head().getLong(2) == 100L)
-      val f = localFiles(store, "t")
-      assert(f.exists(!_.matches("part-00000-[0-9a-f]{8}\\.parquet")), f.toString)
-    } finally spark.conf.unset("spark.graft.store.localUpsertMaxBytes")
+    // incompressible ~1 KB payloads, enough rows for the partition's
+    // bytes to land just over the cap
+    val rnd = new scala.util.Random(7)
+    val n = (DocumentStore.LocalMaxBytes / 1000).toInt + 500
+    store.create("t", (1 to n).map(i => ("p", s"id$i", rnd.alphanumeric.take(1000).mkString))
+      .toDF("sid", "id", "payload"), partitionCol = Some("sid"))
+    val bytes = store.fileStats("t").map(_._3).sum
+    assert(bytes > DocumentStore.LocalMaxBytes && bytes < DocumentStore.LocalMaxBytes * 5 / 4,
+      s"partition bytes $bytes not just over the cap")
+    store.upsert("t", Seq(("p", "id1", "new")).toDF("sid", "id", "payload"),
+      keys = Seq("sid", "id"))
+    // merged correctly through the generic path (Spark writer naming)
+    assert(store.read("t").count() == n)
+    assert(store.read("t").filter(col("id") === "id1").head().getString(2) == "new")
+    val f = localFiles(store, "t")
+    assert(f.exists(!_.matches("part-00000-[0-9a-f]{8}\\.parquet")), f.toString)
+  }
+
+  test("double keys: NaN, -0.0 and 0.0 match exactly as in the distributed upsert") {
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(Seq(StructField("sid", StringType),
+      StructField("k", DoubleType), StructField("v", LongType)))
+    val stored = Seq(Row("s", Double.NaN, 1L), Row("s", -0.0, 2L), Row("s", 0.0, 3L),
+      Row("s", 1.5, 4L))
+    val upd = Seq(Row("s", Double.NaN, 10L), Row("s", 0.0, 30L))
+    def upserted(updates: DataFrame): Seq[(String, Long)] = {
+      val store = newStore()
+      store.create("t", spark.createDataFrame(stored.asJava, schema), partitionCol = Some("sid"))
+      store.upsert("t", updates, keys = Seq("sid", "k"))
+      // keys compared as strings: NaN != NaN under tuple equality
+      store.read("t").collect().map(r => (r.getDouble(1).toString, r.getLong(2))).toSeq.sortBy(_._2)
+    }
+    val local = upserted(spark.createDataFrame(upd.asJava, schema))
+    val distributed = upserted(spark.createDataFrame(spark.sparkContext.parallelize(upd), schema))
+    assert(local == distributed)
+    // Spark join keys normalize NaN = NaN and -0.0 = 0.0
+    assert(distributed == Seq(("1.5", 4L), ("NaN", 10L), ("0.0", 30L)))
   }
 
   test("fast path composes with time travel, changeFeed and vacuum") {

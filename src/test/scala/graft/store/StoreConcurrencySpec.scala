@@ -29,22 +29,21 @@ class StoreConcurrencySpec extends AnyFunSuite with SparkSuite {
     val (s, root) = freshStore()
     s.create("t", Seq((1L, "a"), (2L, "b")).toDF("id", "x"))
     // writer B reads base = 1 and prepares its segments...
-    val base = s.version("t")
-    val (written, schema) = s.writeSegments("t",
-      Seq((3L, "stale")).toDF("id", "x"), base + 1, None)
+    val base = s.snapshot("t")
+    val written = s.writeSegments("t",
+      Seq((3L, "stale")).toDF("id", "x"), base.version + 1, None)
     // ...but writer A commits epoch 2 first
     s.upsert("t", Seq((2L, "B2"), (3L, "fresh")).toDF("id", "x"), Seq("id"))
     assert(s.version("t") == 2)
     // B's commit must fail loudly, not silently drop A's epoch
-    val carried = s.manifest("t", base)
     intercept[java.util.ConcurrentModificationException] {
-      s.commit("t", base, base + 1, carried ++ written, Some(schema))
+      s.commit("t", base, base.copy(version = base.version + 1, parts = base.parts ++ written))
     }
     // A's mutation survives untouched; B's rows never appear
     assert(s.read("t").orderBy("id").as[(Long, String)].collect().toSeq ==
       Seq((1L, "a"), (2L, "B2"), (3L, "fresh")))
     // B's orphan segment dirs were deleted by the failed commit itself
-    val live = s.manifest("t", 1).values.toSet ++ s.manifest("t", 2).values.toSet
+    val live = s.snapshot("t", 1).parts.values.toSet ++ s.snapshot("t", 2).parts.values.toSet
     written.values.foreach(dir => assert(!new java.io.File(new java.net.URI(dir)).exists
       || live.contains(dir), s"orphan segment survived: $dir"))
   }

@@ -147,18 +147,19 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String, Long)]
     val store = new DocumentStore(spark, Files.createTempDirectory("graft-cdc").toString)
-    val q = EventStream.cdcApplySink(
-      in.toDF().toDF("id", "payload", "op", "seq"), store, "t",
-      keys = Seq("id"), opCol = "op", seqCol = "seq",
-      checkpoint = Files.createTempDirectory("graft-cdc-ckpt").toString)
     // ONE batch containing: plain insert; insert superseded by delete;
-    // delete superseded by re-insert; update chain
+    // delete superseded by re-insert; update chain. Added BEFORE the
+    // AvailableNow query starts: it fixes its end offset when its stream
+    // thread initializes, so data added after start() may be missed.
     in.addData(
       (1L, "a", "upsert", 1L),
       (2L, "b", "upsert", 2L), (2L, "b2", "delete", 3L),
       (3L, "c", "delete", 4L), (3L, "c2", "upsert", 5L),
       (4L, "d", "upsert", 6L), (4L, "d2", "upsert", 7L))
-    q.awaitTermination()
+    EventStream.cdcApplySink(
+      in.toDF().toDF("id", "payload", "op", "seq"), store, "t",
+      keys = Seq("id"), opCol = "op", seqCol = "seq",
+      checkpoint = Files.createTempDirectory("graft-cdc-ckpt").toString).awaitTermination()
     val got = store.read("t").select("id", "payload")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "a", 3L -> "c2", 4L -> "d2"))
