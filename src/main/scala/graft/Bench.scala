@@ -65,24 +65,18 @@ object Bench {
     // per-pass swept count is published in the JSON — nonzero means some
     // query is not releasing its blocks and neighbors' timings would
     // have been contaminated without the sweep.
-    val sc = spark.sparkContext
     var sweptInPass = 0
     var prevQuery = "warmup"
     // failures surface as -1 in the JSON, never as a fast-looking timing
     def once(name: String): Double = {
       // drop cached intermediates so the second run measures the query's
       // real compute, not a warm cache (q42 caches its minhash base)
-      spark.catalog.clearCache()
-      val leaked = sc.getPersistentRDDs
-      sweptInPass += leaked.size
+      // and the previous query's scratch dirs (result already counted)
+      val leaked = graft.store.Scratch.reset(spark)
+      sweptInPass += leaked
       // attribution for the tripwire: WHICH query left the blocks
-      if (leaked.nonEmpty)
-        System.err.println(
-          s"[bench] swept ${leaked.size} RDD(s) left by $prevQuery")
-      leaked.values.foreach(_.unpersist(blocking = false))
-      // previous query's scratch dirs (result already counted) — final
-      // operator outputs legitimately live here, so nonzero is normal
-      graft.store.Scratch.sweep()
+      if (leaked > 0)
+        System.err.println(s"[bench] swept $leaked RDD(s) left by $prevQuery")
       prevQuery = name
       val t0 = System.nanoTime()
       try { qmap(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
@@ -130,9 +124,14 @@ object Bench {
       swept += sweptInPass
       heaps += heapUsedMb
       if (passes.length >= minPasses) {
+        val t0 = passTotal(passes(passes.length - 3))
         val t1 = passTotal(passes(passes.length - 2))
         val t2 = passTotal(passes.last)
-        converged = math.abs(t1 - t2) <= 0.05 * math.max(t1, t2)
+        // false-plateau guard: two passes that agree while the totals are
+        // still falling (pass N more than 10% below pass N-2) are a warm-in
+        // step, not a steady state
+        converged = math.abs(t1 - t2) <= 0.05 * math.max(t1, t2) &&
+          t2 >= 0.9 * t0
       }
     }
     // publish from the agreeing pair: per query, the faster of the last

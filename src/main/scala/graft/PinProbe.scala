@@ -75,9 +75,7 @@ object PinProbe {
     def once(name: String, naive: Boolean): Double = {
       if (naive) sys.props.put("graft.pin.disable", "true")
       else sys.props.remove("graft.pin.disable")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.store.Scratch.reset(spark)
       val t0 = System.nanoTime()
       qmap(name)(spark, outDir).count()
       (System.nanoTime() - t0) / 1e9

@@ -28,10 +28,8 @@ object ScaleRows {
     val names = qmap.keys.toSeq.sorted
       .filter(n => prefixes.exists(n.startsWith))
     require(names.nonEmpty, s"no registered query matches $prefixes")
-    val sc = spark.sparkContext
     def once(name: String, dir: String): Double = {
-      spark.catalog.clearCache()
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.store.Scratch.reset(spark)
       val t0 = System.nanoTime()
       qmap(name)(spark, dir).count()
       (System.nanoTime() - t0) / 1e9

@@ -335,11 +335,7 @@ object ScaleSmoke {
     val picked = names.filter(n => only.forall(_.exists(n.startsWith)))
     qmap("q01_agg_pricing")(spark, outDir).count() // warm-up: codegen/JIT
     val results = picked.map { name =>
-      spark.catalog.clearCache()
-      // sweep leaked checkpoint blocks between queries (the Bench/Verify
-      // pollution tripwire discipline)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.store.Scratch.reset(spark)
       val t0 = System.nanoTime()
       val rows = try qmap(name)(spark, outDir).count()
       catch { case e: Throwable =>
@@ -367,7 +363,7 @@ object ScaleSmoke {
       val ivf = IvfIndex.train(e, "embedding", "vec_id", numLists = 16, iters = 3,
         multiAssign = 4)
       val store = new graft.store.DocumentStore(spark,
-        java.nio.file.Files.createTempDirectory("graft-smoke-ivfpq").toString)
+        graft.store.Scratch.dir(spark, "smoke-ivfpq"))
       val idx = new IvfPq(ivf, cb, store, "ivfpq", "embedding", "vec_id")
       idx.build(e)
       val t0 = System.nanoTime()

@@ -13,7 +13,7 @@ object TimeQuery {
     val qmap = SparkEntry.queries
     qmap("q01_agg_pricing")(spark, sfDir).count() // warm-up: codegen/JIT
     val results = names.split(",").toSeq.map { n =>
-      spark.catalog.clearCache()
+      graft.store.Scratch.reset(spark)
       val t0 = System.nanoTime()
       val rows = try qmap(n)(spark, sfDir).count()
       catch { case e: Throwable =>

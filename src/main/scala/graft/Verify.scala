@@ -16,14 +16,9 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      spark.catalog.clearCache() // queries that cache must not pin memory across the run
-      // sweep persistent RDDs the previous query leaked (localCheckpoint
-      // blocks dropped without unpersist) — the r13 q250 pollution class
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // and the previous query's scratch-parquet dirs (its result is
-      // fully written by now) — bounds session temp disk to one query
-      graft.store.Scratch.sweep()
+      // the previous query's result is fully written by now: drop its
+      // cache, leaked blocks (the r13 q250 pollution class) and dirs
+      graft.store.Scratch.reset(spark)
       try {
         val df = fn(spark, sfDir)
         GateLint.assertGateSafe(name, df.schema) // q184/q240 dtype family

@@ -73,7 +73,7 @@ object Bfs {
     // frontier checkpoint released inside the call: nothing stays
     // pinned after return (the r18 PageRank.run contract)
     val out = graft.store.Scratch.rematerialize(reached.df, "bfs",
-      coalesceTo = graft.store.Scratch.outputFiles(spark))
+      coalesceTo = graft.store.Scratch.OutputFiles)
     reached.release()
     out
   }

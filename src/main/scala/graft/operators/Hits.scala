@@ -100,7 +100,7 @@ object Hits {
     // are not referenced by the returned plan AND nothing stays pinned
     // after return (the r18 PageRank.run contract)
     val res = graft.store.Scratch.rematerialize(out, "hits",
-      coalesceTo = graft.store.Scratch.outputFiles(spark))
+      coalesceTo = graft.store.Scratch.OutputFiles)
     hubs.release(); auths.release(); e.unpersist(blocking = false)
     res
   }

@@ -79,7 +79,7 @@ object KCore {
     // and the final peel checkpoint released inside the call: nothing
     // stays pinned after return (the r18 PageRank.run contract)
     val out = graft.store.Scratch.rematerialize(degrees(e.df), "kcore",
-      coalesceTo = graft.store.Scratch.outputFiles(spark))
+      coalesceTo = graft.store.Scratch.OutputFiles)
     e.release()
     out
   }

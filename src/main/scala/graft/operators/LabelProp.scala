@@ -93,7 +93,7 @@ object LabelProp {
     // iteration checkpoint released inside the call: nothing stays
     // pinned after return (the r18 PageRank.run contract)
     val out = graft.store.Scratch.rematerialize(labels.df, "labelprop",
-      coalesceTo = graft.store.Scratch.outputFiles(spark))
+      coalesceTo = graft.store.Scratch.OutputFiles)
     labels.release()
     out
   }

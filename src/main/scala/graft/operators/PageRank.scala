@@ -261,7 +261,7 @@ object PageRank {
       if (redistributeDangling) dangling.unpersist(blocking = false)
       return graft.store.Scratch.rematerialize(
         rank.toSeq.toDF("node", "pr"), "pagerank",
-        coalesceTo = graft.store.Scratch.outputFiles(spark))
+        coalesceTo = graft.store.Scratch.OutputFiles)
     }
 
     // Iteration materialization is an EAGER LOCAL CHECKPOINT, not
@@ -324,7 +324,7 @@ object PageRank {
     // Nothing stays pinned after run() returns, and the result survives
     // executor loss — which a local checkpoint cannot.
     val out = graft.store.Scratch.rematerialize(ranks.df, "pagerank",
-      coalesceTo = graft.store.Scratch.outputFiles(spark))
+      coalesceTo = graft.store.Scratch.OutputFiles)
     ranks.release()
     out
   }

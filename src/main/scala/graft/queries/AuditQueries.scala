@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.store.Scratch
 import graft.operators.{Ablation, Autocorr, ChangePoint, Dependencies,
   Experiments, KAnonymity, Ordinal, RankTests, Sequences, Smoothing,
   TrendTests, Weighting}
@@ -420,26 +421,20 @@ object AuditQueries extends QuerySet {
           .otherwise(to_json(struct((col("event_id") % 97).cast("string")
             .as("k"))))
           .as("doc"))
-    val srcDir = new java.io.File(Scratch.dir("q334-src"))
+    val srcDir = Scratch.dir(s, "q334-src")
     val base = System.currentTimeMillis()
     Seq(0, 2, 4, 6).zipWithIndex.foreach { case (r, i) =>
-      val tmp = new java.io.File(Scratch.dir("q334-stage"))
-      ev.filter(col("event_id") % 8 === r).select(col("doc")).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(ev.filter(col("event_id") % 8 === r).select(col("doc")).coalesce(1),
+        srcDir, base + i * 1000L)
     }
-    val store = new graft.store.DocumentStore(s, Scratch.dir("q334-store"))
+    val store = new graft.store.DocumentStore(s, Scratch.dir(s, "q334-store"))
     val feed = s.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc",
           org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.SchemaMonitor.start(feed, store, "sledger",
-      "sverdict", "doc", Seq("k", "z"), Scratch.dir("q334-ckpt"))
+      "sverdict", "doc", Seq("k", "z"), Scratch.dir(s, "q334-ckpt"))
     try qy.processAllAvailable() finally qy.stop()
     store.read("sverdict")
       .select(col("batch_id"), col("field"), col("n_docs"),

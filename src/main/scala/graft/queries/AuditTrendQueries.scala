@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.store.Scratch
 import graft.operators.{Ablation, Autocorr, ChangePoint, Dependencies,
   Experiments, KAnonymity, Ordinal, RankTests, Sequences, Smoothing,
   TrendTests, Weighting}
@@ -293,24 +294,18 @@ object AuditTrendQueries extends QuerySet {
       .filter(!(col("event_type") === "error" &&
         col("event_id") % 10 >= 4))
       .select(col("event_id"), col("event_type"))
-    val srcDir = new java.io.File(Scratch.dir("q347-src"))
+    val srcDir = Scratch.dir(s, "q347-src")
     val base = System.currentTimeMillis()
     Seq(0, 2, 4, 6, 8).zipWithIndex.foreach { case (r, i) =>
-      val tmp = new java.io.File(Scratch.dir("q347-stage"))
-      ev.filter(col("event_id") % 10 === r).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(ev.filter(col("event_id") % 10 === r).coalesce(1),
+        srcDir, base + i * 1000L)
     }
-    val store = new graft.store.DocumentStore(s, Scratch.dir("q347-store"))
+    val store = new graft.store.DocumentStore(s, Scratch.dir(s, "q347-store"))
     val feed = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.LivenessMonitor.start(feed, store, "lledger",
       "lverdict", "event_type", quietBatches = 2,
-      Scratch.dir("q347-ckpt"))
+      Scratch.dir(s, "q347-ckpt"))
     try qy.processAllAvailable() finally qy.stop()
     store.read("lverdict")
       .select(col("batch_id"), col("source"), col("n"),

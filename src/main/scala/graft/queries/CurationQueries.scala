@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.store.Scratch
 import graft.operators.{Agreement, Boilerplate, Calibration, DomainMix, Dsir,
   QualityFilters, TextProfile}
 
@@ -581,25 +582,19 @@ object CurationQueries extends QuerySet {
         when(pmod(col("dd"), lit(4)) === 3, col("value") + 100)
           .otherwise(col("value")).as("value"),
         pmod(col("dd"), lit(4)).as("__b"))
-    val srcDir = new java.io.File(Scratch.dir("q235-src"))
+    val srcDir = Scratch.dir(s, "q235-src")
     val base = System.currentTimeMillis()
     (0 to 3).foreach { i =>
-      val tmp = new java.io.File(Scratch.dir("q235-stage"))
-      streamed.filter(col("__b") === i).drop("__b").coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(streamed.filter(col("__b") === i).drop("__b").coalesce(1),
+        srcDir, base + i * 1000L)
     }
     val store = new graft.store.DocumentStore(s,
-      Scratch.dir("q235-store"))
+      Scratch.dir(s, "q235-store"))
     val feed = s.readStream.schema(streamed.drop("__b").schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.SeasonalMonitor.start(feed, store, "seasonal",
       baseline, "ts", "value",
-      Scratch.dir("q235-ckpt"),
+      Scratch.dir(s, "q235-ckpt"),
       ratioNum = 1L, ratioDen = 1L)
     try qy.processAllAvailable() finally qy.stop()
     store.read("seasonal")
@@ -876,25 +871,19 @@ object CurationQueries extends QuerySet {
       transform(sequence(lit(1), lit(10)), _ => concat(lit("banner"), col("source"))))
     val docs = t(s, d, "documents")
       .select(col("doc_id"), concat(banner, lit(" "), col("text")).as("text"))
-    val srcDir = new java.io.File(Scratch.dir("q241-src"))
+    val srcDir = Scratch.dir(s, "q241-src")
     val base = System.currentTimeMillis()
     (0 to 1).foreach { i =>
-      val tmp = new java.io.File(Scratch.dir("q241-stage"))
-      docs.filter(pmod(col("doc_id"), lit(2)) === i).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(docs.filter(pmod(col("doc_id"), lit(2)) === i).coalesce(1),
+        srcDir, base + i * 1000L)
     }
     val store = new graft.store.DocumentStore(s,
-      Scratch.dir("q241-store"))
+      Scratch.dir(s, "q241-store"))
     val feed = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.BoilerplateIngest.start(feed, store, "segdf",
       "segdocs", "clean", "doc_id", "text",
-      Scratch.dir("q241-ckpt"),
+      Scratch.dir(s, "q241-ckpt"),
       segWords = 10, minDf = 5L)
     try qy.processAllAvailable() finally qy.stop()
     store.read("clean")

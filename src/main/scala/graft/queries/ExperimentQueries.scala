@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.store.Scratch
 import graft.operators.{Anomaly, Benford, BradleyTerry, ChangePoint,
   Correlation, Drift, Experiments, FeatureSelect, Inequality, Isotonic,
   LiftCurve, NaiveBayes, Rake, Regression, Reliability, Sequences, Sharding,
@@ -732,25 +733,19 @@ object ExperimentQueries extends QuerySet {
         when(col("event_id") % 8 === 7,
           (col("event_id") % 9 + 1).cast("double") * 111.0)
           .otherwise(col("value")).as("v"))
-    val srcDir = new java.io.File(Scratch.dir("q261-src"))
+    val srcDir = Scratch.dir(s, "q261-src")
     val base = System.currentTimeMillis()
     Seq(1, 3, 5, 7).zipWithIndex.foreach { case (r, i) =>
-      val tmp = new java.io.File(Scratch.dir("q261-stage"))
-      ev.filter(col("event_id") % 8 === r).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(ev.filter(col("event_id") % 8 === r).coalesce(1),
+        srcDir, base + i * 1000L)
     }
     val store = new graft.store.DocumentStore(s,
-      Scratch.dir("q261-store"))
+      Scratch.dir(s, "q261-store"))
     val feed = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.BenfordMonitor.start(feed, store, "bledger",
       "bverdict", "src", "v",
-      Scratch.dir("q261-ckpt"),
+      Scratch.dir(s, "q261-ckpt"),
       chiThreshold = 30.0, minN = 50L)
     try qy.processAllAvailable() finally qy.stop()
     store.read("bverdict")
@@ -1389,25 +1384,19 @@ object ExperimentQueries extends QuerySet {
       .select(col("doc_id"),
         when(col("doc_id") % 8 === 7, col("n_chars") + 150)
           .otherwise(col("n_chars")).as("v"))
-    val srcDir = new java.io.File(Scratch.dir("q272-src"))
+    val srcDir = Scratch.dir(s, "q272-src")
     val base = System.currentTimeMillis()
     Seq(1, 3, 5, 7).zipWithIndex.foreach { case (r, i) =>
-      val tmp = new java.io.File(Scratch.dir("q272-stage"))
-      streamed.filter(col("doc_id") % 8 === r).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(streamed.filter(col("doc_id") % 8 === r).coalesce(1),
+        srcDir, base + i * 1000L)
     }
     val store = new graft.store.DocumentStore(s,
-      Scratch.dir("q272-store"))
+      Scratch.dir(s, "q272-store"))
     val feed = s.readStream.schema(streamed.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.PsiMonitor.start(feed, store, "pledger",
       "pverdict", ref, "v",
-      Scratch.dir("q272-ckpt"),
+      Scratch.dir(s, "q272-ckpt"),
       bins = 10, alertAbove = 0.5)
     try qy.processAllAvailable() finally qy.stop()
     store.read("pverdict")

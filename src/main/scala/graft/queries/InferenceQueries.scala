@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.operators.{Causal, Keyness, Survival, VarianceRatio, VocabStats}
-import graft.store.DocumentStore
+import graft.store.{DocumentStore, Scratch}
 
 /** Round-17 inference extensions: the engine's first CAUSAL family
   * (difference-in-differences with the parallel-trends pre-check,
@@ -861,7 +861,7 @@ object InferenceQueries extends QuerySet {
     * not a data property (raw-cust spray measured pathological at the
     * sf1 scale row: 15k one-file manifest partitions). */
   private def q418(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Scratch.dir("q418-store"))
+    val store = new DocumentStore(s, Scratch.dir(s, "q418-store"))
     val base = t(s, d, "orders").filter(col("o_orderkey") % 7 === 0)
       .select(col("o_orderkey").as("k"), col("o_custkey").as("cust"),
         (col("o_custkey") % 32).as("bkt"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.store.Scratch
 import graft.operators.{Autocorr, Calibration, Cohorts, Conformal,
   Dispersion, Drift, Estimation, Experiments, Funnel, Jackknife,
   MultipleTesting, QuantileRegression, Readability, Sequences, Smoothing,
@@ -432,25 +433,19 @@ object PipelineQueries extends QuerySet {
       .select(col("event_id"),
         when(col("event_id") % 12 >= 9, col("value") + 20.0)
           .otherwise(col("value")).as("v"))
-    val srcDir = new java.io.File(Scratch.dir("q290-src"))
+    val srcDir = Scratch.dir(s, "q290-src")
     val base = System.currentTimeMillis()
     Seq(1, 3, 5, 7, 9, 11).zipWithIndex.foreach { case (r, i) =>
-      val tmp = new java.io.File(Scratch.dir("q290-stage"))
-      ev.filter(col("event_id") % 12 === r).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(ev.filter(col("event_id") % 12 === r).coalesce(1),
+        srcDir, base + i * 1000L)
     }
     val store = new graft.store.DocumentStore(s,
-      Scratch.dir("q290-store"))
+      Scratch.dir(s, "q290-store"))
     val feed = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.CusumMonitor.start(feed, store, "cledger",
       "cverdict", "v",
-      Scratch.dir("q290-ckpt"),
+      Scratch.dir(s, "q290-ckpt"),
       target = 50.0, k = 5.0, h = 12.0)
     try qy.processAllAvailable() finally qy.stop()
     store.read("cverdict")
@@ -1701,25 +1696,19 @@ object PipelineQueries extends QuerySet {
       .select(col("event_id"), col("arm"),
         when(col("arm") === 1 && col("event_id") % 10 >= 7,
           col("value") > 30.0).otherwise(col("value") > 80.0).as("y"))
-    val srcDir = new java.io.File(Scratch.dir("q313-src"))
+    val srcDir = Scratch.dir(s, "q313-src")
     val base = System.currentTimeMillis()
     Seq(1, 3, 5, 7, 9).zipWithIndex.foreach { case (r, i) =>
-      val tmp = new java.io.File(Scratch.dir("q313-stage"))
-      ev.filter(col("event_id") % 10 === r).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(ev.filter(col("event_id") % 10 === r).coalesce(1),
+        srcDir, base + i * 1000L)
     }
     val store = new graft.store.DocumentStore(s,
-      Scratch.dir("q313-store"))
+      Scratch.dir(s, "q313-store"))
     val feed = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.AnytimeMonitor.start(feed, store, "aledger",
       "averdict", "arm", "y",
-      Scratch.dir("q313-ckpt"))
+      Scratch.dir(s, "q313-ckpt"))
     try qy.processAllAvailable() finally qy.stop()
     store.read("averdict")
       .select(col("batch_id"), col("n0"), col("n1"), col("x0"), col("x1"),

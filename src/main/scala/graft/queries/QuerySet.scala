@@ -23,26 +23,3 @@ final case class Q(
 trait QuerySet {
   def queries: Seq[Q]
 }
-
-/** Per-query scratch directories that REUSE a fixed path instead of
-  * minting a fresh `Files.createTempDirectory` per invocation — repeated
-  * verify/bench passes were accumulating parquet copies of the staged
-  * slices in /tmp (ADVICE r15). The directory is wiped and recreated on
-  * each call: streaming gates need exactly that (a reused Structured
-  * Streaming checkpoint would mark the staged batches already-processed
-  * and replay nothing), and the previous pass's result has always been
-  * consumed before the next pass starts. */
-object Scratch {
-  def dir(name: String): String = {
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft-scratch", name)
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(); ()
-    }
-    rm(p.toFile)
-    java.nio.file.Files.createDirectories(p)
-    p.toString
-  }
-}

@@ -1,12 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.embed.{Embed, HashProjectionEmbedder}
 import graft.search.VectorSearch
-import graft.store.DocumentStore
+import graft.store.{DocumentStore, Scratch}
 
 /** RAG-lifecycle + mutable-store operators (SURVEY §2.1 S5/S6, §2.8 V1/V4,
   * §3.1/§3.2) expressed as verifiable queries over the testdata tables.
@@ -14,35 +13,6 @@ import graft.store.DocumentStore
 object RagQueries extends QuerySet {
 
   private val embedder = HashProjectionEmbedder(dims = 64)
-
-  /** Stage `df` into `dir` as parquet files with a fixed modification
-    * time, for the streaming gates: FileStreamSource orders files by
-    * (modTime, path), and within one write job the part index is the
-    * path order — so staged groups become DETERMINISTIC micro-batches
-    * under maxFilesPerTrigger, with `byRange` giving ascending
-    * event-time file order (file k+1's min ≥ file k's max, so
-    * sequential batches never drop rows behind the 10-minute
-    * watermark). This is how the gates feed the REAL file-source path
-    * at any sf with no driver-side collect. */
-  private def stage(df: DataFrame, dir: java.io.File, modTime: Long,
-                    byRange: Option[org.apache.spark.sql.Column] = None,
-                    nFiles: Int = 4): Unit = {
-    val tmp = Files.createTempDirectory("graft-stage").toFile
-    val out = byRange match {
-      case Some(c) => df.repartitionByRange(nFiles, c)
-      case None => df.repartition(nFiles)
-    }
-    out.write.mode("overwrite").parquet(tmp.toString)
-    // one mod time PER file, ascending in part-index (= range) order:
-    // the source's tie-break on equal mod times is not contractual, and
-    // an out-of-order range file would drop rows behind the watermark
-    tmp.listFiles().filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .zipWithIndex.foreach { case (f, i) =>
-        val dst = new java.io.File(dir, f.getName)
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(modTime + i * 1000L)
-      }
-  }
 
   /** §3.2 ingest + V2 search, end to end: batch-embed the documents
     * corpus (V4), embed the probe text (V1), exact top-10 (V2). Embedder
@@ -71,7 +41,7 @@ object RagQueries extends QuerySet {
         .select(col("doc_id"), col("lang"),
           floor(col("sim") * (1L << 20)).as("sim_grid"))
     val mem = top10(docs)
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q60").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q60"))
     store.create("docs", docs)
     val memRows = mem.collect().toSeq // k rows — driver-trivial
     val roundTripExact =
@@ -168,7 +138,7 @@ object RagQueries extends QuerySet {
     * a new one, read the committed snapshot back. The oracle states the
     * same semantics relationally (anti-join ∪ updates). */
   private def q61(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q61").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q61"))
     store.create("part", t(s, d, "part"), partitionCol = Some("p_brand"))
     import s.implicits._
     val updates = Seq(
@@ -190,7 +160,7 @@ object RagQueries extends QuerySet {
 
   /** S6/S7 delete through the versioned store (point + predicate). */
   private def q62(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q62").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q62"))
     store.create("supplier", t(s, d, "supplier"))
     store.delete("supplier", col("s_suppkey") === 1 || col("s_acctbal") < 0)
     store.read("supplier")
@@ -209,7 +179,7 @@ object RagQueries extends QuerySet {
     * reproducibility read path a training pipeline needs ("which corpus
     * version did this run train on?"). */
   private def q99(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q99").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q99"))
     store.create("supplier", t(s, d, "supplier"))
     store.delete("supplier", col("s_acctbal") < 0)
     val v1 = store.readVersion("supplier", 1)
@@ -233,7 +203,7 @@ object RagQueries extends QuerySet {
     * regression is driver-visible; the oracle checks the rewrite lost or
     * changed no rows. */
   private def q104(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q104").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q104"))
     store.create("orders", t(s, d, "orders").repartition(16),
       partitionCol = Some("o_orderpriority"))
     val filesBefore = store.fileStats("orders").map(_._2).sum
@@ -257,7 +227,7 @@ object RagQueries extends QuerySet {
     * oracle recomputes the range from the raw table, so over- OR
     * under-reading both fail the hash. */
   private def q105(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q105").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q105"))
     // adaptive bucket width: ~10 partitions at any scale (never fewer
     // than 2 — width floors at 100 and custkeys reach 150 even at
     // sf0.001); the 10..80 range sits inside bucket 0, so pruning must
@@ -296,7 +266,7 @@ object RagQueries extends QuerySet {
     * filter on the raw table. */
   private def q150(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q150").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q150"))
     val orders = t(s, d, "orders")
     val width = math.max(100L,
       orders.agg(max(col("o_custkey"))).head().getLong(0) / 10)
@@ -344,7 +314,7 @@ object RagQueries extends QuerySet {
     * the oracle recounts the combined range from the raw table, so
     * over- or under-reading fails the hash. */
   private def q133(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q133").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q133"))
     val z = graft.store.ZOrder.withZBucket(
       t(s, d, "orders"), Seq("o_custkey", "o_totalprice", "o_orderkey"), log2Buckets = 4)
     store.create("orders_z", z, partitionCol = Some("zbucket"))
@@ -377,7 +347,7 @@ object RagQueries extends QuerySet {
     * added/removed rows across a delete + an upsert. The oracle restates
     * both snapshots relationally and diffs them with EXCEPT ALL. */
   private def q111(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q111").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q111"))
     store.create("supplier", t(s, d, "supplier"))
     store.delete("supplier", col("s_acctbal") < 0)
     import s.implicits._
@@ -413,7 +383,7 @@ object RagQueries extends QuerySet {
     * emit NOTHING (null-safe struct compare), which the oracle's
     * relational replay checks hash-exactly. */
   private def q132(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q132").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q132"))
     store.create("supplier", t(s, d, "supplier"))
     store.delete("supplier", col("s_acctbal") < 0)                       // v2
     import s.implicits._
@@ -465,8 +435,8 @@ object RagQueries extends QuerySet {
     val orders = t(s, d, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         col("o_orderpriority"), col("o_totalprice"))
-    val src = new DocumentStore(s, Files.createTempDirectory("graft-q141-src").toString)
-    val st = new DocumentStore(s, Files.createTempDirectory("graft-q141-st").toString)
+    val src = new DocumentStore(s, Scratch.dir(s, "q141-src"))
+    val st = new DocumentStore(s, Scratch.dir(s, "q141-st"))
     src.create("orders", orders)                                       // v1
     IncrementalView.initialize(src, "orders", st, "agg",
       "o_orderpriority", "o_totalprice", distinctCol = Some("o_custkey"))
@@ -541,14 +511,15 @@ object RagQueries extends QuerySet {
     val dels = sup.filter(col("s_suppkey") % 5 === 0)
       .withColumn("op", lit("delete")).withColumn("seq", col("s_suppkey") + 200000L)
     val changes = base.unionByName(mods).unionByName(dels)
-    val dir = Files.createTempDirectory("graft-q140-src").toFile
-    stage(changes, dir, System.currentTimeMillis(), byRange = Some(col("seq")))
+    val dir = Scratch.dir(s, "q140-src")
+    Scratch.stage(changes.repartitionByRange(4, col("seq")),
+      dir, System.currentTimeMillis())
     val src = s.readStream.schema(changes.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q140").toString)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val store = new DocumentStore(s, Scratch.dir(s, "q140"))
     val qy = graft.streaming.EventStream.cdcApplySink(src, store, "sup",
       keys = Seq("s_suppkey"), opCol = "op", seqCol = "seq",
-      checkpoint = Files.createTempDirectory("graft-q140-ckpt").toString)
+      checkpoint = Scratch.dir(s, "q140-ckpt"))
     qy.awaitTermination()
     store.read("sup")
       .select(col("s_suppkey"), col("s_name"),
@@ -578,9 +549,9 @@ object RagQueries extends QuerySet {
   private def q139(s: SparkSession, d: String): DataFrame = {
     import graft.search.{IvfIndex, IvfStore}
     val e = t(s, d, "embeddings")
-    val src = new DocumentStore(s, Files.createTempDirectory("graft-q139-src").toString)
+    val src = new DocumentStore(s, Scratch.dir(s, "q139-src"))
     src.create("vecs", e)                                               // v1
-    val idxStore = new DocumentStore(s, Files.createTempDirectory("graft-q139-idx").toString)
+    val idxStore = new DocumentStore(s, Scratch.dir(s, "q139-idx"))
     val idx = new IvfStore(idxStore, "ivf",
       IvfIndex.train(e, "embedding", "vec_id", numLists = 8, iters = 3, multiAssign = 1),
       "embedding", "vec_id")
@@ -640,11 +611,11 @@ object RagQueries extends QuerySet {
     import s.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q118").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q118"))
     val q = graft.streaming.VectorIngest.start(
       in.toDF().toDF("doc_id", "text"), store, "docs",
       HashProjectionEmbedder(dims = 16), "doc_id", "text",
-      Files.createTempDirectory("graft-q118-ckpt").toString)
+      Scratch.dir(s, "q118-ckpt"))
     try {
       val rows = t(s, d, "documents").select(col("doc_id"), col("text"))
         .as[(Long, String)].collect().toSeq
@@ -676,18 +647,18 @@ object RagQueries extends QuerySet {
     * recount. */
   private def q119(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-q119-src").toFile
+    val dir = Scratch.dir(s, "q119-src")
     val ev = t(s, d, "events").select(col("user_id"), col("ts"))
     val maxMs = ev.agg(max(col("ts"))).head().getTimestamp(0).getTime
     val base = System.currentTimeMillis()
-    stage(ev, dir, base, byRange = Some(col("ts")))
+    Scratch.stage(ev.repartitionByRange(4, col("ts")), dir, base)
     def sentinel(offsetDays: Long): DataFrame =
       Seq((-1L, new java.sql.Timestamp(maxMs + offsetDays * 24 * 3600 * 1000)))
         .toDF("user_id", "ts")
-    stage(sentinel(30), dir, base + 60000, nFiles = 1)
-    stage(sentinel(60), dir, base + 120000, nFiles = 1)
+    Scratch.stage(sentinel(30).repartition(1), dir, base + 60000)
+    Scratch.stage(sentinel(60).repartition(1), dir, base + 120000)
     val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
     val sess = graft.streaming.EventStream.sessionize(s, src, gapMinutes = 360)
     val qname = "q119_out"
     val qy = sess.writeStream.outputMode("append")
@@ -727,22 +698,22 @@ object RagQueries extends QuerySet {
     * discipline as batch q50, whose oracle this reuses. */
   private def q120(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-q120-src").toFile
+    val dir = Scratch.dir(s, "q120-src")
     val ev = t(s, d, "events")
       .select(col("ts"), col("event_type"),
         col("value").cast("decimal(18,2)").as("value"))
     val maxMs = ev.agg(max(col("ts"))).head().getTimestamp(0).getTime
     val base = System.currentTimeMillis()
-    stage(ev, dir, base, byRange = Some(col("ts")))
+    Scratch.stage(ev.repartitionByRange(4, col("ts")), dir, base)
     def sentinel(offsetDays: Long): DataFrame =
       Seq((new java.sql.Timestamp(maxMs + offsetDays * 24 * 3600 * 1000),
         "__sentinel", BigDecimal(0)))
         .toDF("ts", "event_type", "value")
         .select(col("ts"), col("event_type"), col("value").cast("decimal(18,2)"))
-    stage(sentinel(30), dir, base + 60000, nFiles = 1)
-    stage(sentinel(60), dir, base + 120000, nFiles = 1)
+    Scratch.stage(sentinel(30).repartition(1), dir, base + 60000)
+    Scratch.stage(sentinel(60).repartition(1), dir, base + 120000)
     val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
     val agg = graft.streaming.EventStream.windowedStats(src)
     val qy = agg.writeStream.outputMode("append")
       .format("memory").queryName("q120_out").start()
@@ -769,13 +740,15 @@ object RagQueries extends QuerySet {
     * collect: the doubled table and the replay slice are staged by
     * Spark writes. Horizon eviction itself is spec territory. */
   private def q121(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft-q121-src").toFile
+    val dir = Scratch.dir(s, "q121-src")
     val ev = t(s, d, "events").select(col("event_id"), col("ts"), col("event_type"))
     val base = System.currentTimeMillis()
-    stage(ev.union(ev), dir, base) // in-batch duplicates, 4 files
-    stage(ev.orderBy(col("event_id")).limit(200), dir, base + 60000, nFiles = 1)
+    Scratch.stage(ev.union(ev).repartition(4),
+      dir, base) // in-batch duplicates, 4 files
+    Scratch.stage(ev.orderBy(col("event_id")).limit(200).repartition(1),
+      dir, base + 60000)
     val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "4").parquet(dir.toString)
+      .option("maxFilesPerTrigger", "4").parquet(dir)
     val deduped = graft.streaming.EventStream.dedup(src, Seq("event_id"))
     val qy = deduped.writeStream.outputMode("append")
       .format("memory").queryName("q121_out").start()
@@ -798,22 +771,19 @@ object RagQueries extends QuerySet {
     * admit into the next, breaks the hash. */
   private def q430(s: SparkSession, d: String): DataFrame = {
     val e = t(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    // fixed reused scratch paths (wiped per call) — repeated verify/
-    // bench passes must not accumulate /tmp copies, and a FRESH
-    // checkpoint per call is load-bearing for a streaming gate
-    val dir = new java.io.File(Scratch.dir("q430-src"))
+    val dir = Scratch.dir(s, "q430-src")
     val base = System.currentTimeMillis()
     for (k <- 0 until 3)
-      stage(e.filter(col("vec_id") % 3 === k), dir, base + k * 60000L,
-        nFiles = 1)
-    val store = new DocumentStore(s, Scratch.dir("q430-store"))
+      Scratch.stage(e.filter(col("vec_id") % 3 === k).repartition(1), dir,
+        base + k * 60000L)
+    val store = new DocumentStore(s, Scratch.dir(s, "q430-store"))
     store.create("cache", e.filter(col("vec_id") % 7 === 0))
-    val outDir = Scratch.dir("q430-out")
+    val outDir = Scratch.dir(s, "q430-out")
     val src = s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
     val qy = graft.streaming.CacheIngest.start(src, store, "cache",
       "vec_id", "embedding", threshold = 0.38, resultDir = outDir,
-      checkpointDir = Scratch.dir("q430-ck"))
+      checkpointDir = Scratch.dir(s, "q430-ck"))
     try qy.processAllAvailable() finally qy.stop()
     s.read.parquet(outDir)
       .select(col("probe_id"), col("served_id"),
@@ -864,14 +834,14 @@ object RagQueries extends QuerySet {
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id"))
     val base = System.currentTimeMillis()
-    val dirL = Files.createTempDirectory("graft-q125-l").toFile
-    val dirR = Files.createTempDirectory("graft-q125-r").toFile
-    stage(views, dirL, base, byRange = Some(col("ts")))
-    stage(purchases, dirR, base, byRange = Some(col("ts")))
+    val dirL = Scratch.dir(s, "q125-l")
+    val dirR = Scratch.dir(s, "q125-r")
+    Scratch.stage(views.repartitionByRange(4, col("ts")), dirL, base)
+    Scratch.stage(purchases.repartitionByRange(4, col("ts")), dirR, base)
     val l = s.readStream.schema(views.schema)
-      .option("maxFilesPerTrigger", "8").parquet(dirL.toString)
+      .option("maxFilesPerTrigger", "8").parquet(dirL)
     val r = s.readStream.schema(purchases.schema)
-      .option("maxFilesPerTrigger", "8").parquet(dirR.toString)
+      .option("maxFilesPerTrigger", "8").parquet(dirR)
     val joined = graft.streaming.EventStream.intervalJoin(
       l, r, key = "user_id", before = "1 hour")
     val qy = joined.writeStream.outputMode("append")
@@ -900,10 +870,10 @@ object RagQueries extends QuerySet {
     * batch ROW_NUMBER()=50 replay. */
   private def q153(s: SparkSession, d: String): DataFrame = {
     val ev = t(s, d, "events").select(col("user_id"), col("event_id"), col("ts"))
-    val dir = Files.createTempDirectory("graft-q153-src").toFile
-    stage(ev, dir, System.currentTimeMillis(), byRange = Some(col("ts")))
+    val dir = Scratch.dir(s, "q153-src")
+    Scratch.stage(ev.repartitionByRange(4, col("ts")), dir, System.currentTimeMillis())
     val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
     val alerts = graft.streaming.EventStream.thresholdAlerts(s, src, threshold = 50)
     val qy = alerts.writeStream.outputMode("append")
       .format("memory").queryName("q153_out").start()
@@ -937,21 +907,21 @@ object RagQueries extends QuerySet {
       .select(col("user_id"), col("ts"), col("event_id"))
     val maxMs = ev.agg(max(col("ts"))).head().getTimestamp(0).getTime
     val base = System.currentTimeMillis()
-    val dirL = Files.createTempDirectory("graft-q135-l").toFile
-    val dirR = Files.createTempDirectory("graft-q135-r").toFile
-    stage(views, dirL, base, byRange = Some(col("ts")))
-    stage(purchases, dirR, base, byRange = Some(col("ts")))
+    val dirL = Scratch.dir(s, "q135-l")
+    val dirR = Scratch.dir(s, "q135-r")
+    Scratch.stage(views.repartitionByRange(4, col("ts")), dirL, base)
+    Scratch.stage(purchases.repartitionByRange(4, col("ts")), dirR, base)
     def sentinel(offsetDays: Long): DataFrame =
       Seq((-1L, new java.sql.Timestamp(maxMs + offsetDays * 24 * 3600 * 1000), -1L))
         .toDF("user_id", "ts", "event_id")
     Seq(dirL, dirR).foreach { dir =>
-      stage(sentinel(30), dir, base + 60000, nFiles = 1)
-      stage(sentinel(60), dir, base + 120000, nFiles = 1)
+      Scratch.stage(sentinel(30).repartition(1), dir, base + 60000)
+      Scratch.stage(sentinel(60).repartition(1), dir, base + 120000)
     }
     val l = s.readStream.schema(views.schema)
-      .option("maxFilesPerTrigger", "2").parquet(dirL.toString)
+      .option("maxFilesPerTrigger", "2").parquet(dirL)
     val r = s.readStream.schema(purchases.schema)
-      .option("maxFilesPerTrigger", "2").parquet(dirR.toString)
+      .option("maxFilesPerTrigger", "2").parquet(dirR)
     val joined = graft.streaming.EventStream.intervalJoin(
       l, r, key = "user_id", before = "1 hour", joinType = "left_outer")
     val qy = joined.writeStream.outputMode("append")
@@ -981,10 +951,10 @@ object RagQueries extends QuerySet {
       .select(col("event_id"), col("user_id"), col("event_type"))
     val dim = t(s, d, "customer")
       .select(col("c_custkey").as("user_id"), col("c_name"), col("c_mktsegment"))
-    val dir = Files.createTempDirectory("graft-q126-src").toFile
-    stage(ev, dir, System.currentTimeMillis())
+    val dir = Scratch.dir(s, "q126-src")
+    Scratch.stage(ev.repartition(4), dir, System.currentTimeMillis())
     val src = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "2").parquet(dir.toString)
+      .option("maxFilesPerTrigger", "2").parquet(dir)
     val enriched = graft.streaming.EventStream.enrich(src, dim, Seq("user_id"))
     val qy = enriched.writeStream.outputMode("append")
       .format("memory").queryName("q126_out").start()
@@ -1008,7 +978,7 @@ object RagQueries extends QuerySet {
     * size — this is the op that makes the versioned store viable at
     * 100 TB. */
   private def q117(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q117").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q117"))
     store.create("supplier", t(s, d, "supplier"))           // v1
     store.delete("supplier", col("s_acctbal") < 0)          // v2
     store.delete("supplier", col("s_suppkey") % 10 === 0)   // v3
@@ -1036,7 +1006,7 @@ object RagQueries extends QuerySet {
     * unmatched rows, unmatched update keys — is untouched. The oracle
     * states the same semantics with a CASE over a left join. */
   private def q108(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q108").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q108"))
     store.create("supplier", t(s, d, "supplier"), partitionCol = Some("s_nationkey"))
     import s.implicits._
     val updates = Seq((1L, "flagged supplier"), (5L, "flagged supplier"),
@@ -1085,7 +1055,7 @@ object RagQueries extends QuerySet {
     // holds no cache reference and the persist releases before return.
     val emb = Embed.withEmbedding(t(s, d, "documents"), "text", "vector", embedder1536)
       .select(col("doc_id"), col("vector")).persist()
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q64").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q64"))
     store.create("emb", emb)
     def corpusHash(df: DataFrame): Long = // XOR fold: associative, no overflow
       df.withColumn("__h", xxhash64(col("doc_id"), col("vector")))
@@ -1172,7 +1142,7 @@ object RagQueries extends QuerySet {
         .otherwise(concat(col("c_name"), lit(",\""), lit("\n"),
           col("c_mktsegment"), lit("\\"))).as("payload"),
       col("c_acctbal"))
-    val dir = Files.createTempDirectory("graft-q158").toString + "/csv"
+    val dir = Scratch.dir(s, "q158") + "/csv"
     graft.sources.CsvRoundTrip.write(tricky, dir)
     graft.sources.CsvRoundTrip.read(s, dir, tricky.schema)
       .orderBy(col("c_custkey"))
@@ -1226,11 +1196,11 @@ object RagQueries extends QuerySet {
     import graft.search.InvertedIndex
     val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
     val pristine = q172PristineCache.computeIfAbsent(d, _ => {
-      val p = Files.createTempDirectory("graft-q172-pristine").toString
+      val p = Scratch.dir(s, "q172-pristine")
       InvertedIndex.build(docs, "doc_id", "text", p)
-      p
+      Scratch.keep(p)
     })
-    val dir = Files.createTempDirectory("graft-q172-idx").toString
+    val dir = Scratch.dir(s, "q172-idx")
     graft.tools.Timing("copyTree")(copyTree(pristine, dir))
     val epochA = docs.filter(col("doc_id") % 17 === 3)
         .select(lit("delete").as("change"), col("doc_id"), col("text"))
@@ -1241,17 +1211,17 @@ object RagQueries extends QuerySet {
       .select(lit("insert").as("change"),
         (col("doc_id") + 2000000L).as("doc_id"),
         concat(lit("graftstream table "), col("text")).as("text"))
-    val srcDir = Files.createTempDirectory("graft-q172-src").toFile
+    val srcDir = Scratch.dir(s, "q172-src")
     val base = System.currentTimeMillis()
     graft.tools.Timing("stage-epochs") {
-      stage(epochA, srcDir, base)
-      stage(epochB, srcDir, base + 60000)
+      Scratch.stage(epochA.repartition(4), srcDir, base)
+      Scratch.stage(epochB.repartition(4), srcDir, base + 60000)
     }
     val feed = s.readStream.schema(epochA.schema)
-      .option("maxFilesPerTrigger", "4").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "4").parquet(srcDir)
     val qy = graft.streaming.IndexIngest.start(feed, dir,
       "doc_id", "text", "change",
-      Files.createTempDirectory("graft-q172-ckpt").toString)
+      Scratch.dir(s, "q172-ckpt"))
     graft.tools.Timing("stream-drain")(
       try qy.processAllAvailable() finally qy.stop())
     dir
@@ -1288,13 +1258,13 @@ object RagQueries extends QuerySet {
                            cacheRebuild: Boolean = false): DataFrame = {
     import graft.search.InvertedIndex
     def rebuild(): String = {
-      val p = Files.createTempDirectory("graft-q172-rebuild").toString
+      val p = Scratch.dir(s, "q172-rebuild")
       // parity rebuild: pin to the synced index's committed layout
       InvertedIndex.build(q172FinalCorpus(s, d), "doc_id", "text", p,
         buckets = InvertedIndex.layoutBuckets(s, dir))
       p
     }
-    val dir2 = if (cacheRebuild) q172RebuildCache.computeIfAbsent(d, _ => rebuild())
+    val dir2 = if (cacheRebuild) q172RebuildCache.computeIfAbsent(d, _ => Scratch.keep(rebuild()))
       else rebuild()
     val sA = new DocumentStore(s, dir)
     val sB = new DocumentStore(s, dir2)
@@ -1317,11 +1287,12 @@ object RagQueries extends QuerySet {
     * 24 s row) can't hide the sync trend. Gated by the same oracle as
     * the full lifecycle: the sync must converge to the final corpus, so
     * its ranked results replay relationally. Each run re-syncs (that IS
-    * the measured work) and republishes the dir for [[q172g]]. */
+    * the measured work) and republishes the dir for [[q172g]], kept out
+    * of the between-queries sweep; the dir it replaces is deleted. */
   private val q172SyncCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def q172s(s: SparkSession, d: String): DataFrame = {
     val dir = q172SyncImpl(s, d)
-    q172SyncCache.put(d, dir)
+    Option(q172SyncCache.put(d, Scratch.keep(dir))).foreach(Scratch.release)
     graft.search.InvertedIndex.search(s, dir, Seq("graftstream", "table"), k = 10)
   }
 
@@ -1331,7 +1302,7 @@ object RagQueries extends QuerySet {
     * pair prices sync ONCE per pass — the gate row isolates the
     * deliberate verification cost. */
   private def q172g(s: SparkSession, d: String): DataFrame = {
-    val dir = q172SyncCache.computeIfAbsent(d, _ => q172SyncImpl(s, d))
+    val dir = q172SyncCache.computeIfAbsent(d, _ => Scratch.keep(q172SyncImpl(s, d)))
     q172GateImpl(s, d, dir, cacheRebuild = true)
   }
 
@@ -1376,22 +1347,22 @@ object RagQueries extends QuerySet {
   private def q192(s: SparkSession, d: String): DataFrame = {
     val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
     val store = new DocumentStore(s,
-      Files.createTempDirectory("graft-q192-store").toString)
+      Scratch.dir(s, "q192-store"))
     val corpus0 = docs.filter(col("doc_id") % 10 <= 6)
     store.create("corpus", corpus0)
     val epochA = docs.filter(col("doc_id") % 10 === 7)
     val epochB = docs.filter(col("doc_id") % 10 === 8)
       .unionByName(docs.filter(col("doc_id") % 10 === 7 && col("doc_id") < 100)
         .select((col("doc_id") + 5000000L).as("doc_id"), col("text")))
-    val srcDir = Files.createTempDirectory("graft-q192-src").toFile
+    val srcDir = Scratch.dir(s, "q192-src")
     val base = System.currentTimeMillis()
-    stage(epochA, srcDir, base)
-    stage(epochB, srcDir, base + 60000)
+    Scratch.stage(epochA.repartition(4), srcDir, base)
+    Scratch.stage(epochB.repartition(4), srcDir, base + 60000)
     val feed = s.readStream.schema(epochA.schema)
-      .option("maxFilesPerTrigger", "4").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "4").parquet(srcDir)
     val qy = graft.streaming.AdmissionIngest.start(feed, store,
       "corpus", "quarantine", "doc_id", "text",
-      Files.createTempDirectory("graft-q192-ckpt").toString, threshold = 0.8)
+      Scratch.dir(s, "q192-ckpt"), threshold = 0.8)
     try qy.processAllAvailable() finally qy.stop()
     val nIn = corpus0.count() + epochA.count() + epochB.count()
     val nOut = store.read("corpus").count() +
@@ -1479,7 +1450,7 @@ object RagQueries extends QuerySet {
     * publish that lost, duplicated, or altered any row breaks the hash
     * from both sides. */
   private def q198(s: SparkSession, d: String): DataFrame = {
-    val dir = Files.createTempDirectory("graft-q198").toString + "/rel"
+    val dir = Scratch.dir(s, "q198") + "/rel"
     val cols = Seq("doc_id", "text", "lang", "n_chars")
     graft.sources.Release.publish(t(s, d, "documents"), dir, "doc_id",
       cols, groupCol = Some("source"))
@@ -1530,7 +1501,7 @@ object RagQueries extends QuerySet {
     * on the NEW column must serve exactly its rows; the oracle proves
     * the rewrite lost and changed nothing. */
   private def q179(s: SparkSession, d: String): DataFrame = {
-    val store = new DocumentStore(s, Files.createTempDirectory("graft-q179").toString)
+    val store = new DocumentStore(s, Scratch.dir(s, "q179"))
     val orders = t(s, d, "orders")
     store.create("orders", orders, partitionCol = Some("o_orderpriority"))
     store.repartitionBy("orders", Some("o_orderstatus"), sortBy = Seq("o_custkey"))
@@ -1577,7 +1548,7 @@ object RagQueries extends QuerySet {
           // emoji must hash identically through the live oracle replay
           lit(new String(Character.toChars(0x1F600))))).as("payload"),
       col("c_acctbal").cast("decimal(12,2)").as("bal"))
-    val dir = Files.createTempDirectory("graft-q184").toString + "/orc"
+    val dir = Scratch.dir(s, "q184") + "/orc"
     tricky.write.mode("overwrite").orc(dir)
     s.read.orc(dir)
       .select(
@@ -1622,7 +1593,7 @@ object RagQueries extends QuerySet {
       // strip CR/LF so the stat records clean data; keep quotes/commas
       regexp_replace(col("text"), "[\\n\\r]", " ").as("text_flat"),
       col("lang"))
-    val dir = Files.createTempDirectory("graft-q163").toString + "/csv"
+    val dir = Scratch.dir(s, "q163") + "/csv"
     graft.sources.CsvRoundTrip.write(docs.coalesce(1), dir)
     val prev = s.conf.get("spark.sql.files.maxPartitionBytes")
     val back = try {
@@ -1656,24 +1627,18 @@ object RagQueries extends QuerySet {
       .select(col("doc_id"),
         when(col("doc_id") % 8 === 7, col("n_chars") + 150)
           .otherwise(col("n_chars")).as("v"))
-    val srcDir = Files.createTempDirectory("graft-q208-src").toFile
+    val srcDir = Scratch.dir(s, "q208-src")
     val base = System.currentTimeMillis()
     Seq(1, 3, 5, 7).zipWithIndex.foreach { case (r, i) =>
-      val tmp = Files.createTempDirectory("graft-q208-stage").toFile
-      streamed.filter(col("doc_id") % 8 === r).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val dst = new java.io.File(srcDir, s"batch$i.parquet")
-        java.nio.file.Files.move(f.toPath, dst.toPath)
-        dst.setLastModified(base + i * 1000L)
-      }
+      Scratch.stage(streamed.filter(col("doc_id") % 8 === r).coalesce(1),
+        srcDir, base + i * 1000L)
     }
     val store = new DocumentStore(s,
-      Files.createTempDirectory("graft-q208-store").toString)
+      Scratch.dir(s, "q208-store"))
     val feed = s.readStream.schema(streamed.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val qy = graft.streaming.DriftMonitor.start(feed, store, "drift",
-      ref, "v", Files.createTempDirectory("graft-q208-ckpt").toString,
+      ref, "v", Scratch.dir(s, "q208-ckpt"),
       thrNum = 1L, thrDen = 4L)
     try qy.processAllAvailable() finally qy.stop()
     store.read("drift")
@@ -1776,7 +1741,7 @@ object RagQueries extends QuerySet {
           lower(col("text")), "[^a-z ]", ""), " +", " ")), " "), 1, 30), " ")
           .as("text"))
       .filter(col("text") =!= "")
-    val store = new DocumentStore(s, Scratch.dir("q398-store"))
+    val store = new DocumentStore(s, Scratch.dir(s, "q398-store"))
     val eng = new graft.rag.ChatEngine(s, store,
       embedder = new CountEmbedder,
       completions = new SqlReplayClient,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.store.Scratch
 import graft.operators.KeywordRank
 import graft.search.HybridSearch
 
@@ -35,7 +36,7 @@ object RankingQueries extends QuerySet {
     * call here). */
   private def closing(idx: KeywordRank.KeywordIndex)
                      (f: KeywordRank.KeywordIndex => DataFrame): DataFrame =
-    try graft.store.Scratch.rematerialize(f(idx), "tfidf-gate")
+    try Scratch.rematerialize(f(idx), "tfidf-gate")
     finally idx.close()
 
   /** TF-IDF: top-3 characteristic terms per document. Uses the cached
@@ -155,7 +156,7 @@ object RankingQueries extends QuerySet {
     * in stats maintenance or expression shape zeroes the output. */
   private def q162(s: SparkSession, d: String): DataFrame = {
     import graft.search.InvertedIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft-q162").toString
+    val dir = Scratch.dir(s, "q162")
     val docs = t(s, d, "documents")
     InvertedIndex.build(docs, "doc_id", "text", dir, tok = InvertedIndex.TokAlnum)
     val served = InvertedIndex.searchBm25(s, dir, queryTerms).cache()

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.t
+import graft.store.Scratch
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{AdoptionOrder, Association, Backtesting, Binning,
   Bridge, CalibrationTest, Cohorts, Correlation, Drift, Extremes,
@@ -1117,7 +1118,7 @@ object SignalQueries extends QuerySet {
             col("cc") + (col("cc") / 200).cast("long"))
           .otherwise(col("cc")))
       .select(col("k"), col("c"), col("stated"))
-    val store = new graft.store.DocumentStore(s, Scratch.dir("q385-store"))
+    val store = new graft.store.DocumentStore(s, Scratch.dir(s, "q385-store"))
     (0 to 4).foreach { i =>
       graft.streaming.ReconcileMonitor.applyBatch(
         feed0.filter(col("k") % 5 === i), i.toLong, store,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables.t
 import graft.functions.VectorFunctions._
 import graft.search.{HnswIndex, HyperplaneLsh, IvfIndex, IvfStore, VectorSearch}
-import graft.store.DocumentStore
+import graft.store.{DocumentStore, Scratch}
 
 /** Vector-search operator coverage (SURVEY §2.8: V2/V3 + the ANN/near-dup
   * extensions). Oracle parity trick: DuckDB's list_cosine_similarity over
@@ -111,7 +111,7 @@ object VectorQueries extends QuerySet {
   private def q33(s: SparkSession, d: String): DataFrame = {
     val e = t(s, d, "embeddings").cache()
     val idx = IvfIndex.train(e, "embedding", "vec_id", numLists = 16, iters = 3, multiAssign = 4)
-    val root = java.nio.file.Files.createTempDirectory("graft-q33-ivf").toString
+    val root = Scratch.dir(s, "q33-ivf")
     IvfIndex.writeSidecar(s, root, idx)
     val loaded = IvfIndex.readSidecar(s, root)
       .getOrElse(sys.error("IVF sidecar did not round-trip"))
@@ -197,7 +197,7 @@ object VectorQueries extends QuerySet {
     * distance), and the exact top-k among candidates. */
   private def q36(s: SparkSession, d: String): DataFrame = {
     val e = t(s, d, "embeddings").cache()
-    val root = java.nio.file.Files.createTempDirectory("graft-q36-lsh").toString
+    val root = Scratch.dir(s, "q36-lsh")
     HyperplaneLsh.writeSidecar(s, root, HyperplaneLsh(dims = 64, bits = 8, numTables = 8))
     val lsh = HyperplaneLsh.readSidecar(s, root)
       .getOrElse(sys.error("LSH sidecar did not round-trip"))
@@ -265,7 +265,7 @@ object VectorQueries extends QuerySet {
     val e = t(s, d, "embeddings").cache()
     val params = HnswIndex.Params(m = 16, efConstruction = 64, numSegments = 8)
     val graphs = HnswIndex.build(e, "embedding", "vec_id", params)
-    val root = java.nio.file.Files.createTempDirectory("graft-q82-hnsw").toString
+    val root = Scratch.dir(s, "q82-hnsw")
     HnswIndex.write(graphs, root, params)
     val loaded = HnswIndex.read(s, root)
     val loadedParams = HnswIndex.readParams(s, root)
@@ -577,7 +577,7 @@ object VectorQueries extends QuerySet {
     val e = t(s, d, "embeddings").cache()
     val dims = e.head().getSeq[Float](1).length
     val cb = PqIndex.train(e, "embedding", "vec_id", m = dims / 4, ks = 16, iters = 5)
-    val root = java.nio.file.Files.createTempDirectory("graft-q95-pq").toString
+    val root = Scratch.dir(s, "q95-pq")
     PqIndex.writeSidecar(s, root, cb)
     val loaded = PqIndex.readSidecar(s, root)
       .getOrElse(sys.error("PQ sidecar did not round-trip"))
@@ -607,7 +607,7 @@ object VectorQueries extends QuerySet {
     val ivf = IvfIndex.train(e, "embedding", "vec_id", numLists = 16, iters = 3,
       multiAssign = 4)
     val store = new DocumentStore(s,
-      java.nio.file.Files.createTempDirectory("graft-q103-ivfpq").toString)
+      Scratch.dir(s, "q103-ivfpq"))
     val idx = new IvfPq(ivf, cb, store, "ivfpq", "embedding", "vec_id")
     idx.build(e)
     val probe = probeVec(s, d, 0L)
@@ -820,7 +820,7 @@ object VectorQueries extends QuerySet {
     import graft.search.{HnswStore, RecallTuner}
     val e = t(s, d, "embeddings").cache()
     val store = new HnswStore(s,
-      java.nio.file.Files.createTempDirectory("graft-q148").toString)
+      Scratch.dir(s, "q148"))
     store.build(e.filter(col("vec_id") % 5 =!= 0), "embedding", "vec_id")
     store.add(e.filter(col("vec_id") % 5 === 0), "embedding", "vec_id")
     val graphs = store.graphs.cache()

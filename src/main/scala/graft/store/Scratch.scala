@@ -5,49 +5,64 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Output-sized scratch rematerialization — the unpinned alternative to
-  * returning a `localCheckpoint` plan from an operator.
+/** The one owner of every directory a query or a harness creates: store
+  * and index roots, streaming sources and checkpoints, staged files and
+  * output-sized rematerializations all come from here, and nothing in
+  * `src/main` mints a temp directory of its own.
   *
-  * The r13→r17 lesson: an operator that returns a plan over its own
-  * local checkpoint leaves ONE pinned RDD in the shared JVM per call
-  * (`getPersistentRDDs` holds it until the caller's reference is GC'd),
-  * and in a long-lived session those blocks accumulate and tax every
-  * neighboring query. Writing the RESULT (never the corpus) once to
-  * scratch parquet and returning a clean scan costs one output-sized
-  * write, pins nothing, and is the more cluster-correct shape anyway:
-  * local checkpoint blocks cannot be recomputed after executor loss,
-  * while a scratch file can be re-read by any executor.
-  *
-  * Scratch root resolution:
+  * Root. Every directory lives under one root:
   *   - `spark.graft.scratchDir` if set — on a real cluster point this at
-  *     shared storage (HDFS/object store), exactly like a reliable
-  *     checkpoint dir;
-  *   - otherwise a per-JVM temp directory, deleted on JVM exit — and
-  *     ONLY legal under a `local[*]` master: on a multi-executor cluster
-  *     a driver-local temp root would have each executor write to its
-  *     own filesystem and the read back silently miss data, so the
-  *     default root REFUSES non-local masters loudly (an r18 advisor
-  *     finding) instead of corrupting results.
+  *     shared storage, exactly like a reliable checkpoint dir (the
+  *     directories of [[dir]] are created through `java.nio`, so those
+  *     need a locally mounted path);
+  *   - otherwise a per-JVM temp directory whose shutdown hook deletes it
+  *     and whatever is left in it at exit. That root is ONLY legal under
+  *     a `local[*]` master: on a multi-executor cluster a driver-local
+  *     root would have each executor write to its own filesystem and the
+  *     read back silently miss data, so it REFUSES non-local masters
+  *     loudly instead of corrupting results.
   *
-  * Disk hygiene (an r18 advisor finding — scratch dirs used to live
-  * until JVM exit): every written path is REGISTERED, releasable two
-  * ways:
-  *   - precisely, via the path handle ([[materializeTracked]] /
-  *     [[release]]) — the iterative operators free each iteration's dir
-  *     as soon as the successor lands;
-  *   - in bulk, via [[sweep]] — the harness hook Verify/Bench run
-  *     between queries, mirroring their persistent-RDD sweep, so a
-  *     long-lived session's scratch disk is bounded by one query's
-  *     output, not the session's history.
+  * Per-query directories. [[dir]] and [[materializeTracked]] return a
+  * fresh path (never a reused one, so a second pass can never meet the
+  * previous pass's files) and REGISTER it. A registered directory is
+  * deleted precisely by [[release]] (the iterative operators free each
+  * iteration as soon as its successor lands; [[stage]] frees its write
+  * directory) or in bulk by [[sweep]].
+  *
+  * Cached directories. A per-process cache that hands a directory to a
+  * LATER query (a built index served by another gate) takes it out of
+  * the registry with [[keep]]: [[sweep]] then leaves it alone, it still
+  * lives under the root (so the exit hook deletes it), and the cache
+  * deletes a directory it replaces through [[release]].
+  *
+  * Between queries. [[reset]] is the one hygiene step every harness main
+  * runs before a query: clear the table cache, unpersist the RDDs the
+  * previous query left pinned, and sweep its directories — so a
+  * long-lived session's scratch disk is bounded by one query, not the
+  * session's history. It runs only after the previous result has been
+  * fully consumed: a scan still held over a swept dir fails on its next
+  * read, by design.
+  *
+  * Staging. [[stage]] feeds the streaming gates' file sources: it writes
+  * a frame the caller has already partitioned and moves the part files
+  * into a source directory with ascending modification times.
   */
 object Scratch {
+
+  /** File count for node-sized operator outputs (the graph operators'
+    * rank/label tables): a handful of right-sized parquet files instead
+    * of one shuffle-partition-count of tiny ones. */
+  val OutputFiles = 8
 
   private val seq = new AtomicLong(0L)
 
   @volatile private var defaultRoot: Option[Path] = None
 
-  /** Live (written, not yet released) scratch dirs. */
+  /** Registered directories: deleted by [[release]] or [[sweep]]. */
   private val live = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Directories handed to a cache by [[keep]]: deleted only by
+    * [[release]] (or with the root at exit). */
+  private val kept = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private def root(spark: SparkSession): String =
     spark.conf.getOption("spark.graft.scratchDir").getOrElse {
@@ -69,6 +84,9 @@ object Scratch {
       }
     }
 
+  private def fresh(spark: SparkSession, tag: String): String =
+    s"${root(spark)}/$tag-${seq.incrementAndGet()}"
+
   private def delete(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (Files.exists(p)) {
@@ -77,20 +95,35 @@ object Scratch {
     }
   }
 
+  /** A fresh, empty, registered directory under the root. */
+  def dir(spark: SparkSession, tag: String): String = {
+    val path = fresh(spark, tag)
+    Files.createDirectories(Paths.get(path))
+    live.add(path)
+    path
+  }
+
+  /** Take `path` out of the registry for a per-process cache: [[sweep]]
+    * leaves it alone; [[release]] still deletes it. Returns `path`. */
+  def keep(path: String): String = {
+    if (live.remove(path)) kept.add(path)
+    path
+  }
+
   /** Materialize `df` ONCE to scratch parquet and return a clean scan of
-    * it. The returned plan references no persisted blocks and no input
-    * lineage — callers may unpersist/close whatever `df` depended on as
-    * soon as this returns. Intended for OUTPUT-sized frames (a rank
-    * table, a keeper-id list, a per-doc offset map) — never for
-    * re-staging a corpus.
+    * it — the unpinned alternative to returning a plan over the
+    * operator's own `localCheckpoint`, which leaves one pinned RDD per
+    * call in the shared JVM until the caller's reference is GC'd. The
+    * returned plan references no persisted blocks and no input lineage,
+    * so callers may unpersist whatever `df` depended on as soon as this
+    * returns, and any executor can re-read the files after executor loss.
+    * Intended for OUTPUT-sized frames (a rank table, a keeper-id list, a
+    * per-doc offset map) — never for re-staging a corpus.
     *
-    * `coalesceTo > 0` coalesces the write to that many files — the
-    * node-sized results of the graph operators land as a handful of
-    * right-sized parquet files instead of one shuffle-partition-count of
-    * tiny ones (the r18 q155 bench overhead was mostly per-file
-    * open/commit cost). `df` is always a materialized leaf (checkpoint
-    * or parquet scan) at the call sites, so the coalesce narrows only
-    * the write job, never an upstream aggregation. */
+    * `coalesceTo > 0` coalesces the write to that many files. `df` is
+    * always a materialized leaf (checkpoint or parquet scan) at the call
+    * sites, so the coalesce narrows only the write job, never an
+    * upstream aggregation. */
   def rematerialize(df: DataFrame, tag: String, coalesceTo: Int = 0): DataFrame =
     materializeTracked(df, tag, coalesceTo)._1
 
@@ -99,36 +132,58 @@ object Scratch {
   def materializeTracked(df: DataFrame, tag: String,
                          coalesceTo: Int = 0): (DataFrame, String) = {
     val spark = df.sparkSession
-    val path = s"${root(spark)}/$tag-${seq.incrementAndGet()}"
+    val path = fresh(spark, tag)
     val w = if (coalesceTo > 0) df.coalesce(coalesceTo) else df
     w.write.mode("overwrite").parquet(path)
     live.add(path)
     (spark.read.parquet(path), path)
   }
 
-  /** Default file count for node-sized operator outputs
-    * (`spark.graft.scratchOutputFiles`, default 8; 0 = keep the input
-    * partitioning — set that on huge outputs where 8 files would mean
-    * multi-GB row groups). */
-  def outputFiles(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.scratchOutputFiles")
-      .map(_.trim.toInt).getOrElse(8)
+  /** Write `df` as parquet and move its part files into `into`, in part
+    * order, with modification times `modTime`, `modTime + 1 s`, ... —
+    * the file sources of the streaming gates order files by modification
+    * time, so the staged files become DETERMINISTIC micro-batches under
+    * `maxFilesPerTrigger` (the source's tie-break on equal times is not
+    * contractual). The caller partitions `df`: `coalesce(1)` for one file
+    * per batch, `repartitionByRange` for ascending event-time files (file
+    * k+1's min ≥ file k's max, so sequential batches never drop rows
+    * behind a watermark). The write directory is released on return. */
+  def stage(df: DataFrame, into: String, modTime: Long): Unit = {
+    val tmp = dir(df.sparkSession, "stage")
+    df.write.mode("overwrite").parquet(tmp)
+    new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
+        val dst = new java.io.File(into, f.getName)
+        Files.move(f.toPath, dst.toPath)
+        dst.setLastModified(modTime + i * 1000L)
+      }
+    release(tmp)
+  }
 
-  /** Delete one registered scratch dir. No-op for unknown paths (e.g.
-    * already swept). Callers must be done READING the scan returned for
-    * this path — the files go away immediately. */
+  /** Delete one directory made here (registered or kept). No-op for
+    * unknown paths (e.g. already swept). Callers must be done READING
+    * any scan over this path — the files go away immediately. */
   def release(path: String): Unit =
-    if (live.remove(path)) delete(Paths.get(path))
+    if (live.remove(path) | kept.remove(path)) delete(Paths.get(path))
 
-  /** Delete ALL registered scratch dirs; returns how many. The harness
-    * hook between queries (Verify/Bench), run only after the previous
-    * query's result has been fully consumed — any still-held scan over
-    * a swept dir fails on next read, by design. */
+  /** Delete ALL registered directories; returns how many. Kept
+    * directories survive. */
   def sweep(): Int = {
     import scala.jdk.CollectionConverters._
     val paths = live.asScala.toSeq
     paths.foreach(release)
     paths.size
+  }
+
+  /** The between-queries reset: clear the table cache, unpersist every
+    * persistent RDD, and [[sweep]]. Returns how many RDDs were
+    * unpersisted — nonzero means the previous query left blocks pinned. */
+  def reset(spark: SparkSession): Int = {
+    spark.catalog.clearCache()
+    val leaked = spark.sparkContext.getPersistentRDDs.values
+    leaked.foreach(_.unpersist(blocking = false))
+    sweep()
+    leaked.size
   }
 
   /** Registered-but-unreleased dir count (test/tripwire surface). */

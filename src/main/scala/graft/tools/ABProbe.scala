@@ -13,12 +13,9 @@ object ABProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.GraftSession.local(cpus, "graft-ab")
     val qmap = graft.SparkEntry.queries
-    val sc = spark.sparkContext
     qmap("q01_agg_pricing")(spark, sfDir).count()
     def once(n: String): Double = {
-      spark.catalog.clearCache()
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.store.Scratch.sweep()
+      graft.store.Scratch.reset(spark)
       val t0 = System.nanoTime()
       try { qmap(n)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch { case e: Throwable =>

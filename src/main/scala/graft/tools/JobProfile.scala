@@ -20,9 +20,7 @@ object JobProfile {
     // optional second warm pass of the target itself (per-process caches)
     if (sys.env.get("SPARK_GRAFT_PROFILE_WARM").contains("1")) {
       qmap(name)(spark, sfDir).count()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      graft.store.Scratch.sweep()
+      graft.store.Scratch.reset(spark)
     }
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long, String, Int)]()

@@ -24,7 +24,7 @@ object Q103Probe {
       val ivf = time(s"r$round ivf train")(
         IvfIndex.train(e, "embedding", "vec_id", numLists = 16, iters = 3, multiAssign = 4))
       val store = new DocumentStore(spark,
-        java.nio.file.Files.createTempDirectory("graft-q103-probe").toString)
+        graft.store.Scratch.dir(spark, "q103-probe"))
       val idx = new IvfPq(ivf, cb, store, "ivfpq", "embedding", "vec_id")
       time(s"r$round build")(idx.build(e))
       val probe = e.filter(col("vec_id") === 0L).head().getSeq[Float](1).toArray
