@@ -24,10 +24,8 @@ object Bench {
     val spark = GraftSession.local(cpus, "graft-bench")
     // Local-iteration filter, mirroring Verify's: SPARK_GRAFT_ONLY=q155
     // times only matching headline queries. Unset (the driver) = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val names = SparkEntry.headlineQueries
-      .filter(n => only.forall(_.exists(n.startsWith)))
-    val qmap = SparkEntry.queries
+    val only = SparkEntry.only
+    val names = SparkEntry.select(SparkEntry.headlineQueries, only)
     def loadavg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
@@ -56,7 +54,7 @@ object Bench {
     val startLoad = loadavg
     val dirtyStart = startLoad >= quietBelow
     // one warm-up pass over a cheap query to absorb codegen/JIT cost
-    qmap(names.head)(spark, sfDir).count()
+    SparkEntry.queries(names.head)(spark, sfDir).count()
     // POLLUTION TRIPWIRE (r13 finding: one query leaking localCheckpoint
     // blocks inflated every OTHER query's timing by 18-31% — the
     // published artifact regressed while the code got faster). Before
@@ -69,18 +67,16 @@ object Bench {
     var prevQuery = "warmup"
     // failures surface as -1 in the JSON, never as a fast-looking timing
     def once(name: String): Double = {
-      // drop cached intermediates so the second run measures the query's
-      // real compute, not a warm cache (q42 caches its minhash base)
-      // and the previous query's scratch dirs (result already counted)
-      val leaked = graft.store.Scratch.reset(spark)
-      sweptInPass += leaked
+      // the reset drops cached intermediates so the second run measures
+      // the query's real compute, not a warm cache (q42 caches its
+      // minhash base), and the previous query's scratch dirs
+      val run = graft.tools.Profile.once(spark, name, sfDir)
+      sweptInPass += run.swept
       // attribution for the tripwire: WHICH query left the blocks
-      if (leaked > 0)
-        System.err.println(s"[bench] swept $leaked RDD(s) left by $prevQuery")
+      if (run.swept > 0)
+        System.err.println(s"[bench] swept ${run.swept} RDD(s) left by $prevQuery")
       prevQuery = name
-      val t0 = System.nanoTime()
-      try { qmap(name)(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case _: Throwable => -1.0 }
+      run.sec
     }
     def heapUsedMb: Long = {
       val rt = Runtime.getRuntime

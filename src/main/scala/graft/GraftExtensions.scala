@@ -5,10 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.VectorFunctions
 
-/** Cluster-wide installation point for the engine's native functions.
+/** The one installation point for the engine's native functions.
   *
-  * `GraftSession.local` registers the functions per-session for the
-  * driver-owned entry points; this class is the production path —
+  * `GraftSession.local` installs it for the driver-owned entry points
+  * and the tests; on a cluster
   * `spark.sql.extensions=graft.GraftExtensions` in spark-defaults makes
   * every function of [[VectorFunctions.sqlFunctions]] (the vector,
   * int8-quantized and PQ kernels) available to every session on the

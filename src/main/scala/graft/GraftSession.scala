@@ -14,6 +14,11 @@ import org.apache.spark.sql.SparkSession
   *  - nanosAsLong: the `events` table ships TIMESTAMP(NANOS) parquet,
   *    which vanilla Spark refuses; we read it as long and rebuild a
   *    micro-precision timestamp in [[Tables]].
+  *
+  * The engine's SQL functions install through [[GraftExtensions]], the
+  * same path `spark.sql.extensions` takes on a cluster. Extensions apply
+  * when a session is created, so a session that already exists (an
+  * earlier `local` call in the JVM) is returned as it is.
   */
 object GraftSession {
   def local(cpus: String, appName: String = "graft"): SparkSession = {
@@ -25,9 +30,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.VectorFunctions.register(spark)
     spark
   }
 }

@@ -5,17 +5,17 @@ package graft
   * LINT that no scale-sensitive query ships without a measured 10×
   * row (the r17 verdict's "scale-row discipline as a lint").
   *
-  * Measured by [[ScaleRows]] (one warm-up + one timed run per sf on a
-  * quiet 32-cpu box; sf1 is the [[ScaleSmoke]] workload-shape-preserving
-  * synthetic). Rows are (sf0.1 sec, sf1 sec). Ratios near 1 are
+  * Measured by the `scale` mode of [[graft.tools.Profile]] (one warm-up
+  * + one timed run per sf on a quiet 32-cpu box; sf1 is the
+  * [[ScaleSmoke]] workload-shape-preserving synthetic). Rows are (sf0.1 sec, sf1 sec). Ratios near 1 are
   * fixed-cost-dominated; ratios near 10 are linear in the data; the
   * interesting band is what sits far ABOVE 10 (superlinear — a design
   * bug) — nothing does.
   *
-  * Rows are STEADY-STATE as of r19: ScaleRows warms BOTH scales before
+  * Rows are STEADY-STATE as of r19: the scale rows warm BOTH scales before
   * timing (the r18 rows folded the first index build / cache fill into
   * the sf1 number — q159_serve read 19.6× when its steady-state serve
-  * is flat; the cold first-run number is still printed by ScaleRows as
+  * is flat; the cold first-run number is still printed by that mode as
   * `sf1_cold_sec` so build-cost regressions stay visible, e.g. r19
   * capture: q172_gate cold 26.4 s / steady 3.1 s, q159_serve cold
   * 5.1 s / steady 0.26 s).

@@ -39,6 +39,11 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
 
   private val Copies = 10
+
+  /** Where the sf1-equivalent is built unless a caller names a dir (r11
+    * scales part and events too, hence a new dir). */
+  private[graft] val DefaultOutDir = "/tmp/graft-sf1-r11"
+
   private val IdStride = 100000000L
 
   private def scaleDocuments(src: DataFrame): DataFrame =
@@ -138,7 +143,7 @@ object ScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val srcDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val outDir = args.lift(1).getOrElse("/tmp/graft-sf1-r11") // new dir: r11 scales part+events too
+    val outDir = args.lift(1).getOrElse(DefaultOutDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus, "graft-scale-smoke")
     buildIfMissing(spark, srcDir, outDir)
@@ -327,22 +332,12 @@ object ScaleSmoke {
       // q313 streaming: per-trigger cost tracks the batch; ledger state
       // is four numbers per batch
       "q313_streaming_anytime")
-    val qmap = SparkEntry.queries
     // Local-iteration filter (the Verify/Bench idiom): SPARK_GRAFT_ONLY
     // runs only matching smoke queries — new rows don't force re-paying
     // the measured ones. Unset = the full list.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val picked = names.filter(n => only.forall(_.exists(n.startsWith)))
-    qmap("q01_agg_pricing")(spark, outDir).count() // warm-up: codegen/JIT
-    val results = picked.map { name =>
-      graft.store.Scratch.reset(spark)
-      val t0 = System.nanoTime()
-      val rows = try qmap(name)(spark, outDir).count()
-      catch { case e: Throwable =>
-        System.err.println(s"[smoke] $name failed: ${e.getMessage}"); -1L }
-      val secs = (System.nanoTime() - t0) / 1e9
-      (name, secs, rows)
-    }
+    val picked = SparkEntry.select(names, SparkEntry.only)
+    SparkEntry.queries("q01_agg_pricing")(spark, outDir).count() // warm-up: codegen/JIT
+    val results = picked.map(name => graft.tools.Profile.once(spark, name, outDir))
     // Serve-default probe for the r12 q103 finding: the gate query pins
     // nprobe=4/shortlist=100 for oracle replay, and at 10× corpus that
     // fixed point drops below the 0.9 recall gate (rows=0 above — the
@@ -420,8 +415,8 @@ object ScaleSmoke {
         s""""wedge_bound_dropped":${rep.wedgeBoundDropped}}"""
     } catch { case e: Throwable =>
       s""","q188_autocap":{"error":"${e.getMessage.take(80).replace('"', ' ')}"}""" }
-    val qs = results.map { case (n, s, r) =>
-      "\"" + n + "\":{\"sec\":" + f"$s%.2f" + ",\"rows\":" + r + "}"
+    val qs = results.map { r =>
+      "\"" + r.name + "\":{\"sec\":" + f"${r.sec}%.2f" + ",\"rows\":" + r.rows + "}"
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scale_smoke","sf":"$outDir","copies":$Copies,""" +
       s""""queries":$qs,"domainmix_fallbacks":${graft.operators.DomainMix.fallbacks.get()}""" +

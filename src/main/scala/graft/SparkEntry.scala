@@ -39,4 +39,15 @@ object SparkEntry {
 
   /** The subset Bench times (headline = scale-sensitive plans). */
   def headlineQueries: Seq[String] = all.filter(_.headline).map(_.name)
+
+  /** The local-iteration filter of Verify, Bench and ScaleSmoke:
+    * `SPARK_GRAFT_ONLY=q85,q86` keeps the names that start with one of the
+    * prefixes. Unset (the driver) = no filter. */
+  def only: Option[Seq[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
+
+  /** The names of `among`, in its order, that start with one of
+    * `prefixes`; `None` keeps them all. */
+  def select(among: Seq[String], prefixes: Option[Seq[String]]): Seq[String] =
+    among.filter(n => prefixes.forall(_.exists(n.startsWith)))
 }

@@ -13,8 +13,7 @@ object Verify {
     // Local-iteration filter: SPARK_GRAFT_ONLY=q85,q86 restricts the run
     // (and the dumped oracle json) to queries whose name starts with one
     // of the prefixes. Unset (the driver) = full gate.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
+    val keep = SparkEntry.select(SparkEntry.queries.keys.toSeq, SparkEntry.only).toSet
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       // the previous query's result is fully written by now: drop its
       // cache, leaked blocks (the r13 q250 pollution class) and dirs

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -432,10 +431,8 @@ object VectorFunctions {
   def pq_encode(v: Column, centroids: Array[Float], m: Int, ks: Int, dsub: Int): Column =
     col(PqEncode(e(v), centroids, m, ks, dsub))
 
-  /** The one SQL function table — (name, usage, arity, builder) — that
-    * both install paths read: [[register]] (per session) and
-    * [[graft.GraftExtensions]] (cluster-wide `spark.sql.extensions`),
-    * so the two can never offer different functions. */
+  /** The SQL function table — (name, usage, arity, builder) — that
+    * [[graft.GraftExtensions]] installs in every session. */
   private[graft] val sqlFunctions
       : Seq[(String, String, Int, Seq[Expression] => Expression)] = Seq(
     ("vec_dot", "vec_dot(a, b) - dot product of two float vectors", 2,
@@ -466,13 +463,5 @@ object VectorFunctions {
         "expectedNum" -> arity.toString, "actualNum" -> xs.length.toString,
         "docroot" -> "https://spark.apache.org/docs/latest"))
     build(xs)
-  }
-
-  /** Register as SQL functions so `spark.sql("... cosine_sim(a,b) ...")` works. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    sqlFunctions.foreach { case (name, _, arity, build) =>
-      reg.createOrReplaceTempFunction(name, checkedBuilder(name, arity, build), "scala_udf")
-    }
   }
 }

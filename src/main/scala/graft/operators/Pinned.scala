@@ -39,22 +39,11 @@ object Pinned {
     Df(out, sc.getPersistentRDDs.keySet.toSet.diff(before))
   }
 
-  /** Measurement-only escape hatch: `-Dgraft.pin.disable=true` makes
-    * [[withCheckpoint]] run its body on the UN-pinned frame (the naive
-    * re-scan plan), so the pinned-vs-naive cost of the SAME operator can
-    * be A/B-measured in one JVM (graft.PinProbe). Never set in
-    * production paths — results are identical either way, only the
-    * physical plan differs. */
-  private def disabled: Boolean =
-    sys.props.get("graft.pin.disable").contains("true")
-
   /** `checkpoint` + try/finally release around `body` — for operators
     * whose result no longer references the pinned frame (driver-side
     * rows, literal closes, written output). */
-  def withCheckpoint[T](df: DataFrame)(body: DataFrame => T): T =
-    if (disabled) body(df)
-    else {
-      val p = checkpoint(df)
-      try body(p.df) finally p.release()
-    }
+  def withCheckpoint[T](df: DataFrame)(body: DataFrame => T): T = {
+    val p = checkpoint(df)
+    try body(p.df) finally p.release()
+  }
 }

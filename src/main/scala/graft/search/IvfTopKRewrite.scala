@@ -28,10 +28,12 @@ import graft.functions.CosineSimilarity
   */
 case class IvfTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
+  // get-with-default, never `getOption`: on an unset key `getOption`
+  // builds and catches an exception, and every session runs this rule on
+  // each optimizer iteration of every plan
   private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.ivf.rewrite.enabled").contains("true")
-  private def nprobe: Int =
-    spark.conf.getOption("spark.graft.ivf.nprobe").map(_.toInt).getOrElse(1)
+    spark.conf.get("spark.graft.ivf.rewrite.enabled", "false") == "true"
+  private def nprobe: Int = spark.conf.get("spark.graft.ivf.nprobe", "1").toInt
 
   // deliberately uncached: an index rewritten in place (write is
   // mode=overwrite) must be re-read, and a path that gains a sidecar

@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with SparkSuite {
+
+  private val functions = Seq("vec_dot", "cosine_sim", "l2_dist_sq", "l2_norm",
+    "vec_quantize_i8", "cosine_sim_i8", "vec_dequantize_i8", "pq_adc_dot")
 
   test("SparkSessionExtensions path registers the vector functions") {
     // Force a genuinely new session (getOrCreate would silently reuse the
@@ -40,8 +43,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("cosine_sim"))
       // the quantized and PQ kernels install through the same path
-      for (f <- Seq("vec_dot", "cosine_sim", "l2_dist_sq", "l2_norm", "vec_quantize_i8",
-          "cosine_sim_i8", "vec_dequantize_i8", "pq_adc_dot"))
+      for (f <- functions)
         assert(s.catalog.functionExists(f), s"$f not installed by GraftExtensions")
       val q = s.sql(
         """SELECT cosine_sim_i8(vec_quantize_i8(v).q, vec_quantize_i8(v).q) AS c,
@@ -60,5 +62,16 @@ class GraftExtensionsSpec extends AnyFunSuite {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
     }
+  }
+
+  test("GraftSession.local installs all eight functions through the extensions") {
+    for (f <- functions)
+      assert(spark.catalog.functionExists(f), s"$f not installed by GraftSession.local")
+    val r = spark.sql(
+      """SELECT vec_dot(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))) AS d,
+        |       cosine_sim_i8(vec_quantize_i8(v).q, vec_quantize_i8(v).q) AS c
+        |FROM (SELECT array(CAST(3.0 AS FLOAT), CAST(-1.0 AS FLOAT)) AS v)
+        |""".stripMargin).head()
+    assert(r.getDouble(0) == 6.0 && math.abs(r.getDouble(1) - 1.0) < 1e-12)
   }
 }

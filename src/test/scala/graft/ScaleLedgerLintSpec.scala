@@ -13,7 +13,7 @@ class ScaleLedgerLintSpec extends AnyFunSuite {
   test("every headline query has a measured scale row") {
     val missing = SparkEntry.headlineQueries.filterNot(ScaleLedger.rows.contains)
     assert(missing.isEmpty,
-      s"headline queries without a ScaleLedger row (run graft.ScaleRows " +
+      s"headline queries without a ScaleLedger row (run graft.tools.Profile scale " +
         s"and add the measured numbers): ${missing.mkString(", ")}")
   }
 
@@ -22,7 +22,7 @@ class ScaleLedgerLintSpec extends AnyFunSuite {
       assert(r.sf01Sec > 0 && r.sf1Sec > 0, s"$q carries a non-positive time")
       // 10x data must not cost more than ~12x time (allowing measurement
       // noise over the linear bound); far above that = superlinear
-      // design. Rows are STEADY-STATE as of r19 (ScaleRows warms both
+      // design. Rows are STEADY-STATE as of r19 (the scale rows warm both
       // scales), so cold-build folds no longer excuse a high ratio —
       // the only escape is the sub-second fixed-cost noise domain
       // (was `sf1 < 60`, which would have excused a real 19x serve

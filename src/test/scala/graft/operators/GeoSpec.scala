@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
+import graft.store.Scratch
 
 class GeoSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -59,7 +59,7 @@ class GeoSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("bounding-box prefilter reaches the parquet scan as pushed filters") {
-    val dir = Files.createTempDirectory("graft-geo").toString + "/pts"
+    val dir = Scratch.dir(spark, "geo") + "/pts"
     Seq((1L, 10.0, 20.0), (2L, 50.0, 60.0)).toDF("id", "lat", "lon")
       .write.parquet(dir)
     // default metadata truncation (100 chars) cuts the PushedFilters list

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
+import graft.store.Scratch
 
 class KeywordRankSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -69,7 +70,7 @@ class KeywordRankSpec extends AnyFunSuite with SparkSuite {
     assert(direct.sameElements(indexed)) // ids AND raw double scores
     // third leg: the PERSISTED index serve path (bucket-pruned postings,
     // corpus stats from the maintained meta row) — same raw doubles
-    val dir = java.nio.file.Files.createTempDirectory("graft-kw-served").toString
+    val dir = Scratch.dir(spark, "kw-served")
     graft.search.InvertedIndex.build(docs, "doc_id", "text", dir,
       tok = graft.search.InvertedIndex.TokAlnum)
     val served = graft.search.InvertedIndex.searchBm25(spark, dir, terms)

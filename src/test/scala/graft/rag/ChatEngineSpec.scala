@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.model.Product
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Golden end-to-end slice (SURVEY §7.2) + the Cosmic-Socks add/remove
   * scenario (README.md:184-194, FIXTURES.md A). */
@@ -30,7 +31,7 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
       "aero tour helmet", 44.99))
 
   private def newEngine() = {
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-rag").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "rag"))
     val eng = new ChatEngine(spark, store, maxSearchResults = 4)
     eng.ingest("products",
       products.toDS().toDF().withColumn("doc_text",
@@ -143,7 +144,7 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
         super.read(table)
       }
     }
-    val store = new CountingStore(Files.createTempDirectory("graft-rag-cache").toString)
+    val store = new CountingStore(Scratch.dir(spark, "rag-cache"))
     val eng = new ChatEngine(spark, store, maxSearchResults = 4)
     eng.ingest("products", products.toDS().toDF().withColumn("doc_text",
       org.apache.spark.sql.functions.col("description")), textCol = "doc_text")
@@ -199,7 +200,7 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("deleteSession crash-replay: a died committer leaves state intact; replay completes it") {
-    val root = Files.createTempDirectory("graft-rag-crash").toString
+    val root = Scratch.dir(spark, "rag-crash")
     val store = new DocumentStore(spark, root)
     val eng = new ChatEngine(spark, store, maxSearchResults = 4)
     eng.ingest("products", products.toDS().toDF().withColumn("doc_text",
@@ -228,7 +229,7 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
 
   test("chunked ingest + doc-level retrieval: best chunk wins, no duplicate docs") {
     import org.apache.spark.sql.functions.col
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-chunked").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "chunked"))
     val eng = new ChatEngine(spark, store)
     val filler = (1 to 30).map(i => s"filler$i").mkString(" ")
     val docs = Seq(
@@ -248,7 +249,7 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
   test("chunked retrieval rides the strategy seam: exact | ivf | hnsw agree >= 0.9") {
     import org.apache.spark.sql.functions.col
     import graft.search.{ExactSearcher, HnswIndex, HnswSearcher, IvfIndex, IvfSearcher, IvfStore}
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-chunk-strat").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "chunk-strat"))
     val exactEng = new ChatEngine(spark, store)
     val docs = graft.Tables.t(spark, sf, "documents").select("doc_id", "text")
     exactEng.ingestChunked("chunks", docs, "doc_id", "text", chunkSize = 16, stride = 12)
@@ -284,7 +285,7 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
   test("retrieval strategies (exact | ivf | hnsw | quantized | pq) agree at recall >= 0.9") {
     import org.apache.spark.sql.functions.col
     import graft.search.{ExactSearcher, HnswIndex, HnswSearcher, IvfIndex, IvfSearcher, IvfStore, PqIndex, PqSearcher, QuantizedSearcher}
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-rag-strat").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "rag-strat"))
     val exactEng = new ChatEngine(spark, store)
     // numeric-id corpus (HNSW ids must cast to long)
     val docs = graft.Tables.t(spark, sf, "documents").select("doc_id", "text")

@@ -1,11 +1,11 @@
 package graft.search
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Filtered (metadata predicate + top-k) search across every
   * [[VectorSearcher]] strategy: results must all satisfy the predicate,
@@ -22,7 +22,7 @@ class FilteredSearchSpec extends AnyFunSuite with SparkSuite {
     val ivfIdx = IvfIndex.train(emb, "embedding", "vec_id", numLists = 8, iters = 2,
       multiAssign = 2)
     val store = new DocumentStore(spark,
-      Files.createTempDirectory("graft-filtered").toString)
+      Scratch.dir(spark, "filtered"))
     val ivf = new IvfStore(store, "vecs", ivfIdx, "embedding", "vec_id")
     ivf.build(emb)
     val graphs = HnswIndex.build(emb, "embedding", "vec_id").cache()
@@ -30,7 +30,7 @@ class FilteredSearchSpec extends AnyFunSuite with SparkSuite {
     val encoded = PqIndex.encode(cb, emb, "embedding")
       .select($"vec_id", $"pq_codes", $"norm").cache()
     val ivfpq = new IvfPq(ivfIdx, cb,
-      new DocumentStore(spark, Files.createTempDirectory("graft-filtered-pq").toString),
+      new DocumentStore(spark, Scratch.dir(spark, "filtered-pq")),
       "ivfpq", "embedding", "vec_id")
     ivfpq.build(emb)
     Seq(

@@ -1,10 +1,10 @@
 package graft.search
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
+import graft.store.Scratch
 
 /** Proof obligations for the segmented HNSW index (the engine's analog of
   * the reference's `kind: vector-hnsw`, MongoDbService.cs:119-143):
@@ -47,7 +47,7 @@ class HnswSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("sidecar write/read round-trip preserves params and answers") {
-    val root = Files.createTempDirectory("graft-hnsw").toString
+    val root = Scratch.dir(spark, "hnsw")
     val p = HnswIndex.Params(m = 16, efConstruction = 64, numSegments = 4)
     HnswIndex.write(graphs, root, p)
     assert(HnswIndex.readParams(spark, root).contains(p))

@@ -1,10 +1,10 @@
 package graft.search
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
+import graft.store.Scratch
 
 /** The reference's add/remove lifecycle (AddRemoveData.cs:64-105 — a new
   * product searchable in near-real-time; upsert MongoDbService.cs:241-269,
@@ -22,7 +22,7 @@ class HnswStoreSpec extends AnyFunSuite with SparkSuite {
 
   private def fresh(frac: Double = 0.5) = {
     val store = new HnswStore(spark,
-      Files.createTempDirectory("graft-hnsw-store").toString,
+      Scratch.dir(spark, "hnsw-store"),
       HnswIndex.Params(m = 8, efConstruction = 48, numSegments = 4),
       maxTombstoneFrac = frac)
     store.build(emb, "embedding", "vec_id")
@@ -103,7 +103,7 @@ class HnswStoreSpec extends AnyFunSuite with SparkSuite {
 
   test("segment count past threshold triggers a merging rebuild (insert-only churn)") {
     val store = new HnswStore(spark,
-      Files.createTempDirectory("graft-hnsw-segs").toString,
+      Scratch.dir(spark, "hnsw-segs"),
       HnswIndex.Params(m = 8, efConstruction = 48, numSegments = 4),
       maxSegments = 6)
     store.build(emb, "embedding", "vec_id")

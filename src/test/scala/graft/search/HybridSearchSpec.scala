@@ -2,6 +2,7 @@ package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
+import graft.store.Scratch
 
 class HybridSearchSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -51,7 +52,7 @@ class HybridSearchSpec extends AnyFunSuite with SparkSuite {
       .select($"doc_id", $"rnk").cache()
 
     val ivfIdx = IvfIndex.train(emb, "embedding", "doc_id", numLists = 8, iters = 2, multiAssign = 2)
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-hybrid").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "hybrid"))
     val ivf = new IvfStore(store, "vecs", ivfIdx, "embedding", "doc_id")
     ivf.build(emb)
     val graphs = HnswIndex.build(emb, "embedding", "doc_id").cache()
@@ -59,7 +60,7 @@ class HybridSearchSpec extends AnyFunSuite with SparkSuite {
     val encoded = PqIndex.encode(cb, emb, "embedding")
       .select($"doc_id", $"pq_codes", $"norm").cache()
     val ivfpq = new IvfPq(ivfIdx, cb,
-      new DocumentStore(spark, Files.createTempDirectory("graft-hybrid-ivfpq").toString),
+      new DocumentStore(spark, Scratch.dir(spark, "hybrid-ivfpq")),
       "ivfpq", "embedding", "doc_id")
     ivfpq.build(emb)
 

@@ -1,11 +1,11 @@
 package graft.search
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.operators.KeywordRank
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
 
@@ -21,7 +21,7 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
   }
 
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-invidx").toString
+    val d = Scratch.keep(Scratch.dir(spark, "invidx")) // shared by the suite
     InvertedIndex.build(corpus, "doc_id", "text", d, buckets = 8)
     d
   }
@@ -70,7 +70,7 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
     // emoji + CJK terms: UTF-16 code-unit vs code-point folding disagree
     // here — one shared Column expression makes drift impossible
     import spark.implicits._
-    val d = Files.createTempDirectory("graft-invidx-bmp").toString
+    val d = Scratch.dir(spark, "invidx-bmp")
     val docs = Seq((1L, "漢字 🦄 plain"), (2L, "🦄 🦄 other")).toDF("doc_id", "text")
     InvertedIndex.build(docs, "doc_id", "text", d, buckets = 8)
     val uni = InvertedIndex.search(spark, d, Seq("🦄"), k = 10)
@@ -84,7 +84,7 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
   // ---- incremental maintenance ----------------------------------------
 
   private def freshIndex(): String = {
-    val d = Files.createTempDirectory("graft-invidx-inc").toString
+    val d = Scratch.dir(spark, "invidx-inc")
     InvertedIndex.build(corpus, "doc_id", "text", d, buckets = 8)
     d
   }
@@ -144,7 +144,7 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
       (5L, "fig grape"),
       (7L, "apple grape")
     ).toDF("doc_id", "text")
-    val d2 = Files.createTempDirectory("graft-invidx-rebuild").toString
+    val d2 = Scratch.dir(spark, "invidx-rebuild")
     InvertedIndex.build(cur, "doc_id", "text", d2, buckets = 8)
     Seq("postings", "docmap", "meta").foreach { t =>
       assert(tableHashEq(d, d2, t), s"table $t diverged from rebuild")
@@ -176,7 +176,7 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
       (3L, "Nothing relevant here at all."),
       (4L, "Dog... dog... DOG (and fox).")
     ).toDF("doc_id", "text")
-    val d = Files.createTempDirectory("graft-invidx-bm25").toString
+    val d = Scratch.dir(spark, "invidx-bm25")
     InvertedIndex.build(docs, "doc_id", "text", d, buckets = 8,
       tok = InvertedIndex.TokAlnum)
     val terms = Seq("quick", "dog")
@@ -314,13 +314,13 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
     spark.conf.set("spark.graft.index.docsPerBucket", "2")
     try {
       val docs = (1L to 20L).map(i => (i, s"term$i shared word")).toDF("doc_id", "text")
-      val d1 = Files.createTempDirectory("graft-adapt-a").toString
+      val d1 = Scratch.dir(spark, "adapt-a")
       InvertedIndex.build(docs, "doc_id", "text", d1)
       assert(InvertedIndex.layoutBuckets(spark, d1) == 10)
       // mutate: remove 4 docs through the maintenance path
       InvertedIndex.remove(spark, d1, Seq(17L, 18L, 19L, 20L))
       val mutated = docs.filter(col("doc_id") <= 16)
-      val d2 = Files.createTempDirectory("graft-adapt-b").toString
+      val d2 = Scratch.dir(spark, "adapt-b")
       InvertedIndex.build(mutated, "doc_id", "text", d2,
         buckets = InvertedIndex.layoutBuckets(spark, d1))
       val sA = new DocumentStore(spark, d1)
@@ -351,7 +351,7 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
   test("meta memo stays bounded: one live version per index path") {
     import spark.implicits._
     val docs = (1L to 6L).map(i => (i, s"w$i common")).toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("graft-memo").toString
+    val dir = Scratch.dir(spark, "memo")
     InvertedIndex.build(docs, "doc_id", "text", dir)
     val before = InvertedIndex.metaCacheSize
     // 6 mutation epochs: each bumps the meta version; the memo must not

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
 import graft.functions.VectorFunctions.cosine_sim
+import graft.store.Scratch
 
 class IvfRewriteSpec extends AnyFunSuite with SparkSuite {
 
@@ -13,7 +14,7 @@ class IvfRewriteSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val indexPath = {
     val idx = IvfIndex.train(emb, "embedding", "vec_id", numLists = 8, iters = 2)
-    val p = java.nio.file.Files.createTempDirectory("graft-ivf-rw").toString
+    val p = Scratch.keep(Scratch.dir(spark, "ivf-rw")) // shared by the suite
     idx.write(emb, "embedding", p)
     p
   }
@@ -25,17 +26,15 @@ class IvfRewriteSpec extends AnyFunSuite with SparkSuite {
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(k)
 
+  /** The session already carries the rule (GraftSession installs
+    * GraftExtensions); this only switches it on. */
   private def withRule[A](nprobe: Int)(f: => A): A = {
-    val rule = IvfTopKRewrite(spark)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ rule
     spark.conf.set("spark.graft.ivf.rewrite.enabled", "true")
     spark.conf.set("spark.graft.ivf.nprobe", nprobe.toString)
     try f
     finally {
       spark.conf.set("spark.graft.ivf.rewrite.enabled", "false")
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq rule)
+      spark.conf.unset("spark.graft.ivf.nprobe")
     }
   }
 
@@ -72,7 +71,7 @@ class IvfRewriteSpec extends AnyFunSuite with SparkSuite {
 
   test("paths without a sidecar are never rewritten") {
     withRule(nprobe = 2) {
-      val plainPath = java.nio.file.Files.createTempDirectory("graft-plain").toString
+      val plainPath = Scratch.dir(spark, "plain")
       emb.write.mode("overwrite").parquet(plainPath)
       val q = spark.read.parquet(plainPath)
         .withColumn("sim", cosine_sim(col("embedding"), typedlit(probe)))

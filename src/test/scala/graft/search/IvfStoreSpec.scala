@@ -1,11 +1,11 @@
 package graft.search
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** The reference's add/remove lifecycle (AddRemoveData.cs:64-105,
   * README.md:182-194) over the IVF-partitioned versioned store: a new
@@ -18,7 +18,7 @@ class IvfStoreSpec extends AnyFunSuite with SparkSuite {
   private def freshIvf() = {
     val emb = t(spark, sf, "embeddings")
     val idx = IvfIndex.train(emb, "embedding", "vec_id", numLists = 4, iters = 2)
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-ivf").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "ivf"))
     val ivf = new IvfStore(store, "vecs", idx, "embedding", "vec_id")
     ivf.build(emb)
     (ivf, store, emb)
@@ -116,7 +116,7 @@ class IvfStoreSpec extends AnyFunSuite with SparkSuite {
   test("remove on a missing or empty table is a no-op") {
     val emb = t(spark, sf, "embeddings")
     val idx = IvfIndex.train(emb, "embedding", "vec_id", numLists = 2, iters = 1)
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-ivf-empty").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "ivf-empty"))
     val ivf = new IvfStore(store, "nope", idx, "embedding", "vec_id")
     ivf.remove(Seq(1L, 2L)) // must not throw on the absent table
     assert(!store.exists("nope"))

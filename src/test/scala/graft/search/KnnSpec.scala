@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
+import graft.store.Scratch
 
 class KnnSpec extends AnyFunSuite with SparkSuite {
 
@@ -94,7 +95,7 @@ class KnnSpec extends AnyFunSuite with SparkSuite {
   test("IVF written index: plan-time partition pruning on centroid_id dirs") {
     val idx = IvfIndex.train(emb, "embedding", "vec_id",
       numLists = 8, iters = 2, multiAssign = 2)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val path = Scratch.dir(spark, "ivf")
     idx.write(emb, "embedding", path)
     val indexed = idx.read(spark, path)
     val hits = idx.search(indexed, "embedding", "vec_id", probe, 10, nprobe = 2)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
+import graft.store.Scratch
 
 class LshSpec extends AnyFunSuite with SparkSuite {
 
@@ -48,7 +49,7 @@ class LshSpec extends AnyFunSuite with SparkSuite {
 
   test("hyperplane-bank sidecar round-trips bit-exactly") {
     val lsh = HyperplaneLsh(dims = 64, bits = 8, numTables = 4, seed = 9L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-sc").toString
+    val dir = Scratch.dir(spark, "lsh-sc")
     HyperplaneLsh.writeSidecar(spark, dir, lsh)
     val back = HyperplaneLsh.readSidecar(spark, dir).get
     assert(back.numTables == lsh.numTables && back.bits == lsh.bits)

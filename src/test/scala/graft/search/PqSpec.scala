@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
 import graft.functions.VectorFunctions.pq_adc_dot
+import graft.store.Scratch
 
 class PqSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -80,7 +81,7 @@ class PqSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("codebook sidecar round-trips") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
+    val dir = Scratch.dir(spark, "pq")
     PqIndex.writeSidecar(spark, dir, cb)
     val back = PqIndex.readSidecar(spark, dir).get
     assert(back.dsub == cb.dsub && back.m == cb.m && back.ks == cb.ks)
@@ -106,7 +107,7 @@ class PqSpec extends AnyFunSuite with SparkSuite {
     val ivf = IvfIndex.train(emb, "embedding", "vec_id",
       numLists = 8, iters = 2, multiAssign = 2)
     val store = new DocumentStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-ivfpq").toString)
+      Scratch.dir(spark, "ivfpq"))
     val idx = new IvfPq(ivf, cb, store, "ivfpq", "embedding", "vec_id")
     idx.build(emb)
     val q = probe(0L)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
+import graft.store.Scratch
 
 /** [[RecallTuner]]: minimality (every candidate below the chosen one
   * measured under target), target satisfaction, IVF recall monotonicity
@@ -64,7 +65,7 @@ class RecallTunerSpec extends AnyFunSuite with SparkSuite {
 
   test("HNSW ef tuning works over the PERSISTED store segments (q148 shape)") {
     val store = new HnswStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-rt-hnsw").toString)
+      Scratch.dir(spark, "rt-hnsw"))
     store.build(emb.filter($"vec_id" % 5 =!= 0), "embedding", "vec_id")
     store.add(emb.filter($"vec_id" % 5 === 0), "embedding", "vec_id")
     assert(store.tombstoneCount == 0L) // disjoint generations: raw segments valid

@@ -3,6 +3,7 @@ package graft.search
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
+import graft.store.Scratch
 
 class ServePointSpec extends AnyFunSuite with SparkSuite {
 
@@ -25,7 +26,7 @@ class ServePointSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("sidecar round-trips through any hadoop path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-servepoint").toString
+    val dir = Scratch.dir(spark, "servepoint")
     val sp = ServePoint(2, 320, 10, 0.9, 0.9375, 20000L)
     ServePoint.write(spark, dir, sp)
     assert(ServePoint.read(spark, dir).contains(sp))
@@ -40,7 +41,7 @@ class ServePointSpec extends AnyFunSuite with SparkSuite {
     val ivf = IvfIndex.train(e, "embedding", "vec_id", numLists = 16, iters = 3,
       multiAssign = 4)
     val store = new graft.store.DocumentStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-sp-ivfpq").toString)
+      Scratch.dir(spark, "sp-ivfpq"))
     val idx = new IvfPq(ivf, cb, store, "ivfpq", "embedding", "vec_id")
     idx.build(e)
 
@@ -74,7 +75,7 @@ class ServePointSpec extends AnyFunSuite with SparkSuite {
   test("HNSW tuneServe persists ef and a parameterless fromPath searcher " +
        "serves it; explicit ef still wins; untuned falls back to 64") {
     val e = graft.Tables.t(spark, sf, "embeddings").cache()
-    val root = java.nio.file.Files.createTempDirectory("graft-sp-hnsw").toString
+    val root = Scratch.dir(spark, "sp-hnsw")
     val params = HnswIndex.Params(m = 8, efConstruction = 32, numSegments = 4)
     HnswIndex.write(HnswIndex.build(e, "embedding", "vec_id", params),
       root, params)

@@ -1,14 +1,14 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
+import graft.store.Scratch
 
 class CsvRoundTripSpec extends AnyFunSuite with SparkSuite {
 
   private def roundTrip(df: org.apache.spark.sql.DataFrame) = {
-    val dir = Files.createTempDirectory("graft-csv").toString + "/out"
+    val dir = Scratch.dir(spark, "csv") + "/out"
     CsvRoundTrip.write(df, dir)
     CsvRoundTrip.read(spark, dir, df.schema)
   }
@@ -51,7 +51,7 @@ class CsvRoundTripSpec extends AnyFunSuite with SparkSuite {
   test("newline-free data takes the splittable fast path: task count > file count") {
     import spark.implicits._
     val df = (1L to 5000L).map(i => (i, s"row-$i-" + ("x" * 40))).toDF("id", "s")
-    val dir = Files.createTempDirectory("graft-csv-split").toString + "/out"
+    val dir = Scratch.dir(spark, "csv-split") + "/out"
     CsvRoundTrip.write(df.coalesce(1), dir)   // ONE csv file
     val files = new java.io.File(dir).listFiles.count(_.getName.endsWith(".csv"))
     assert(files == 1)
@@ -70,7 +70,7 @@ class CsvRoundTripSpec extends AnyFunSuite with SparkSuite {
   test("embedded newlines: auto-read falls back to multiLine; requireSplittable fails loudly") {
     import spark.implicits._
     val df = Seq((1L, "new\nline"), (2L, "plain")).toDF("id", "s")
-    val dir = Files.createTempDirectory("graft-csv-nl").toString + "/out"
+    val dir = Scratch.dir(spark, "csv-nl") + "/out"
     CsvRoundTrip.write(df, dir)
     // auto path: correct (multiLine) read
     val got = CsvRoundTrip.read(spark, dir, df.schema).orderBy("id").collect()
@@ -85,7 +85,7 @@ class CsvRoundTripSpec extends AnyFunSuite with SparkSuite {
   test("foreign data (no sidecar) is assumed unsplittable") {
     import spark.implicits._
     val df = Seq((1L, "a")).toDF("id", "s")
-    val dir = Files.createTempDirectory("graft-csv-foreign").toString + "/out"
+    val dir = Scratch.dir(spark, "csv-foreign") + "/out"
     CsvRoundTrip.write(df, dir)
     assert(new java.io.File(dir, CsvRoundTrip.MetaFile).delete())
     assert(CsvRoundTrip.read(spark, dir, df.schema).count() == 1) // safe path works

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
+import graft.store.Scratch
 
 class JsonIngestSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
@@ -20,7 +21,7 @@ class JsonIngestSpec extends AnyFunSuite with SparkSuite {
       |]""".stripMargin
 
   test("S1: multiLine JSON array blob -> rows with nested tags") {
-    val dir = Files.createTempDirectory("graft-json").toString
+    val dir = Scratch.dir(spark, "json")
     Files.writeString(java.nio.file.Paths.get(dir, "products.json"), productsJson)
     val df = JsonIngest.readJsonArray(spark, s"$dir/products.json")
     assert(df.count() == 2)

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
+import graft.store.Scratch
 
 /** Raw ORC interchange assertions backing the q184 gate: the gated
   * projection hashes the payload (length + polynomial key) because raw
@@ -14,7 +14,7 @@ import graft.SparkSuite
 class OrcRoundTripSpec extends AnyFunSuite with SparkSuite {
 
   private def roundTrip(df: org.apache.spark.sql.DataFrame) = {
-    val dir = Files.createTempDirectory("graft-orc").toString + "/out"
+    val dir = Scratch.dir(spark, "orc") + "/out"
     df.write.mode("overwrite").orc(dir)
     spark.read.orc(dir)
   }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
+import graft.store.Scratch
 
 class ReleaseSpec extends AnyFunSuite with SparkSuite {
 
@@ -14,7 +15,7 @@ class ReleaseSpec extends AnyFunSuite with SparkSuite {
     (4L, "delta", "b"), (5L, "epsilon", "c")).toDF("id", "text", "src")
 
   test("publish then verify: every scope checks out") {
-    val dir = Files.createTempDirectory("graft-release").toString
+    val dir = Scratch.dir(spark, "release")
     Release.publish(corpus, dir, "id", Seq("id", "text", "src"), Some("src"))
     val rep = Release.verify(spark, dir, Seq("id", "text", "src"), Some("src"))
       .collect()
@@ -23,7 +24,7 @@ class ReleaseSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a tampered copy fails loudly at the exact scope") {
-    val dir = Files.createTempDirectory("graft-release").toString
+    val dir = Scratch.dir(spark, "release")
     Release.publish(corpus, dir, "id", Seq("id", "text", "src"), Some("src"))
     // tamper: append a smuggled extra row as one more parquet file
     Seq((99L, "smuggled", "b")).toDF("id", "text", "src")
@@ -36,8 +37,8 @@ class ReleaseSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("the manifest is format-agnostic: ORC and parquet releases carry identical lines") {
-    val dPar = Files.createTempDirectory("graft-release").toString
-    val dOrc = Files.createTempDirectory("graft-release").toString
+    val dPar = Scratch.dir(spark, "release")
+    val dOrc = Scratch.dir(spark, "release")
     Release.publish(corpus, dPar, "id", Seq("id", "text", "src"), Some("src"))
     Release.publish(corpus, dOrc, "id", Seq("id", "text", "src"), Some("src"),
       format = "orc")
@@ -50,7 +51,7 @@ class ReleaseSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a consumer engine only needs the files: fresh read verifies") {
-    val dir = Files.createTempDirectory("graft-release").toString
+    val dir = Scratch.dir(spark, "release")
     Release.publish(corpus, dir, "id", Seq("id", "text"))
     // no group accounting: single table line
     val rep = Release.verify(spark, dir, Seq("id", "text")).collect()

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
@@ -14,7 +13,7 @@ class AppendSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def freshStore() =
-    new DocumentStore(spark, Files.createTempDirectory("graft-append").toString)
+    new DocumentStore(spark, Scratch.dir(spark, "append"))
 
   test("append adds segments without rewriting carried ones") {
     val s = freshStore()

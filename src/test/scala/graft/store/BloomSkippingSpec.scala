@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
@@ -14,7 +13,7 @@ class BloomSkippingSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def freshStore() =
-    new DocumentStore(spark, Files.createTempDirectory("graft-bloom").toString)
+    new DocumentStore(spark, Scratch.dir(spark, "bloom"))
 
   // 400 rows in 8 partitions; id is high-cardinality and UNcorrelated
   // with the partition key (id mod 8 scrambled by a multiplier)

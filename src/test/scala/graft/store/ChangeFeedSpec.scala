@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
@@ -8,7 +7,7 @@ import graft.SparkSuite
 class ChangeFeedSpec extends AnyFunSuite with SparkSuite {
 
   private def newStore = new DocumentStore(
-    spark, Files.createTempDirectory("graft-cf").toString)
+    spark, Scratch.dir(spark, "cf"))
 
   test("classifies insert/update/delete and silences identical restatements") {
     import spark.implicits._

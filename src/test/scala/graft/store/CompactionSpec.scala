@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
@@ -10,7 +9,7 @@ class CompactionSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def freshStore() =
-    new DocumentStore(spark, Files.createTempDirectory("graft-compact").toString)
+    new DocumentStore(spark, Scratch.dir(spark, "compact"))
 
   // 600 rows, partition = bucket (3 values), id clustered by bucket so
   // min/max stats carve the id space cleanly per partition

@@ -9,7 +9,7 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def freshStore() =
-    new DocumentStore(spark, Files.createTempDirectory("graft-store").toString)
+    new DocumentStore(spark, Scratch.dir(spark, "store"))
 
   test("create + read round trip") {
     val s = freshStore()
@@ -150,7 +150,7 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("vacuum reclaims unreferenced segments, keeps current snapshot intact") {
-    val root = Files.createTempDirectory("graft-store").toString
+    val root = Scratch.dir(spark, "store")
     val s = new DocumentStore(spark, root)
     s.create("t", Seq((1L, "pa", "a"), (2L, "pb", "b")).toDF("id", "part", "v"),
       partitionCol = Some("part"))
@@ -177,7 +177,7 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("vacuum sweeps crash garbage: segment dirs with no manifest") {
-    val root = Files.createTempDirectory("graft-store").toString
+    val root = Scratch.dir(spark, "store")
     val s = new DocumentStore(spark, root)
     s.create("t", Seq((1L, "a"), (2L, "b")).toDF("id", "x"))
     // simulate a mutation that died between writeSegments and commit:
@@ -194,7 +194,7 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("a committed version with a missing manifest fails loudly, not as empty") {
-    val root = Files.createTempDirectory("graft-store").toString
+    val root = Scratch.dir(spark, "store")
     val s = new DocumentStore(spark, root)
     s.create("t", Seq((1L, "a")).toDF("id", "x"))
     java.nio.file.Files.delete(
@@ -207,7 +207,7 @@ class DocumentStoreSpec extends AnyFunSuite with SparkSuite {
     // The store must run on cluster storage (HDFS/S3) — all metadata IO
     // goes through the Hadoop FS API, exercised here via a qualified URI
     // root rather than a bare local path.
-    val root = "file://" + Files.createTempDirectory("graft-store-hfs").toString
+    val root = "file://" + Scratch.dir(spark, "store-hfs")
     val s = new DocumentStore(spark, root)
     s.create("t", Seq((1L, "pa", "x"), (2L, "pb", "y")).toDF("id", "part", "v"),
       partitionCol = Some("part"))

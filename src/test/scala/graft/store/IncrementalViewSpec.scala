@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
@@ -8,8 +7,8 @@ import graft.SparkSuite
 class IncrementalViewSpec extends AnyFunSuite with SparkSuite {
 
   private def stores() = (
-    new DocumentStore(spark, Files.createTempDirectory("graft-iv-src").toString),
-    new DocumentStore(spark, Files.createTempDirectory("graft-iv-st").toString))
+    new DocumentStore(spark, Scratch.dir(spark, "iv-src")),
+    new DocumentStore(spark, Scratch.dir(spark, "iv-st")))
 
   private def state(st: DocumentStore) =
     st.read("agg").collect()

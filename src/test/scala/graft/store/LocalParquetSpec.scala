@@ -24,7 +24,7 @@ class LocalParquetSpec extends AnyFunSuite with SparkSuite {
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
       schema)
     val store = new DocumentStore(spark,
-      java.nio.file.Files.createTempDirectory("lp-spec").toString)
+      Scratch.dir(spark, "lp-spec"))
     store.create("t", df) // LocalRelation + supported types => fast path
     val back = store.read("t").orderBy(col("i")).collect().toSeq
     assert(back == rows.sortBy(_.getInt(0)))
@@ -35,7 +35,7 @@ class LocalParquetSpec extends AnyFunSuite with SparkSuite {
     val df = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "a", 30L))
       .toDF("id", "part", "v")
     val store = new DocumentStore(spark,
-      java.nio.file.Files.createTempDirectory("lp-spec2").toString)
+      Scratch.dir(spark, "lp-spec2"))
     store.create("t", df, partitionCol = Some("part"))
     // partition layout identical to the Spark path: one dir per value
     assert(store.layout("t").keySet == Set("a", "b"))
@@ -54,7 +54,7 @@ class LocalParquetSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     val df = Seq((1L, Some("x")), (2L, None)).toDF("id", "part")
     val store = new DocumentStore(spark,
-      java.nio.file.Files.createTempDirectory("lp-spec3").toString)
+      Scratch.dir(spark, "lp-spec3"))
     store.create("t", df, partitionCol = Some("part"))
     assert(store.layout("t").keySet == Set("x", "__null"))
     assert(store.read("t").count() == 2)
@@ -69,7 +69,7 @@ class LocalParquetSpec extends AnyFunSuite with SparkSuite {
       Row(1, 10L, 1.5f, 2.5, true, "alpha", ts, Date.valueOf("2026-02-03")),
       Row(2, null, null, null, null, null, null, null))
     val conf = spark.sessionState.newHadoopConf()
-    val dir = java.nio.file.Files.createTempDirectory("lp-read").toString
+    val dir = Scratch.dir(spark, "lp-read")
     val f = new org.apache.hadoop.fs.Path(dir, "a.parquet")
     LocalParquet.write(conf, f, schema, rows)
     val back = LocalParquet.readIfExact(conf, f, schema)
@@ -85,7 +85,7 @@ class LocalParquetSpec extends AnyFunSuite with SparkSuite {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("t TIMESTAMP, dt DATE")
     val ins = java.time.Instant.parse("2026-02-03T04:05:06.123456Z")
     val conf = spark.sessionState.newHadoopConf()
-    val dir = java.nio.file.Files.createTempDirectory("lp-java8").toString
+    val dir = Scratch.dir(spark, "lp-java8")
     val f = new org.apache.hadoop.fs.Path(dir, "a.parquet")
     LocalParquet.write(conf, f, schema,
       Seq(Row(ins, java.time.LocalDate.of(2026, 2, 3))))

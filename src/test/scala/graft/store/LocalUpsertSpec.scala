@@ -17,7 +17,7 @@ class LocalUpsertSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def newStore() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("lu-spec").toString)
+    Scratch.dir(spark, "lu-spec"))
 
   private def localFiles(store: DocumentStore, table: String): Seq[String] =
     store.layout(table).values.flatMap { d =>

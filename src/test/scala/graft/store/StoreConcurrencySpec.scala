@@ -16,7 +16,7 @@ class StoreConcurrencySpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def freshStore(): (DocumentStore, String) = {
-    val dir = Files.createTempDirectory("graft-cas").toString
+    val dir = Scratch.dir(spark, "cas")
     (new DocumentStore(spark, dir), dir)
   }
 

@@ -1,6 +1,5 @@
 package graft.store
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
@@ -53,7 +52,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSuite {
 
   test("3-column layout prunes on each of the three columns") {
     val orders = t(spark, sf, "orders")
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-zo3").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "zo3"))
     val z = ZOrder.withZBucket(orders,
       Seq("o_custkey", "o_totalprice", "o_orderkey"), log2Buckets = 4)
     store.create("oz3", z, partitionCol = Some("zbucket"))
@@ -80,7 +79,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSuite {
 
   test("z-order layout prunes on BOTH columns; linear layout only on its own") {
     val orders = t(spark, sf, "orders")
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-zo").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "zo"))
     val z = ZOrder.withZBucket(orders, "o_custkey", "o_totalprice", log2Buckets = 4)
     store.create("oz", z, partitionCol = Some("zbucket"))
     store.analyze("oz", Seq("o_custkey", "o_totalprice"))
@@ -101,7 +100,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSuite {
 
   test("readWhere over the z-layout returns exactly the filtered rows") {
     val orders = t(spark, sf, "orders")
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-zo2").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "zo2"))
     store.create("oz",
       ZOrder.withZBucket(orders, "o_custkey", "o_totalprice", 4),
       partitionCol = Some("zbucket"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Streaming near-dup admission: decision rule, cross-batch dependence,
   * corpus-weighted in-batch scoring, and replay idempotence. */
@@ -13,7 +14,7 @@ class AdmissionIngestSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def freshStore() =
-    new DocumentStore(spark, Files.createTempDirectory("graft-adm").toString)
+    new DocumentStore(spark, Scratch.dir(spark, "adm"))
 
   private def apply1(store: DocumentStore, rows: (Long, String)*): Unit =
     AdmissionIngest.applyBatch(rows.toDF("doc_id", "text"), store,
@@ -108,10 +109,10 @@ class AdmissionIngestSpec extends AnyFunSuite with SparkSuite {
     store.create("corpus", Seq(
       (1L, "alpha beta gamma delta"),
       (2L, "one two three four")).toDF("doc_id", "text"))
-    val srcDir = Files.createTempDirectory("graft-adm-src").toFile
+    val srcDir = new java.io.File(Scratch.dir(spark, "adm-src"))
     val base = System.currentTimeMillis()
     def stage(rows: Seq[(Long, String)], t: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-adm-stage").toFile
+      val tmp = new java.io.File(Scratch.dir(spark, "adm-stage"))
       rows.toDF("doc_id", "text").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
@@ -127,7 +128,7 @@ class AdmissionIngestSpec extends AnyFunSuite with SparkSuite {
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val q = AdmissionIngest.start(feed, store, "corpus", "quarantine",
       "doc_id", "text",
-      Files.createTempDirectory("graft-adm-ckpt").toString, threshold = 0.8)
+      Scratch.dir(spark, "adm-ckpt"), threshold = 0.8)
     try q.processAllAvailable() finally q.stop()
     assert(ids(store, "corpus").contains(60L))
     assert(ids(store, "quarantine") == Set(61L))

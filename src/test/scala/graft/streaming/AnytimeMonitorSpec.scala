@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Proof obligations for the streaming anytime monitor: evidence
   * accumulates across batches, the boundary crosses exactly when the
@@ -13,7 +14,7 @@ class AnytimeMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-anytime-mon").toString)
+    Scratch.dir(spark, "anytime-mon"))
 
   private def batchOf(rows: Seq[(Int, Boolean)]) = rows.toDF("arm", "y")
 

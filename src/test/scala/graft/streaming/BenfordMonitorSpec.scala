@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Proof obligations for the streaming Benford monitor: batch-vs-
   * cumulative attribution, crash-replay idempotence (including replay
@@ -12,7 +13,7 @@ class BenfordMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-benford-mon").toString)
+    Scratch.dir(spark, "benford-mon"))
 
   private def batchOf(vs: Seq[Double]) =
     vs.map(v => ("feed", v)).toDF("src", "v")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 class BoilerplateIngestSpec extends AnyFunSuite with SparkSuite {
 
@@ -13,7 +14,7 @@ class BoilerplateIngestSpec extends AnyFunSuite with SparkSuite {
   private val banner = (1 to 10).map(_ => "nav").mkString(" ")
 
   private def mkStore() = new DocumentStore(spark,
-    Files.createTempDirectory("graft-bpingest").toString)
+    Scratch.dir(spark, "bpingest"))
 
   private def apply(store: DocumentStore, batch: org.apache.spark.sql.DataFrame): Unit =
     BoilerplateIngest.applyBatch(batch, store, "segdf", "segdocs", "clean",
@@ -57,10 +58,10 @@ class BoilerplateIngestSpec extends AnyFunSuite with SparkSuite {
 
   test("end to end through a real file-source stream") {
     val store = mkStore()
-    val srcDir = Files.createTempDirectory("graft-bpingest-src").toFile
+    val srcDir = new java.io.File(Scratch.dir(spark, "bpingest-src"))
     val base = System.currentTimeMillis()
     Seq((1L to 5L), (6L to 10L)).zipWithIndex.foreach { case (ids, i) =>
-      val tmp = Files.createTempDirectory("graft-bpingest-st").toFile
+      val tmp = new java.io.File(Scratch.dir(spark, "bpingest-st"))
       ids.map(j => (j, banner + s" body$j")).toDF("id", "text")
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
@@ -73,7 +74,7 @@ class BoilerplateIngestSpec extends AnyFunSuite with SparkSuite {
       .schema(Seq((1L, "x")).toDF("id", "text").schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val qy = BoilerplateIngest.start(feed, store, "segdf", "segdocs", "clean",
-      "id", "text", Files.createTempDirectory("graft-bpingest-ckpt").toString,
+      "id", "text", Scratch.dir(spark, "bpingest-ckpt"),
       segWords = 10, minDf = 5L)
     try qy.processAllAvailable() finally qy.stop()
     val m = store.read("clean").collect()

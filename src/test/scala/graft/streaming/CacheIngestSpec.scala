@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** [[CacheIngest]] — micro-batch boundary semantics: a batch's probes
   * see only the pre-batch cache (an in-batch near-duplicate pair both
@@ -18,7 +19,7 @@ class CacheIngestSpec extends AnyFunSuite with SparkSuite {
 
   private def stageOne(df: org.apache.spark.sql.DataFrame,
       dir: java.io.File, modTime: Long): Unit = {
-    val tmp = Files.createTempDirectory("graft-cis-stage").toFile
+    val tmp = new java.io.File(Scratch.dir(spark, "cis-stage"))
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
       val dst = new java.io.File(dir, f.getName)
@@ -28,7 +29,7 @@ class CacheIngestSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("admits cross batch boundaries, never leak into their own batch") {
-    val dir = Files.createTempDirectory("graft-cis-src").toFile
+    val dir = new java.io.File(Scratch.dir(spark, "cis-src"))
     val base = System.currentTimeMillis()
     // batch 0: two IDENTICAL orthogonal-to-seed vectors (ids 10, 11)
     stageOne(Seq((10L, v(0, 0, 1, 0)), (11L, v(0, 0, 1, 0)))
@@ -37,16 +38,16 @@ class CacheIngestSpec extends AnyFunSuite with SparkSuite {
     stageOne(Seq((20L, v(0, 0, 1, 0)), (21L, v(0, 0, 0, 1)))
       .toDF("vec_id", "embedding"), dir, base + 60000L)
     val store = new DocumentStore(
-      spark, Files.createTempDirectory("graft-cis-store").toString)
+      spark, Scratch.dir(spark, "cis-store"))
     store.create("cache",
       Seq((1L, v(1, 0, 0, 0))).toDF("vec_id", "embedding"))
-    val outDir = Files.createTempDirectory("graft-cis-out").toString
+    val outDir = Scratch.dir(spark, "cis-out")
     val src = spark.readStream
       .schema(Seq((1L, v(1.0))).toDF("vec_id", "embedding").schema)
       .option("maxFilesPerTrigger", "1").parquet(dir.toString)
     val qy = CacheIngest.start(src, store, "cache", "vec_id", "embedding",
       threshold = 0.9, resultDir = outDir,
-      checkpointDir = Files.createTempDirectory("graft-cis-ck").toString)
+      checkpointDir = Scratch.dir(spark, "cis-ck"))
     try qy.processAllAvailable() finally qy.stop()
     val out = spark.read.parquet(outDir).collect()
       .map(r => r.getAs[Long]("probe_id") -> r).toMap

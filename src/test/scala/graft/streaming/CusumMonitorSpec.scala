@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Proof obligations for the streaming CUSUM monitor: accumulation
   * across batches (the thing a per-batch threshold cannot see),
@@ -13,7 +14,7 @@ class CusumMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-cusum-mon").toString)
+    Scratch.dir(spark, "cusum-mon"))
 
   private def batchOf(vs: Seq[Double]) = vs.toDF("v")
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 class DriftMonitorSpec extends AnyFunSuite with SparkSuite {
 
@@ -12,7 +13,7 @@ class DriftMonitorSpec extends AnyFunSuite with SparkSuite {
 
   test("planted drift alerts exactly its batch; clean batches stay quiet") {
     val store = new DocumentStore(spark,
-      Files.createTempDirectory("graft-driftmon").toString)
+      Scratch.dir(spark, "driftmon"))
     val ref = (1 to 160).map(i => i % 40 + 10).toDF("v") // uniform on 40 values
     // batch 0 is distribution-identical (each value exactly twice);
     // batch 1 is shifted onto a disjoint range
@@ -30,7 +31,7 @@ class DriftMonitorSpec extends AnyFunSuite with SparkSuite {
 
   test("alert boundary is integer-exact: ks exactly at threshold alerts") {
     val store = new DocumentStore(spark,
-      Files.createTempDirectory("graft-driftmon2").toString)
+      Scratch.dir(spark, "driftmon2"))
     // batch [1,2,3,4], ref [1,2,3,4] shifted so sup gap = exactly 1/4:
     // ref = [2,3,4,5] -> EDFs differ by 1/4 at v=1 (and v=4)
     DriftMonitor.applyBatch(Seq(1, 2, 3, 4).toDF("v"), 0L,
@@ -42,7 +43,7 @@ class DriftMonitorSpec extends AnyFunSuite with SparkSuite {
 
   test("replaying a batch is idempotent (keyed upsert)") {
     val store = new DocumentStore(spark,
-      Files.createTempDirectory("graft-driftmon3").toString)
+      Scratch.dir(spark, "driftmon3"))
     val ref = (1 to 50).map(_ % 7).toDF("v")
     val batch = (1 to 30).map(_ % 5).toDF("v")
     DriftMonitor.applyBatch(batch, 0L, store, "drift", ref, "v", 1L, 4L)
@@ -54,12 +55,12 @@ class DriftMonitorSpec extends AnyFunSuite with SparkSuite {
 
   test("end to end through a real file-source stream") {
     val store = new DocumentStore(spark,
-      Files.createTempDirectory("graft-driftmon4").toString)
-    val srcDir = Files.createTempDirectory("graft-driftmon4-src").toFile
+      Scratch.dir(spark, "driftmon4"))
+    val srcDir = new java.io.File(Scratch.dir(spark, "driftmon4-src"))
     val ref = (1 to 100).map(i => i % 20).toDF("v")
     val base = System.currentTimeMillis()
     Seq(0, 900).zipWithIndex.foreach { case (shift, i) =>
-      val tmp = Files.createTempDirectory("graft-driftmon4-st").toFile
+      val tmp = new java.io.File(Scratch.dir(spark, "driftmon4-st"))
       (1 to 60).map(j => j % 20 + shift).toDF("v").coalesce(1)
         .write.mode("overwrite").parquet(tmp.toString)
       tmp.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
@@ -71,7 +72,7 @@ class DriftMonitorSpec extends AnyFunSuite with SparkSuite {
     val feed = spark.readStream.schema(ref.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val qy = DriftMonitor.start(feed, store, "drift", ref, "v",
-      Files.createTempDirectory("graft-driftmon4-ckpt").toString, 1L, 4L)
+      Scratch.dir(spark, "driftmon4-ckpt"), 1L, 4L)
     try qy.processAllAvailable() finally qy.stop()
     val m = store.read("drift").collect()
       .map(r => r.getAs[Long]("batch_id") -> r.getAs[Boolean]("alert")).toMap

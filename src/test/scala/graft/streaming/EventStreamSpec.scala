@@ -6,13 +6,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.Tables.t
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 class EventStreamSpec extends AnyFunSuite with SparkSuite {
 
   /** File-stream sources need a directory; stage the single parquet file
     * into one (this is also the natural shape of a landing zone). */
   private lazy val eventsDir: String = {
-    val dir = Files.createTempDirectory("graft-events")
+    // kept: shared by every test of the suite, so no sweep may take it
+    val dir = java.nio.file.Paths.get(Scratch.keep(Scratch.dir(spark, "events")))
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("part-0.parquet"))
     dir.toString
@@ -146,7 +148,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String, Long)]
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-cdc").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "cdc"))
     // ONE batch containing: plain insert; insert superseded by delete;
     // delete superseded by re-insert; update chain. Added BEFORE the
     // AvailableNow query starts: it fixes its end offset when its stream
@@ -159,7 +161,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
     EventStream.cdcApplySink(
       in.toDF().toDF("id", "payload", "op", "seq"), store, "t",
       keys = Seq("id"), opCol = "op", seqCol = "seq",
-      checkpoint = Files.createTempDirectory("graft-cdc-ckpt").toString).awaitTermination()
+      checkpoint = Scratch.dir(spark, "cdc-ckpt")).awaitTermination()
     val got = store.read("t").select("id", "payload")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "a", 3L -> "c2", 4L -> "d2"))
@@ -169,8 +171,8 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Long, String, String, Long)]
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-cdc2").toString)
-    val ckpt = Files.createTempDirectory("graft-cdc2-ckpt").toString
+    val store = new DocumentStore(spark, Scratch.dir(spark, "cdc2"))
+    val ckpt = Scratch.dir(spark, "cdc2-ckpt")
     def run(): Unit = EventStream.cdcApplySink(
       in.toDF().toDF("typ", "session_id", "id", "payload", "op", "seq"), store, "t",
       keys = Seq("typ", "session_id", "id"), opCol = "op", seqCol = "seq",
@@ -197,8 +199,8 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("foreachBatch upsert sink lands every event exactly once") {
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-sink").toString)
-    val ckpt = Files.createTempDirectory("graft-ckpt").toString
+    val store = new DocumentStore(spark, Scratch.dir(spark, "sink"))
+    val ckpt = Scratch.dir(spark, "ckpt")
     val q = EventStream.upsertSink(
       EventStream.source(spark, eventsDir), store, "events_sink",
       keys = Seq("event_id"), checkpoint = ckpt)
@@ -215,7 +217,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("streaming dedup drops duplicate event ids within the watermark") {
     // stage the events file TWICE: every event arrives duplicated
-    val dir = Files.createTempDirectory("graft-dup")
+    val dir = java.nio.file.Paths.get(Scratch.dir(spark, "dup"))
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("a.parquet"))
     Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),

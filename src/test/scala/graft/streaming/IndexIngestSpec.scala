@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.search.InvertedIndex
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 class IndexIngestSpec extends AnyFunSuite with SparkSuite {
 
@@ -26,7 +26,7 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
 
   test("micro-batched changes converge to the full rebuild, batch boundaries anywhere") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-iis").toString
+    val dir = Scratch.dir(spark, "iis")
     InvertedIndex.build(corpus((1L, "alpha beta"), (2L, "beta gamma"),
       (3L, "gamma delta")), "doc_id", "text", dir)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -34,14 +34,14 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
     val qy = IndexIngest.start(
       mem.toDF().toDF("change", "doc_id", "text"), dir,
       "doc_id", "text", "change",
-      Files.createTempDirectory("graft-iis-ckpt").toString)
+      Scratch.dir(spark, "iis-ckpt"))
     try {
       mem.addData(("delete", 2L, ""), ("update", 1L, "alpha beta epsilon"))
       qy.processAllAvailable()
       mem.addData(("insert", 9L, "epsilon zeta"))
       qy.processAllAvailable()
     } finally qy.stop()
-    val dir2 = Files.createTempDirectory("graft-iis-rebuild").toString
+    val dir2 = Scratch.dir(spark, "iis-rebuild")
     InvertedIndex.build(corpus((1L, "alpha beta epsilon"), (3L, "gamma delta"),
       (9L, "epsilon zeta")), "doc_id", "text", dir2)
     assert(indexEquals(dir, dir2))
@@ -53,11 +53,11 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
 
   test("replayed batch is idempotent: re-applying the same delta changes nothing") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-iis-r").toString
+    val dir = Scratch.dir(spark, "iis-r")
     InvertedIndex.build(corpus((1L, "a b"), (2L, "b c")), "doc_id", "text", dir)
     val delta = corpus((2L, "b c d"), (5L, "d e"))
     InvertedIndex.add(spark, dir, delta, "doc_id", "text")
-    val snap = Files.createTempDirectory("graft-iis-snap").toString
+    val snap = Scratch.dir(spark, "iis-snap")
     InvertedIndex.build(corpus((1L, "a b"), (2L, "b c d"), (5L, "d e")),
       "doc_id", "text", snap)
     assert(indexEquals(dir, snap))
@@ -69,7 +69,7 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
 
   test("oversized trigger takes the distributed path and still converges") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-iis-big").toString
+    val dir = Scratch.dir(spark, "iis-big")
     InvertedIndex.build(corpus((1L, "alpha beta"), (2L, "beta gamma"),
       (3L, "gamma delta"), (4L, "delta rho")), "doc_id", "text", dir)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -80,7 +80,7 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
     val qy = IndexIngest.start(
       mem.toDF().toDF("change", "doc_id", "text"), dir,
       "doc_id", "text", "change",
-      Files.createTempDirectory("graft-iis-big-ckpt").toString)
+      Scratch.dir(spark, "iis-big-ckpt"))
     try {
       mem.addData(("delete", 2L, ""), ("update", 1L, "alpha beta epsilon"),
         ("insert", 9L, "epsilon zeta"), ("insert", 10L, "zeta iota"),
@@ -90,7 +90,7 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
       qy.stop()
       spark.conf.unset("spark.graft.index.maxTriggerCollect")
     }
-    val dir2 = Files.createTempDirectory("graft-iis-big-rebuild").toString
+    val dir2 = Scratch.dir(spark, "iis-big-rebuild")
     InvertedIndex.build(corpus((1L, "alpha beta epsilon"), (3L, "gamma delta"),
       (9L, "epsilon zeta"), (10L, "zeta iota"), (11L, "iota kappa")),
       "doc_id", "text", dir2,
@@ -103,7 +103,7 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
 
   test("pure-insert oversized trigger appends through the distributed path") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-iis-bi").toString
+    val dir = Scratch.dir(spark, "iis-bi")
     InvertedIndex.build(corpus((1L, "alpha beta"), (2L, "beta gamma")),
       "doc_id", "text", dir)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -112,7 +112,7 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
     val qy = IndexIngest.start(
       mem.toDF().toDF("change", "doc_id", "text"), dir,
       "doc_id", "text", "change",
-      Files.createTempDirectory("graft-iis-bi-ckpt").toString)
+      Scratch.dir(spark, "iis-bi-ckpt"))
     try {
       mem.addData(("insert", 7L, "mu nu"), ("insert", 8L, "nu xi"),
         ("insert", 9L, "xi omicron"))
@@ -121,7 +121,7 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
       qy.stop()
       spark.conf.unset("spark.graft.index.maxTriggerCollect")
     }
-    val dir2 = Files.createTempDirectory("graft-iis-bi-rebuild").toString
+    val dir2 = Scratch.dir(spark, "iis-bi-rebuild")
     InvertedIndex.build(corpus((1L, "alpha beta"), (2L, "beta gamma"),
       (7L, "mu nu"), (8L, "nu xi"), (9L, "xi omicron")),
       "doc_id", "text", dir2,
@@ -131,14 +131,14 @@ class IndexIngestSpec extends AnyFunSuite with SparkSuite {
 
   test("in-batch delete+reinsert of one key lands as the reinsert (last wins)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-iis-lw").toString
+    val dir = Scratch.dir(spark, "iis-lw")
     InvertedIndex.build(corpus((1L, "a b"), (2L, "b c")), "doc_id", "text", dir)
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(String, Long, String, Long)]
     val qy = IndexIngest.start(
       mem.toDF().toDF("change", "doc_id", "text", "v"), dir,
       "doc_id", "text", "change",
-      Files.createTempDirectory("graft-iis-lw-ckpt").toString,
+      Scratch.dir(spark, "iis-lw-ckpt"),
       versionCol = Some("v"))
     try {
       mem.addData(("delete", 2L, "", 1L), ("insert", 2L, "b c reborn", 2L))

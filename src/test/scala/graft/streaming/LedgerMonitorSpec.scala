@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Base-level contract obligations for EVERY monitor on the
   * [[LedgerMonitor]] ledger discipline (VERDICT r15 top item): the
@@ -15,7 +16,7 @@ class LedgerMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-ledger-mon").toString)
+    Scratch.dir(spark, "ledger-mon"))
 
   /** Name, monitor factory, a real batch, an all-NULL batch with the
     * same schema. */

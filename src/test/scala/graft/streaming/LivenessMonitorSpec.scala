@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 class LivenessMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-live-mon").toString)
+    Scratch.dir(spark, "live-mon"))
 
   private def verdictAt(st: DocumentStore, bid: Long) =
     st.read("ver").filter(col("batch_id") === bid)

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Proof obligations for the streaming PSI monitor: the shifted batch
   * alerts on its own PSI, agreement with the batch-mode audit, and
@@ -12,7 +13,7 @@ class PsiMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-psi-mon").toString)
+    Scratch.dir(spark, "psi-mon"))
 
   private val refVals = (0 until 400).map(i => (i % 100).toLong)
   private def ref = refVals.map(Tuple1(_)).toDF("v")

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Behavior obligations for the reconciliation monitor beyond the
   * base contract (LedgerMonitorSpec): exact band boundaries by integer
@@ -13,7 +14,7 @@ class ReconcileMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-reconcile").toString)
+    Scratch.dir(spark, "reconcile"))
 
   test("band boundaries land exactly (integer cross-multiplication)") {
     val st = store()
@@ -78,7 +79,7 @@ class ReconcileMonitorSpec extends AnyFunSuite with SparkSuite {
       .MemoryStream[(Long, Long, Long)]
     val qy = ReconcileMonitor.start(mem.toDF().toDF("k", "c", "p"), st,
       "led", "ver", "k", "c", "p",
-      java.nio.file.Files.createTempDirectory("graft-rec-ckpt").toString)
+      Scratch.dir(spark, "rec-ckpt"))
     try {
       mem.addData((1L, 1000L, 1000L), (2L, 100L, 1000L))
       qy.processAllAvailable()

@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 class SchemaMonitorSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def store() = new DocumentStore(spark,
-    java.nio.file.Files.createTempDirectory("graft-schema-mon").toString)
+    Scratch.dir(spark, "schema-mon"))
 
   test("dominant-type flip across batches alerts once, then settles") {
     val st = store()

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
 import graft.embed.HashProjectionEmbedder
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Crash-recovery half of exactly-once: a query killed between applying
   * a micro-batch to the store and recording its commit marker must,
@@ -31,9 +32,9 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("VectorIngest: crash between apply and commit replays batch 0 idempotently") {
-    val srcDir = Files.createTempDirectory("graft-rec-src").toString
-    val ckpt = Files.createTempDirectory("graft-rec-ckpt").toString
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-rec").toString)
+    val srcDir = Scratch.dir(spark, "rec-src")
+    val ckpt = Scratch.dir(spark, "rec-ckpt")
+    val store = new DocumentStore(spark, Scratch.dir(spark, "rec"))
     def append(rows: (Long, String)*): Unit =
       rows.toSeq.toDF("doc_id", "text").coalesce(1)
         .write.mode("append").parquet(srcDir)
@@ -66,9 +67,9 @@ class StreamingRecoverySpec extends AnyFunSuite with SparkSuite {
   }
 
   test("cdcApplySink: crash between apply and commit replays batch 0 idempotently") {
-    val srcDir = Files.createTempDirectory("graft-rec2-src").toString
-    val ckpt = Files.createTempDirectory("graft-rec2-ckpt").toString
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-rec2").toString)
+    val srcDir = Scratch.dir(spark, "rec2-src")
+    val ckpt = Scratch.dir(spark, "rec2-ckpt")
+    val store = new DocumentStore(spark, Scratch.dir(spark, "rec2"))
     def append(rows: (Long, String, String, Long)*): Unit =
       rows.toSeq.toDF("id", "payload", "op", "seq").coalesce(1)
         .write.mode("append").parquet(srcDir)

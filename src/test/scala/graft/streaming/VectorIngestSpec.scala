@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 import graft.SparkSuite
 import graft.embed.HashProjectionEmbedder
 import graft.store.DocumentStore
+import graft.store.Scratch
 
 /** Streaming vectorize-on-write: documents arriving on a stream land in
   * the store embedded; re-delivery of a key upserts (no duplicates);
@@ -19,10 +19,10 @@ class VectorIngestSpec extends AnyFunSuite with SparkSuite {
   test("two micro-batches: insert, then update + insert — store converges") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-vi").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "vi"))
     val q = VectorIngest.start(in.toDF().toDF("doc_id", "text"), store, "docs",
       embedder, "doc_id", "text",
-      Files.createTempDirectory("graft-vi-ckpt").toString)
+      Scratch.dir(spark, "vi-ckpt"))
     try {
       in.addData((1L, "first doc"), (2L, "second doc"))
       q.processAllAvailable()
@@ -43,10 +43,10 @@ class VectorIngestSpec extends AnyFunSuite with SparkSuite {
   test("in-batch duplicates: highest version wins under versionCol") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(Long, String, Long)]
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-vi2").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "vi2"))
     val q = VectorIngest.start(in.toDF().toDF("doc_id", "text", "ver"), store, "docs",
       embedder, "doc_id", "text",
-      Files.createTempDirectory("graft-vi2-ckpt").toString,
+      Scratch.dir(spark, "vi2-ckpt"),
       versionCol = Some("ver"))
     try {
       in.addData((1L, "stale", 1L), (1L, "fresh", 2L), (2L, "only", 1L))
@@ -60,10 +60,10 @@ class VectorIngestSpec extends AnyFunSuite with SparkSuite {
   test("compactEvery folds OPTIMIZE into the stream: files bounded, rows intact") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-vi4").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "vi4"))
     val q = VectorIngest.start(in.toDF().toDF("doc_id", "text"), store, "docs",
       embedder, "doc_id", "text",
-      Files.createTempDirectory("graft-vi4-ckpt").toString,
+      Scratch.dir(spark, "vi4-ckpt"),
       compactEvery = 3)
     try {
       // 6 micro-batches of small upserts -> two compaction points
@@ -82,10 +82,10 @@ class VectorIngestSpec extends AnyFunSuite with SparkSuite {
   test("replaying the same payload converges (idempotent keyed sink)") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val store = new DocumentStore(spark, Files.createTempDirectory("graft-vi3").toString)
+    val store = new DocumentStore(spark, Scratch.dir(spark, "vi3"))
     val q = VectorIngest.start(in.toDF().toDF("doc_id", "text"), store, "docs",
       embedder, "doc_id", "text",
-      Files.createTempDirectory("graft-vi3-ckpt").toString)
+      Scratch.dir(spark, "vi3-ckpt"))
     try {
       in.addData((7L, "payload"))
       q.processAllAvailable()
