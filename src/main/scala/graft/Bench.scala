@@ -120,14 +120,8 @@ object Bench {
       swept += sweptInPass
       heaps += heapUsedMb
       if (passes.length >= minPasses) {
-        val t0 = passTotal(passes(passes.length - 3))
-        val t1 = passTotal(passes(passes.length - 2))
-        val t2 = passTotal(passes.last)
-        // false-plateau guard: two passes that agree while the totals are
-        // still falling (pass N more than 10% below pass N-2) are a warm-in
-        // step, not a steady state
-        converged = math.abs(t1 - t2) <= 0.05 * math.max(t1, t2) &&
-          t2 >= 0.9 * t0
+        converged = graft.tools.Profile.converged(passTotal(passes(passes.length - 3)),
+          passTotal(passes(passes.length - 2)), passTotal(passes.last))
       }
     }
     // publish from the agreeing pair: per query, the faster of the last

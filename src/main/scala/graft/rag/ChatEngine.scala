@@ -54,23 +54,23 @@ class ChatEngine(
 
   val CompletionsTable = "completions"
 
-  // TX2 cache-aside (ChatService.cs:15, :45-73): the session/message
-  // table is read once per mutation epoch, not once per call. Safe
-  // because the COW store's segment files are immutable — the cached
-  // plan can never see torn state; mutations invalidate wholesale.
-  private var completionsCache: Option[DataFrame] = None
-
-  private def completionsDF: DataFrame = completionsCache.getOrElse {
-    val df = store.read(CompletionsTable)
-    val cached = if (df.columns.isEmpty) df else df.cache()
-    completionsCache = Some(cached)
-    cached
+  // TX2 (ChatService.cs:15, :45-73) as a per-session partition read:
+  // `completions` is partitioned by SessionId, so one read and one
+  // collect fetch a session's messages (J1) and its session row. A call
+  // costs O(its session), not O(every session), and always sees the
+  // last commit, whichever engine made it.
+  private def sessionRows(sessionId: String): Seq[CompletionRow] = {
+    val df = store.readPartitions(CompletionsTable, Seq(sessionId))
+    if (df.columns.isEmpty) Seq.empty
+    // two ids can sanitize to one partition key: keep the exact id only
+    else df.filter(col("SessionId") === sessionId).as[CompletionRow].collect().toSeq
   }
 
-  private def invalidateCompletions(): Unit = {
-    completionsCache.foreach(df => if (df.columns.nonEmpty) df.unpersist())
-    completionsCache = None
-  }
+  private def sessionRow(rows: Seq[CompletionRow]): Option[CompletionRow] =
+    rows.find(_.Type == CompletionRow.TypeSession)
+
+  private def messages(rows: Seq[CompletionRow]): Seq[CompletionRow] =
+    rows.filter(_.Type == CompletionRow.TypeMessage)
 
   // retail system prompt, OpenAiService.cs:26-36
   val systemPrompt: String =
@@ -96,16 +96,7 @@ class ChatEngine(
     else
       store.upsert(CompletionsTable, Seq(CompletionRow.session(id, name)).toDS().toDF(),
         keys = Seq("Type", "SessionId", "Id"))
-    invalidateCompletions()
     id
-  }
-
-  private def sessionMessages(sessionId: String): Seq[CompletionRow] = {
-    val df = completionsDF
-    if (df.columns.isEmpty) Seq.empty
-    else df.filter(col("Type") === CompletionRow.TypeMessage &&
-        col("SessionId") === sessionId) // J1
-      .as[CompletionRow].collect().toSeq
   }
 
   /** Chunked ingest: split long documents into overlapping word windows
@@ -189,8 +180,9 @@ class ChatEngine(
       id = UUID.randomUUID().toString)
 
     val retrieved = vectorSearch(table, userPrompt, idCol)
+    val rows = sessionRows(sessionId)
     val history = TokenBudget.conversationHistory(
-      sessionMessages(sessionId).map(m => (m.TimeStamp.get, m.Tokens.get, m.Text.get)),
+      messages(rows).map(m => (m.TimeStamp.get, m.Tokens.get, m.Text.get)),
       maxConversationTokens)
     val (augmented, convAndPrompt) =
       TokenBudget.buildPrompts(userPrompt, history, retrieved, maxCompletionTokens)
@@ -203,25 +195,21 @@ class ChatEngine(
       ts = new Timestamp(now.getTime + 1), id = UUID.randomUUID().toString)
 
     // A1 running total + TX1 single-commit (session + 2 messages)
-    val prevUsed = completionsDF
-      .filter(col("Type") === CompletionRow.TypeSession && col("SessionId") === sessionId)
-      .select("TokensUsed", "Name").as[(Option[Int], Option[String])]
-      .collect().headOption.getOrElse((Some(0), Some("New Chat")))
-    val newUsed = prevUsed._1.getOrElse(0) +
+    val prev = sessionRow(rows)
+    val newUsed = prev.flatMap(_.TokensUsed).getOrElse(0) +
       promptMessage.Tokens.get + completionMessage.PromptTokens.get + completionMessage.Tokens.get
-    val sessionRow = CompletionRow.session(sessionId, prevUsed._2.getOrElse("New Chat"), newUsed)
+    val session = CompletionRow.session(sessionId, prev.flatMap(_.Name).getOrElse("New Chat"), newUsed)
 
     store.upsert(CompletionsTable,
-      Seq(sessionRow, promptMessage, completionMessage).toDS().toDF(),
+      Seq(session, promptMessage, completionMessage).toDS().toDF(),
       keys = Seq("Type", "SessionId", "Id"))
-    invalidateCompletions()
     completionMessage
   }
 
   /** GetSessionsAsync (MongoDbService.cs:446-462): all session rows as
     * (sessionId, name, tokensUsed), the NavMenu listing surface. */
   def sessions(): Seq[(String, String, Int)] = {
-    val df = completionsDF
+    val df = store.read(CompletionsTable)
     if (df.columns.isEmpty) Seq.empty
     else df.filter(col("Type") === CompletionRow.TypeSession)
       .select("SessionId", "Name", "TokensUsed")
@@ -243,34 +231,24 @@ class ChatEngine(
     if (store.exists(CompletionsTable)) {
       store.delete(CompletionsTable, col("SessionId") === sessionId,
         touchedParts = Some(Seq(sessionId)))
-      invalidateCompletions()
     }
   }
 
   /** Summarize-and-rename agent (ChatService.cs:273-282 + X4 regex). */
   def summarizeSessionName(sessionId: String): String = {
-    val text = sessionMessages(sessionId).sortBy(_.TimeStamp.get.getTime)
-      .flatMap(_.Text).mkString("\n")
+    val rows = sessionRows(sessionId)
+    val text = messages(rows).sortBy(_.TimeStamp.get.getTime).flatMap(_.Text).mkString("\n")
     val (summary, _, _) = completions.complete(
       "Summarize this prompt in one or two words to use as a label", text)
     val name = summary.replaceAll("[^a-zA-Z0-9\\s]", "") // OpenAiService.cs:244
+    val used = sessionRow(rows).flatMap(_.TokensUsed).getOrElse(0)
     store.upsert(CompletionsTable,
-      Seq(sessionTokensRow(sessionId, name)).toDS().toDF(),
+      Seq(CompletionRow.session(sessionId, name, used)).toDS().toDF(),
       keys = Seq("Type", "SessionId", "Id"))
-    invalidateCompletions()
     name
-  }
-
-  private def sessionTokensRow(sessionId: String, name: String): CompletionRow = {
-    val used = completionsDF
-      .filter(col("Type") === CompletionRow.TypeSession && col("SessionId") === sessionId)
-      .select("TokensUsed").as[Option[Int]].collect().headOption.flatten.getOrElse(0)
-    CompletionRow.session(sessionId, name, used)
   }
 
   /** Session TokensUsed (NavMenu.razor:63 surface). */
   def tokensUsed(sessionId: String): Int =
-    completionsDF
-      .filter(col("Type") === CompletionRow.TypeSession && col("SessionId") === sessionId)
-      .select("TokensUsed").as[Option[Int]].collect().headOption.flatten.getOrElse(0)
+    sessionRow(sessionRows(sessionId)).flatMap(_.TokensUsed).getOrElse(0)
 }

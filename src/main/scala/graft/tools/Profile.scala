@@ -3,9 +3,10 @@ package graft.tools
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.{GraftSession, ScaleSmoke, SparkEntry}
 import graft.store.Scratch
@@ -20,7 +21,10 @@ import graft.store.Scratch
   *  - `ab`: [[Passes]] interleaved passes over the names in one JVM,
   *    publishing the min of the last three, so a 10-20% change is
   *    resolvable above JIT warm-in noise — the paired A/B a performance
-  *    claim needs (the round's artifact still comes from graft.Bench);
+  *    claim needs (the round's artifact still comes from graft.Bench).
+  *    Each line says whether its last three passes meet Bench's
+  *    [[converged]] rule; `converged=false` marks a min3 taken while the
+  *    name was still warming in;
   *  - `jobs`: one run per query with a line per Spark job (duration, gap
   *    since the previous job ended, tasks, call site) and every stage of
   *    150 ms or more. The gap column is driver-side time (planning, FS
@@ -46,6 +50,13 @@ object Profile {
   /** Passes of the `ab` mode. */
   val Passes = 7
 
+  /** Bench's converged-pair rule over three consecutive timings: the last
+    * two agree within 5%, and the last is not more than 10% below the
+    * first (two agreeing passes on a still-falling curve are a warm-in
+    * step, not a steady state). */
+  def converged(t0: Double, t1: Double, t2: Double): Boolean =
+    math.abs(t1 - t2) <= 0.05 * math.max(t1, t2) && t2 >= 0.9 * t0
+
   private val Modes = Set("time", "ab", "jobs", "plan", "scale")
 
   /** One Spark job of a run: wall-clock millis, tasks of its stages. */
@@ -68,10 +79,27 @@ object Profile {
     private val jobs = new ConcurrentLinkedQueue[Job]()
     private val stages = new ConcurrentLinkedQueue[Stage]()
 
+    // SQL jobs set neither `callSite.short` nor a description. A job's
+    // result stage (highest id) holds its call stack, user frames first;
+    // a job run on a broadcast or subquery thread holds only that pool's
+    // frames, so it also looks at the stack of the SQL execution it serves.
+    private val execStacks = new ConcurrentHashMap[Long, String]()
+
+    /** The first engine frame outside this tool. */
+    private def engineFrame(stack: String): Option[String] =
+      stack.linesIterator.find(f => f.startsWith("graft.") && !f.startsWith("graft.tools."))
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart if recording => execStacks.put(x.executionId, x.details)
+      case _ =>
+    }
+
     override def onJobStart(js: SparkListenerJobStart): Unit = if (recording) {
-      def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
-      val desc = prop("callSite.short").getOrElse("") + " | " +
-        prop("spark.job.description").map(_.replace('\n', ' ').take(40)).getOrElse("")
+      val stack = js.stageInfos.sortBy(-_.stageId).headOption.map(_.details).getOrElse("")
+      val exec = Option(js.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .flatMap(id => Option(execStacks.get(id.toLong)))
+      val desc = (engineFrame(stack) ++ exec.flatMap(engineFrame) ++
+        (exec.toSeq :+ stack).flatMap(_.linesIterator.nextOption())).headOption.getOrElse("")
       started.put(js.jobId, Job(js.jobId, js.time, -1L, js.stageInfos.map(_.numTasks).sum, desc))
     }
 
@@ -88,6 +116,7 @@ object Profile {
       def drain[A](q: ConcurrentLinkedQueue[A]): List[A] =
         Iterator.continually(q.poll()).takeWhile(_ != null).toList
       started.clear()
+      execStacks.clear()
       (drain(jobs).sortBy(_.id), drain(stages).sortBy(_.id))
     }
   }
@@ -172,9 +201,12 @@ object Profile {
           names.indices.foreach { i =>
             val xs = passes.map(_(i))
             val r = xs.last
-            out(f"[ab] ${names(i)}%-28s min3=${xs.takeRight(3).map(_.sec).min}%.3f  all=" +
+            val last3 = xs.takeRight(3).map(_.sec)
+            val Seq(t0, t1, t2) = last3
+            val steady = last3.forall(_ >= 0) && converged(t0, t1, t2)
+            out(f"[ab] ${names(i)}%-28s min3=${last3.min}%.3f  all=" +
               xs.map(x => f"${x.sec}%.2f").mkString(",") +
-              s"  jobs=${r.jobs.size} tasks=${r.tasks} gap_ms=${r.gapMs}")
+              s"  converged=$steady jobs=${r.jobs.size} tasks=${r.tasks} gap_ms=${r.gapMs}")
           }
         case "jobs" => names.foreach(n => jobTable(once(spark, n, sfDir)).foreach(out))
       }

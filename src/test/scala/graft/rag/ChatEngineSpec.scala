@@ -1,9 +1,12 @@
 package graft.rag
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlBridge
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
-import graft.model.Product
+import graft.model.{CompletionRow, Product}
 import graft.store.DocumentStore
 import graft.store.Scratch
 
@@ -30,9 +33,9 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
     Product("p8", "c-helmets", "Accessories, Helmets", "HL-2", "Tour Helmet",
       "aero tour helmet", 44.99))
 
-  private def newEngine() = {
+  private def newEngine(completions: CompletionClient = new EchoCompletionClient) = {
     val store = new DocumentStore(spark, Scratch.dir(spark, "rag"))
-    val eng = new ChatEngine(spark, store, maxSearchResults = 4)
+    val eng = new ChatEngine(spark, store, completions = completions, maxSearchResults = 4)
     eng.ingest("products",
       products.toDS().toDF().withColumn("doc_text",
         org.apache.spark.sql.functions.concat_ws(" ",
@@ -41,6 +44,25 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
           org.apache.spark.sql.functions.col("categoryName"))),
       textCol = "doc_text", partitionCol = Some("categoryId"))
     (eng, store)
+  }
+
+  /** Echo client that keeps the user-side prompt of every call: the
+    * conversation history the engine assembled, then the question. */
+  private final class Recording extends CompletionClient {
+    val prompts = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val echo = new EchoCompletionClient
+    override def complete(systemPrompt: String, userPrompt: String): (String, Int, Int) = {
+      prompts += userPrompt
+      echo.complete(systemPrompt, userPrompt)
+    }
+  }
+
+  /** A1 over the stored rows of `sid`: Σ(Tokens + PromptTokens) of its
+    * messages (a user message's PromptTokens is 0), and their count. */
+  private def messageSums(store: DocumentStore, sid: String): (Int, Int) = {
+    val msgs = store.read("completions")
+      .filter("Type = 'Message'").as[CompletionRow].collect().filter(_.SessionId == sid)
+    (msgs.map(m => m.Tokens.get + m.PromptTokens.get).sum, msgs.length)
   }
 
   test("flagship slice: search -> prompts -> completion -> persisted TX") {
@@ -136,35 +158,108 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
     assert(aug2 == "tiny rag" && cu2 == "small talk\n" + user)
   }
 
-  test("TX2 cache-aside: one store read per mutation epoch (ChatService.cs:45-73)") {
+  test("TX2 per-session read: one readPartitions per turn, no whole-table read") {
     class CountingStore(root: String) extends DocumentStore(spark, root) {
-      val reads = new java.util.concurrent.atomic.AtomicInteger(0)
+      val reads = new AtomicInteger(0)
+      val partReads = new AtomicInteger(0)
       override def read(table: String) = {
         if (table == "completions") reads.incrementAndGet()
         super.read(table)
       }
+      override def readPartitions(table: String, partKeys: Seq[String]) = {
+        if (table == "completions") partReads.incrementAndGet()
+        super.readPartitions(table, partKeys)
+      }
     }
-    val store = new CountingStore(Scratch.dir(spark, "rag-cache"))
+    val store = new CountingStore(Scratch.dir(spark, "rag-reads"))
     val eng = new ChatEngine(spark, store, maxSearchResults = 4)
     eng.ingest("products", products.toDS().toDF().withColumn("doc_text",
       org.apache.spark.sql.functions.col("description")), textCol = "doc_text")
     val sid = eng.createSession()
-    eng.complete(sid, "products", "What socks do you have?")
-    val afterComplete = store.reads.get()
-    val used = eng.tokensUsed(sid)
-    eng.tokensUsed(sid); eng.tokensUsed(sid); eng.tokensUsed(sid)
-    // repeated reads hit the cache: exactly ONE store read for all four
-    assert(store.reads.get() == afterComplete + 1,
-      s"expected 1 read for 4 tokensUsed calls, saw ${store.reads.get() - afterComplete}")
-    // and the cached answer still reflects the last mutation
-    assert(used > 0 && eng.tokensUsed(sid) == used)
-    // a new mutation invalidates: next read goes back to the store
-    eng.complete(sid, "products", "And helmets?")
-    val afterSecond = store.reads.get()
-    eng.tokensUsed(sid)
-    assert(store.reads.get() == afterSecond + 1)
-    eng.tokensUsed(sid)
-    assert(store.reads.get() == afterSecond + 1)
+    for (q <- Seq("What socks do you have?", "And helmets?")) {
+      val before = store.partReads.get()
+      eng.complete(sid, "products", q)
+      assert(store.partReads.get() == before + 1, s"partition reads in one turn ($q)")
+    }
+    assert(eng.tokensUsed(sid) > 0)
+    assert(eng.summarizeSessionName(sid).nonEmpty)
+    assert(store.reads.get() == 0, "complete/tokensUsed/summarizeSessionName read the whole table")
+    // the listing of every session is the one whole-table read
+    assert(eng.sessions().map(_._1) == Seq(sid))
+    assert(store.reads.get() == 1)
+  }
+
+  test("read-only calls pin no stale session: two engines on one store lose no turn") {
+    val recording = new Recording
+    val (a, store) = newEngine(recording)
+    val b = new ChatEngine(spark, store, maxSearchResults = 4)
+    val sid = a.createSession()
+    a.complete(sid, "products", "What socks do you have?")
+    a.tokensUsed(sid)
+    b.complete(sid, "products", "Do you sell helmets?")
+    assert(a.tokensUsed(sid) == b.tokensUsed(sid), "A serves the total from before B's turn")
+    a.complete(sid, "products", "And bikes?")
+    assert(recording.prompts.last.contains("Do you sell helmets?"), "B's turn missing from A's history")
+    val (sum, n) = messageSums(store, sid)
+    assert(n == 6)
+    assert(a.tokensUsed(sid) == sum && b.tokensUsed(sid) == sum, "TokensUsed != its messages' sum")
+  }
+
+  /** Spark jobs one `complete` submits while `others` other sessions (a
+    * session row and 2 messages each) sit in `completions`. Only jobs
+    * carrying this thread's marker property count. */
+  private def jobsPerTurn(others: Int): Int = {
+    val (eng, store) = newEngine()
+    val t0 = new java.sql.Timestamp(0L)
+    val rows = CompletionRow.session("target") +: (0 until others).flatMap { i =>
+      val sid = s"other-$i"
+      CompletionRow.session(sid, tokensUsed = 4) +: Seq("User", "Assistant").map(who =>
+        CompletionRow.message(sid, who, s"$who says hi", tokens = 2, promptTokens = 0,
+          ts = t0, id = s"$sid-$who"))
+    }
+    store.create(eng.CompletionsTable, rows.toDS().toDF(), partitionCol = Some("SessionId"))
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.turn") == "on"))
+          jobs.incrementAndGet()
+    }
+    assert(GraftSqlBridge.drainListeners(sc))
+    sc.addSparkListener(counter)
+    sc.setLocalProperty("graft.spec.turn", "on")
+    try {
+      eng.complete("target", "products", "What socks do you have?")
+      assert(GraftSqlBridge.drainListeners(sc))
+    } finally {
+      sc.setLocalProperty("graft.spec.turn", null)
+      sc.removeSparkListener(counter)
+    }
+    jobs.get()
+  }
+
+  test("a turn reads only its session: equal jobs with 0 and 200 other sessions") {
+    val alone = jobsPerTurn(0)
+    assert(alone > 0)
+    assert(jobsPerTurn(200) == alone)
+  }
+
+  test("two session ids on one partition key keep separate histories and totals") {
+    val recording = new Recording
+    val (eng, store) = newEngine(recording)
+    // both sanitize to the partition key `a_b`
+    val Seq(x, y) = Seq("a.b", "a_b").map(id => eng.createSession(id = id))
+    eng.complete(x, "products", "What socks do you have?")
+    eng.complete(y, "products", "What bikes do you have?")
+    eng.complete(x, "products", "And helmets?")
+    assert(recording.prompts.last.contains("What socks do you have?"))
+    assert(!recording.prompts.last.contains("What bikes do you have?"), "y's turn in x's history")
+    for ((sid, turns) <- Seq(x -> 2, y -> 1)) {
+      val (sum, n) = messageSums(store, sid)
+      assert(n == 2 * turns, s"$sid messages")
+      assert(eng.tokensUsed(sid) == sum, s"$sid TokensUsed")
+    }
+    assert(eng.sessions().map(_._1).toSet == Set(x, y))
   }
 
   test("summarize-and-rename agent strips non-alphanumerics (X4)") {

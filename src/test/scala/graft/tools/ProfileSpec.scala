@@ -30,6 +30,27 @@ class ProfileSpec extends AnyFunSuite with SparkSuite {
     assert(field(good, "rows") > 0, good)
   }
 
+  test("jobs names each job from its result stage's call stack") {
+    val out = lines("jobs", Profile.select("q01"))
+    val Row = """\s*\d+\s+-?\d+\s+\d+\s+\d+  (.*)""".r
+    val descs = out.collect { case Row(desc) => desc }
+    assert(descs.nonEmpty, out.mkString("\n"))
+    assert(descs.forall(_.trim.nonEmpty), out.mkString("\n"))
+    assert(out.last.startsWith("[profile] q01_agg_pricing"), out.last)
+  }
+
+  test("ab applies Bench's converged-pair rule to each name's last passes") {
+    // the still-falling q155 tails `ab` used to publish as steady state
+    assert(!Profile.converged(1.66, 1.15, 0.95))
+    assert(!Profile.converged(0.97, 0.97, 0.85))
+    // agreeing pair, but more than 10% below the pass before: a warm-in step
+    assert(!Profile.converged(1.20, 1.00, 1.00))
+    assert(Profile.converged(0.10, 0.095, 0.094))
+    val Seq(line) = lines("ab", Profile.select("q01"))
+    assert(line.startsWith("[ab] q01_agg_pricing"), line)
+    assert(line.contains(" converged=true ") || line.contains(" converged=false "), line)
+  }
+
   test("headline selects exactly the headline queries") {
     assert(Profile.select("headline") == SparkEntry.headlineQueries)
   }
