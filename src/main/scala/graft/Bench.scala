@@ -18,6 +18,27 @@ object Bench {
       java.nio.file.Files.write(path, content.getBytes("UTF-8"))
       true
     }
+
+  /** The false-plateau guard: true when at least 80% of the queries
+    * timed in both captures moved more than 10% in the same direction —
+    * the signature of a machine-wide shift (load, cores, thermal), not of
+    * a code change. Failed (-1) timings are left out. */
+  private[graft] def uniformDrift(prev: Map[String, Double], now: Map[String, Double]): Boolean = {
+    val ratios = now.toSeq.collect { case (q, v) if v > 0 && prev.get(q).exists(_ > 0) => v / prev(q) }
+    val moved = math.max(ratios.count(_ > 1.1), ratios.count(_ < 0.9))
+    ratios.nonEmpty && moved >= 0.8 * ratios.size
+  }
+
+  /** `full_precision_queries` of an earlier BENCH_FULL.json; empty when
+    * there is none or it does not parse. */
+  private[graft] def previousQueries(path: java.nio.file.Path): Map[String, Double] =
+    try {
+      import scala.jdk.CollectionConverters._
+      val qs = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(java.nio.file.Files.readAllBytes(path)).get("full_precision_queries")
+      qs.properties().asScala.map(e => e.getKey -> e.getValue.asDouble()).toMap
+    } catch { case _: Exception => Map.empty }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -150,7 +171,11 @@ object Bench {
     val loadsJson = loads.map(fmt).mkString("[", ",", "]")
     val sweptJson = swept.mkString("[", ",", "]")
     val heapsJson = heaps.mkString("[", ",", "]")
-    val diag = s"""{"metric":"bench_diag","published_pass":$publishedPass,"loadavg":$loadsJson,"heap_used_mb":$heapsJson,"quiet_waited_sec":${fmt(quietWaited)}}"""
+    // compared before BENCH_FULL.json is overwritten below
+    val fullPath = java.nio.file.Paths.get("BENCH_FULL.json")
+    val drift = uniformDrift(previousQueries(fullPath),
+      results.map { case (k, (v, _)) => k -> v }.toMap)
+    val diag = s"""{"metric":"bench_diag","published_pass":$publishedPass,"loadavg":$loadsJson,"heap_used_mb":$heapsJson,"quiet_waited_sec":${fmt(quietWaited)},"suspect_uniform_drift":$drift}"""
     val main = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","passes":$passTotals,"converged":$converged,"dirty_capture":$dirtyStart,"start_loadavg":${fmt(startLoad)},"swept_rdds":$sweptJson,"cpus":$cpus}"""
     // full-precision artifact to a file the tail cap cannot touch —
     // FULL runs only: a SPARK_GRAFT_ONLY probe run must never overwrite
@@ -160,8 +185,7 @@ object Bench {
       val full = s"""{"main":$main,"diag":$diag,"full_precision_queries":${
         results.map { case (k, (v, _)) => "\"" + k + "\":" + v }
           .mkString("{", ",", "}")}}"""
-      writeFullArtifact(java.nio.file.Paths.get("BENCH_FULL.json"),
-        filtered = only.nonEmpty, full)
+      writeFullArtifact(fullPath, filtered = only.nonEmpty, full)
     } catch { case _: Exception => () }
     println(diag)
     // LAST line = the driver-contract metric line, sized for the tail

@@ -152,8 +152,9 @@ object ScaleSmoke {
       "q104_store_compact", "q97_domain_mix", "q106_token_budget_mix",
       // r7 additions: q129 = 10× real image decodes + hash grouping;
       // q137 = BPE training where the relabeled copies make the
-      // vocabulary itself 10× (the vocab-bounded-iteration claim's
-      // worst case — word count AND distinct words both scale)
+      // vocabulary itself 10× (the bounded-vocabulary-collect claim's
+      // worst case — word count AND distinct words both scale; the
+      // driver merge loop pays for distinct words only)
       "q129_image_phash_dedup", "q137_bpe_train",
       // r9 additions: q155 = PageRank over 10 disjoint graph copies
       // (edges ×10, 5 iterations of join+agg); q159 = inverted index

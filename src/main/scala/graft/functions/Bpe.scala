@@ -143,8 +143,8 @@ final class Bpe(merges: Array[(Int, Int)]) extends TokenCodec {
 
 object Bpe {
   /** Resource path of the vocabulary shipped with the library (trained
-    * offline by [[BpeTrainer]] on the synthetic documents corpus — see
-    * the trainer's main). */
+    * offline by [[BpeTrainer.learnMerges]] on
+    * [[BpeTrainer.shippedCorpus]] at sf0.01 — see the trainer's main). */
   val DefaultResource = "/graft/bpe/merges.txt"
 
   /** The shipped codec. Loading is per-JVM lazy, so executors pay it

@@ -330,23 +330,19 @@ object TextEvalQueries extends QuerySet {
       |ORDER BY g.cluster_id""".stripMargin
 
   /** BPE ENCODE with the trained merge table — q137's other half: the
-    * corpus vocabulary is re-encoded through the 12 learned merges in
-    * training order, and the gate compares the COMPLETE per-word token
-    * split ('~'-joined symbols) plus token counts. Any divergence in
-    * merge choice, application order, or the boundary-anchored replace
-    * (e.g. a merge firing inside a multi-char token) changes some
-    * word's encoding and breaks the hash. Encoding is k narrow
-    * `replace` projections over the vocab-bounded word table — the
-    * corpus is touched once for frequencies and never again. */
+    * corpus vocabulary's encoding after the 12 learned merges, and the
+    * gate compares the COMPLETE per-word token split ('~'-joined
+    * symbols) plus token counts. Any divergence in merge choice,
+    * application order, or token boundaries (e.g. a merge firing inside
+    * a multi-char token) changes some word's encoding and breaks the
+    * hash. The encoding is the merge loop's final word state: the corpus
+    * is touched once for frequencies and never again. */
   private def q210(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.BpeTrainer
-    val words = BpeTrainer.wordFreqs(t(s, d, "documents"), "text")
-    val (merges, _) = BpeTrainer.train(words, numMerges = 12)
-    val seeded = words.select(col("w"),
-      concat_ws(" ", split(col("w"), "")).as("toks"), col("cnt"))
-    BpeTrainer.applyMerges(seeded, "toks", merges)
-      .select(col("w"), col("cnt"), col("toks"),
-        size(split(col("toks"), " ")).cast("long").as("n_tokens"))
+    val bpe = graft.functions.BpeTrainer.trainWords(t(s, d, "documents"), "text",
+      numMerges = 12, site = "q210_bpe_apply")
+    import s.implicits._
+    bpe.words.map { case (w, cnt, toks) => (w, cnt, toks.mkString(" "), toks.length.toLong) }
+      .toDF("w", "cnt", "toks", "n_tokens")
       .orderBy(col("w"))
   }
 

@@ -1289,19 +1289,18 @@ object TextQueries extends QuerySet {
     Q("q434_leakage_safe_split", q434, Some(q434Sql)),
     Q("q435_loop_detection", q435, Some(q435Sql)))
 
-  /** BPE vocabulary training via [[graft.operators.BpeTrainer]]: 12
+  /** BPE vocabulary training via [[graft.functions.BpeTrainer]]: 12
     * merges induced from the documents corpus (one corpus pass for the
-    * word-frequency table, then vocab-bounded iterations). The merge
-    * table IS the output; the oracle replays training verbatim as
-    * unrolled CTE steps (pair-count argmax + literal replace per step),
-    * so a wrong count, tie-break, or merge application at ANY step
-    * changes every later merge and breaks the hash. */
+    * word-frequency table, a bounded collect, then the driver merge
+    * loop). The merge table IS the output; the oracle replays training
+    * verbatim as unrolled CTE steps (pair-count argmax + literal replace
+    * per step), so a wrong count, tie-break, or merge application at ANY
+    * step changes every later merge and breaks the hash. */
   private def q137(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.BpeTrainer
-    val words = BpeTrainer.wordFreqs(t(s, d, "documents"), "text")
-    val (merges, _) = BpeTrainer.train(words, numMerges = 12)
+    val bpe = graft.functions.BpeTrainer.trainWords(t(s, d, "documents"), "text",
+      numMerges = 12, site = "q137_bpe_train")
     import s.implicits._
-    merges.toDF("step", "pair").orderBy(col("step"))
+    bpe.merges.zipWithIndex.map { case (pr, i) => (i + 1, pr) }.toDF("step", "pair")
   }
 
   // lazy: declared below the `queries` val, which captures it at init
@@ -1320,9 +1319,12 @@ object TextQueries extends QuerySet {
         |  FROM (SELECT unnest(list_zip(string_split(toks,' '), string_split(toks,' ')[2:])) AS z, cnt FROM w${s - 1})
         |  WHERE z[2] IS NOT NULL GROUP BY 1)""".stripMargin
       ctes += s"b$s AS (SELECT pr FROM p$s ORDER BY c DESC, pr LIMIT 1)"
-      // boundary-anchored merge, exactly as BpeTrainer.mergeExpr: pad the
-      // word with sentinel spaces, replace ' left right ' -> ' left~right '
-      // twice (two passes reach the fixpoint for adjacent runs), trim
+      // boundary-anchored merge, the SQL form of BpeTrainer.mergeLoop's
+      // left-to-right application: pad the word with sentinel spaces,
+      // replace ' left right ' -> ' left~right ' twice (a left-to-right
+      // replace consumes a match's trailing space, so it skips every
+      // second occurrence in a run like 'l r l r'; two misses are never
+      // adjacent, so the second pass catches them all), trim
       ctes += s"""b${s}x AS (SELECT ' ' || pr || ' ' AS pat, ' ' || replace(pr,' ','~') || ' ' AS rep FROM b$s)"""
       ctes += s"""w$s AS MATERIALIZED (SELECT trim(replace(replace(' ' || toks || ' ',
         |  (SELECT pat FROM b${s}x), (SELECT rep FROM b${s}x)),

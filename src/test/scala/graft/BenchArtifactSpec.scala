@@ -38,6 +38,35 @@ class BenchArtifactSpec extends AnyFunSuite {
     Files.delete(f)
   }
 
+  private val prev = (1 to 10).map(i => s"q$i" -> i.toDouble).toMap
+
+  test("uniform drift: every query 20% faster is suspect") {
+    assert(Bench.uniformDrift(prev, prev.map { case (k, v) => k -> v * 0.8 }))
+  }
+
+  test("uniform drift: 8 of 10 queries 15% slower is suspect") {
+    val now = prev.map { case (k, v) => k -> (if (v <= 8) v * 1.15 else v) }
+    assert(Bench.uniformDrift(prev, now))
+  }
+
+  test("uniform drift: mixed moves are not suspect, nor is a failed query") {
+    val now = prev.map { case (k, v) => k -> (if (v <= 5) v * 1.3 else v * 0.7) }
+    assert(!Bench.uniformDrift(prev, now))
+    // q1 failing (-1) leaves 7 of 9 comparable queries faster: below 80%
+    val failed = prev.map { case (k, v) => k -> (if (v <= 8) v * 0.8 else v) } + ("q1" -> -1.0)
+    assert(!Bench.uniformDrift(prev, failed))
+    assert(!Bench.uniformDrift(Map.empty, prev))
+  }
+
+  test("the previous artifact's full-precision timings are read back") {
+    val f = Files.createTempFile("bench-full-", ".json")
+    Files.write(f, """{"main":{},"full_precision_queries":{"q1":0.25,"q2":1.5}}""".getBytes("UTF-8"))
+    assert(Bench.previousQueries(f) == Map("q1" -> 0.25, "q2" -> 1.5))
+    Files.write(f, "not json".getBytes("UTF-8"))
+    assert(Bench.previousQueries(f).isEmpty)
+    Files.delete(f)
+  }
+
   test("the repo artifact is schema-complete: every headline has a real median") {
     val path = java.nio.file.Paths.get("BENCH_FULL.json")
     assume(Files.exists(path), "no BENCH_FULL.json in the working tree")
