@@ -13,7 +13,12 @@ import org.apache.spark.sql.SparkSession
   *    healthy at 1000 executors;
   *  - nanosAsLong: the `events` table ships TIMESTAMP(NANOS) parquet,
   *    which vanilla Spark refuses; we read it as long and rebuild a
-  *    micro-precision timestamp in [[Tables]].
+  *    micro-precision timestamp in [[Tables]];
+  *  - outputTimestampType TIMESTAMP_MICROS: Spark-written parquet stores
+  *    timestamps as INT64 micros, the encoding the store's driver-local
+  *    writer uses, instead of the legacy INT96 default — otherwise
+  *    `LocalParquet.readIfExact` declines every partition Spark's writer
+  *    last wrote and its upserts never return to the driver-local path.
   *
   * The engine's SQL functions install through [[GraftExtensions]], the
   * same path `spark.sql.extensions` takes on a cluster. Extensions apply
@@ -29,6 +34,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()

@@ -140,9 +140,9 @@ object TextIndexQueries extends QuerySet {
     * search, the q139 pattern: the source-of-truth corpus mutates
     * (delete + edit + insert epochs), [[graft.store.DocumentStore.changeFeed]]
     * emits exactly the touched keys, and
-    * [[graft.search.InvertedIndex.remove]]/[[graft.search.InvertedIndex.add]]
-    * rewrite only the touched term buckets (COW — untouched buckets are
-    * carried by manifest reference). In-query gate: postings, docmap AND
+    * [[graft.search.InvertedIndex.applyChanges]] takes the feed as it is
+    * and rewrites only the touched term buckets, one commit per table
+    * (COW — untouched buckets are carried by manifest reference). In-query gate: postings, docmap AND
     * meta must hash-equal a FULL REBUILD over the mutated corpus
     * (both-ways exceptAll), so a stale posting or drifted corpus stat
     * zeroes the output even when it isn't in the top-k. The ranked query
@@ -164,14 +164,7 @@ object TextIndexQueries extends QuerySet {
       .select((col("doc_id") + 1000000L).as("doc_id"),
         concat(lit("graftnewterm table "), col("text")).as("text"))
     src.upsert("docs", changed.unionByName(inserted), keys = Seq("doc_id")) // v3
-    val feed = src.changeFeed("docs", 1, 3, Seq("doc_id")).cache()
-    InvertedIndex.remove(s, dir,
-      feed.filter(col("change") === "delete").select("doc_id")
-        .collect().map(_.getLong(0)).toSeq)
-    InvertedIndex.add(s, dir,
-      feed.filter(col("change").isin("insert", "update"))
-        .select(col("doc_id"), col("text")), "doc_id", "text")
-    feed.unpersist(blocking = false)
+    InvertedIndex.applyChanges(s, dir, src.changeFeed("docs", 1, 3, Seq("doc_id")))
     val dir2 = Scratch.dir(s, "q161-rebuild")
     // parity rebuild: pin to the maintained index's committed layout
     InvertedIndex.build(src.read("docs"), "doc_id", "text", dir2,

@@ -32,22 +32,24 @@ import graft.store.DocumentStore
   * posting row — +8 bytes per posting buys BM25 serving with ZERO joins
   * beyond the tiny per-term df aggregate.
   *
-  * Incremental maintenance (the IvfStore.add/remove pattern — COW: only
-  * touched partitions are rewritten, one atomic manifest swap each):
-  *  - [[add]] upserts documents (insert or replace): old postings of
-  *    re-added docs are dropped from exactly their old buckets (via
-  *    docmap), fresh postings land in their new buckets;
-  *  - [[remove]] deletes documents from exactly the buckets docmap names.
-  * Corpus stats (n_docs / n_tokened / total_len) are maintained by exact
-  * integer delta — never a rescan — so df/idf NEVER serve stale: document
-  * frequency is computed live from the posting lists the query already
-  * reads (one extra aggregate over in-flight data), and the corpus-size
-  * terms come from the transactionally-maintained meta row. There is no
-  * refresh threshold to tune because nothing drifts. Mutations are
-  * single-writer (the store's CAS makes racing writers fail loudly, not
-  * corrupt); one logical mutation is 3-4 store commits, so a crash
-  * between them leaves a visibly half-synced index — re-run the sync (all
-  * operations are idempotent re-applications of the same delta).
+  * Incremental maintenance has ONE path, [[applyChanges]]: a change batch
+  * (insert/update/delete rows, one per id — the change feed's shape)
+  * lands in one postings commit and one docmap commit (COW: only touched
+  * buckets are rewritten; a pure-insert batch appends). [[add]], [[remove]]
+  * and the streaming sink ([[graft.streaming.IndexIngest]]) are thin
+  * callers of it. Victims are located through docmap, never a scan, and
+  * every driver result is bounded by the committed bucket count, never
+  * by the batch size. Corpus stats (n_docs / n_tokened / total_len) are
+  * maintained by exact integer delta — never a rescan — so df/idf NEVER
+  * serve stale: document frequency is computed live from the posting
+  * lists the query already reads (one extra aggregate over in-flight
+  * data), and the corpus-size terms come from the transactionally-
+  * maintained meta row. There is no refresh threshold to tune because
+  * nothing drifts. Mutations are single-writer (the store's CAS makes
+  * racing writers fail loudly, not corrupt); one batch is 3 store
+  * commits, so a crash between them leaves a visibly half-synced index —
+  * re-run the sync (a batch is an idempotent re-application of the same
+  * delta).
   *
   * Scoring:
   *  - [[search]] — conjunctive exact-integer TF·IDF: idf weight =
@@ -137,7 +139,7 @@ object InvertedIndex {
     val path = store.tablePath("meta")
     val v0 = store.version("meta")
     store.create("meta", Seq((m.buckets, m.nDocs, m.nTokened, m.totalLen, m.tok))
-      .toDF("buckets", "n_docs", "n_tokened", "total_len", "tok").coalesce(1))
+      .toDF("buckets", "n_docs", "n_tokened", "total_len", "tok"))
     // Memoize what we just committed (r20): the writer KNOWS the new
     // meta, so the next maintenance/search call's readMeta becomes a
     // pure hit instead of a ~200 ms Spark read job per mutation epoch.
@@ -161,15 +163,6 @@ object InvertedIndex {
     terms.distinct.toDF("term")
       .withColumn("bucket", Splits.hashBucket(Splits.stringKey(col("term")), buckets))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-  }
-
-  /** Doc id → docmap bucket, same one-implementation rule as
-    * [[termBuckets]]. */
-  private def docBuckets(spark: SparkSession, ids: Seq[Long], buckets: Int): Map[Long, Int] = {
-    import spark.implicits._
-    ids.distinct.toDF("doc_id")
-      .withColumn("dbucket", Splits.hashBucket(col("doc_id"), buckets))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
   }
 
   /** (bucket, term, doc_id, tf, len) for a batch of documents — the
@@ -275,251 +268,100 @@ object InvertedIndex {
   def layoutBuckets(spark: SparkSession, dir: String): Int =
     readMeta(new DocumentStore(spark, dir)).buckets
 
-  /** Docmap rows for a set of ids: manifest-pruned to the ids' dbuckets,
-    * delta-bounded collect (one short row per existing victim). */
-  private def victimRows(store: DocumentStore, ids: Seq[Long],
-                         meta: Meta): Array[(Long, Long, Seq[Int])] = {
-    if (ids.isEmpty) return Array.empty
-    val dbs = docBuckets(store.spark, ids, meta.buckets).values.toSeq.distinct
-    val dm = store.readPartitions("docmap", dbs.map(_.toString))
-    if (dm.columns.isEmpty) Array.empty
-    else dm.filter(col("doc_id").isin(ids.map(java.lang.Long.valueOf): _*))
-      .select(col("doc_id"), col("len"), col("buckets"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
-  }
-
-  /** Incremental add/replace of documents (insert-or-update — the change
-    * feed's `insert`/`update` rows go here verbatim). Old postings of
-    * re-added documents are dropped from exactly their old term buckets
-    * (located via docmap, never a scan); fresh postings are upserted into
-    * their new buckets. Corpus stats move by exact integer delta. */
+  /** Upsert documents (insert or replace) — [[applyChanges]] with every
+    * distinct id as an update. */
   def add(spark: SparkSession, dir: String, docs: DataFrame,
-          idCol: String, textCol: String): Unit = {
-    val store = new DocumentStore(spark, dir)
-    val meta = readMeta(store)
-    val batch = docs.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("__text")).dropDuplicates("doc_id").persist()
-    try {
-      val ids = batch.select("doc_id").collect().map(_.getLong(0)).toSeq
-      if (ids.isEmpty) return
-      val victims = victimRows(store, ids, meta)
-      val oldBuckets = victims.flatMap(_._3).distinct
-      // fresh postings + docmap rows for the batch. With NO victims
-      // (pure insert — the streaming sink's commonest trigger) every row
-      // is new by construction, so both tables APPEND segments instead
-      // of rewriting every bucket the batch's terms hash into: a 20-doc
-      // insert costs O(batch), not O(index) (the q172 profile's 7 s
-      // fixed cost). Re-adds replace in ONE commit (upsertDropping):
-      // new rows land and the victims' old postings leave their old
-      // buckets — located via docmap, never a scan — without the
-      // delete-then-upsert double rewrite of the touched buckets.
-      val post = postingsOf(batch, "doc_id", "__text", meta.tok, meta.buckets).persist()
-      val dmap = docmapOf(batch, "doc_id", post, meta.buckets).persist()
-      if (victims.isEmpty) {
-        store.append("postings", post)
-        store.append("docmap", dmap)
-      } else {
-        import spark.implicits._
-        val victimIdsDf = victims.map(_._1).toSeq.toDF("doc_id")
-        store.upsertDropping("postings", post,
-          keys = Seq("bucket", "term", "doc_id"),
-          dropKeysDf = victimIdsDf, dropKeys = Seq("doc_id"),
-          dropParts = Some(oldBuckets.map(_.toString)))
-        store.upsert("docmap", dmap, keys = Seq("dbucket", "doc_id"))
-      }
-      // 3. exact stat delta: batch contribution minus victim contribution.
-      // Aggregated over the CACHED dmap the docmap write just
-      // materialized (r20) — count(len>0)/sum(len) there equal the old
-      // per-post-group count/first(len) sums exactly (len = Σtf > 0 iff
-      // the doc has postings), without re-running the posting aggregate.
-      val st = dmap.agg(count(when(col("len") > 0, 1)).as("nt"),
-        coalesce(sum(col("len")), lit(0L)).as("tl")).head()
-      post.unpersist(blocking = false)
-      dmap.unpersist(blocking = false)
-      writeMeta(store, meta.copy(
-        nDocs = meta.nDocs + ids.size - victims.length,
-        nTokened = meta.nTokened + st.getLong(0) - victims.count(_._2 > 0),
-        totalLen = meta.totalLen + st.getLong(1) - victims.map(_._2).sum))
-    } finally batch.unpersist(blocking = false)
-  }
+          idCol: String, textCol: String): Unit =
+    applyChanges(spark, dir, docs.select(lit("update").as("change"),
+      col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
+      .dropDuplicates("doc_id"))
 
-  /** Incremental removal by id: docmap names exactly the term buckets
-    * holding the victims' postings — only those (plus the victims' docmap
-    * buckets) are rewritten. Unknown ids are a no-op. */
-  def remove(spark: SparkSession, dir: String, ids: Seq[Long]): Unit = {
-    if (ids.isEmpty) return
-    val store = new DocumentStore(spark, dir)
-    val meta = readMeta(store)
-    val victims = victimRows(store, ids, meta)
-    if (victims.isEmpty) return
-    val victimIds = victims.map(v => java.lang.Long.valueOf(v._1)).toSeq
-    val oldBuckets = victims.flatMap(_._3).distinct
-    if (oldBuckets.nonEmpty)
-      store.delete("postings", col("doc_id").isin(victimIds: _*),
-        touchedParts = Some(oldBuckets.map(_.toString)))
-    val dbs = docBuckets(spark, victims.map(_._1).toSeq, meta.buckets)
-      .values.toSeq.distinct
-    store.delete("docmap", col("doc_id").isin(victimIds: _*),
-      touchedParts = Some(dbs.map(_.toString)))
-    writeMeta(store, meta.copy(
-      nDocs = meta.nDocs - victims.length,
-      nTokened = meta.nTokened - victims.count(_._2 > 0),
-      totalLen = meta.totalLen - victims.map(_._2).sum))
-  }
-
-  /** One-commit-per-table application of a MIXED change batch (deletes +
-    * inserts/updates) — the per-trigger shape of the streaming sink.
-    * remove-then-add pays two full COW cycles over the same term buckets
-    * (a realistic batch's terms touch most buckets, so each cycle reads
-    * and rewrites most of the postings table); this applies the whole
-    * batch in ONE postings commit and ONE docmap commit: all victims'
-    * old rows (deleted docs AND re-added docs, located via docmap) leave
-    * while the batch's new postings land ([[DocumentStore.upsertDropping]]),
-    * and corpus stats move by one exact integer delta. A pure-insert
-    * batch (no victims) APPENDS — O(batch) at any index size.
-    * Contract: `dels` and `ups` ids are DISJOINT (the sink's
-    * last-change-per-key dedup guarantees it; a delete+reinsert batch
-    * lands as the reinsert). */
-  def applyChanges(spark: SparkSession, dir: String, dels: Seq[Long],
-                   ups: DataFrame, idCol: String, textCol: String): Unit =
-    applyChangesImpl(spark, dir, dels, ups, idCol, textCol, knownUpIds = None)
-
-  /** [[applyChanges]] with the upsert ids already known to the caller
-    * (the streaming sink collects them once from its deduped batch) —
-    * skips the per-trigger dropDuplicates shuffle and id re-collect.
-    * Caller contract: `ups` is unique per id and `knownUpIds` is exactly
-    * its id set. */
-  private[graft] def applyChangesImpl(spark: SparkSession, dir: String,
-                   dels: Seq[Long], ups: DataFrame, idCol: String,
-                   textCol: String, knownUpIds: Option[Seq[Long]]): Unit = {
-    import graft.tools.Timing
-    val store = new DocumentStore(spark, dir)
-    val meta = Timing("readMeta")(readMeta(store))
-    val batch0 = ups.select(col(idCol).cast("long").as("doc_id"),
-      col(textCol).as("__text"))
-    val batch = (if (knownUpIds.isEmpty) batch0.dropDuplicates("doc_id")
-                 else batch0).persist()
-    try {
-      val upIds = knownUpIds.getOrElse(Timing("collect-upIds")(
-        batch.select("doc_id").collect().map(_.getLong(0)).toSeq))
-      val delIds = dels.distinct.filterNot(upIds.toSet)
-      if (upIds.isEmpty && delIds.isEmpty) return
-      val victims = Timing("victimRows")(victimRows(store, delIds ++ upIds, meta))
-      val oldBuckets = victims.flatMap(_._3).distinct
-      val post = postingsOf(batch, "doc_id", "__text", meta.tok,
-        meta.buckets).persist()
-      val dmap = docmapOf(batch, "doc_id", post, meta.buckets).persist()
+  /** Delete documents by id — [[applyChanges]] with a delete row per
+    * distinct id. Unknown ids are a no-op. */
+  def remove(spark: SparkSession, dir: String, ids: Seq[Long]): Unit =
+    if (ids.nonEmpty) {
       import spark.implicits._
-      if (victims.isEmpty) {
-        // pure insert: nothing to drop anywhere — both tables append
-        if (upIds.nonEmpty) { Timing("append-postings")(store.append("postings", post))
-                              Timing("append-docmap")(store.append("docmap", dmap)) }
-      } else {
-        val victimIdsDf = victims.map(_._1).toSeq.toDF("doc_id")
-        Timing("upsertDropping-postings")(store.upsertDropping("postings", post,
-          keys = Seq("bucket", "term", "doc_id"),
-          dropKeysDf = victimIdsDf, dropKeys = Seq("doc_id"),
-          dropParts = Some(oldBuckets.map(_.toString))))
-        val delVictims = victims.filter(v => delIds.contains(v._1))
-        val delDbs = docBuckets(spark, delVictims.map(_._1).toSeq,
-          meta.buckets).values.toSeq.distinct
-        Timing("upsertDropping-docmap")(store.upsertDropping("docmap", dmap,
-          keys = Seq("dbucket", "doc_id"),
-          dropKeysDf = delVictims.map(_._1).toSeq.toDF("doc_id"),
-          dropKeys = Seq("doc_id"),
-          dropParts = Some(delDbs.map(_.toString))))
-      }
-      // stat delta over the CACHED dmap (r20): count(len>0)/sum(len)
-      // equal the per-post-group count/first(len) sums exactly, and the
-      // docmap write just materialized the cache — no posting re-aggregate
-      val st = Timing("stats-agg")(dmap.agg(
-        count(when(col("len") > 0, 1)).as("nt"),
-        coalesce(sum(col("len")), lit(0L)).as("tl")).head())
-      post.unpersist(blocking = false)
-      dmap.unpersist(blocking = false)
-      Timing("writeMeta")(writeMeta(store, meta.copy(
-        nDocs = meta.nDocs + upIds.size - victims.length,
-        nTokened = meta.nTokened + st.getLong(0) - victims.count(_._2 > 0),
-        totalLen = meta.totalLen + st.getLong(1) - victims.map(_._2).sum)))
-    } finally batch.unpersist(blocking = false)
-  }
+      applyChanges(spark, dir, ids.distinct.toDF("doc_id")
+        .select(lit("delete").as("change"), col("doc_id"), lit(null).cast("string").as("text")))
+    }
 
-  /** Bulk form of [[applyChanges]] for batches too large to collect ids
-    * to the driver (r20, the r19 verdict's IndexIngest guard): the
-    * per-trigger `(change, id)` collect is delta-bounded under
-    * `maxFilesPerTrigger`, but a bulk BACKFILL routed through the
-    * streaming sink would collect millions of ids — this variant keeps
-    * the batch distributed end to end. Victims come from one docmap
-    * semi-join (no manifest pruning: a bulk batch touches most buckets
-    * anyway); only BOUNDED results reach the driver — the victim stat
-    * deltas (1 row), the touched bucket ids (≤ the index's bucket
-    * count), and the batch's insert/update count (1 row). Semantics are
-    * identical to [[applyChanges]]: one postings commit, one docmap
-    * commit, exact integer stat deltas, pure inserts append.
+  /** The one maintenance path: apply a change batch — columns (change ∈
+    * insert/update/delete, doc_id, text), at most one row per doc_id (the
+    * store's [[DocumentStore.changeFeed]] shape) — in ONE postings commit
+    * and ONE docmap commit. Every victim (a changed id already indexed)
+    * leaves its old term buckets, named by docmap, while the batch's
+    * fresh postings land ([[DocumentStore.upsertDropping]]); a batch
+    * with no victims appends both tables, O(batch) at any index size.
+    * Corpus stats move by one exact integer delta.
     *
-    * `batch` contract: columns (__change ∈ insert/update/delete,
-    * doc_id long, __text), at most one row per doc_id (the sink's
-    * last-change-per-key dedup). */
-  private[graft] def applyChangesDistributed(spark: SparkSession, dir: String,
-                                             batch: DataFrame): Unit = {
+    * No driver result depends on the batch size, so one path serves a
+    * 20-doc trigger and a bulk backfill alike. The batch reduces to ONE
+    * row (its ids' docmap buckets); victims are a docmap read pruned to
+    * those buckets and joined to the batch (one row per id, so the join
+    * is a semi-join carrying the change); victims and the fresh docmap
+    * rows reduce to ONE delta row (counts, stat deltas, the old term
+    * buckets and the deleted ids' docmap buckets). Every bucket list is
+    * bounded by the committed bucket count, as are the store's own
+    * collects (touched partition keys). */
+  def applyChanges(spark: SparkSession, dir: String, changes: DataFrame): Unit = {
     import graft.tools.Timing
     val store = new DocumentStore(spark, dir)
     val meta = Timing("readMeta")(readMeta(store))
-    val b = batch.persist()
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def hold(df: DataFrame): DataFrame = { held += df; df.persist() }
     try {
-      val ups = b.filter(col("__change").isin("insert", "update"))
-        .select(col("doc_id"), col("__text"))
-      val upCount = Timing("bulk-upcount")(ups.count())
-      // victim docmap rows for EVERY changed id (deletes and re-adds):
-      // one distributed semi-join; rows never visit the driver
-      val dmapAll = store.read("docmap")
-      val victims = dmapAll
-        .join(b.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .persist()
-      val vstat = Timing("bulk-victim-stats")(victims.agg(
-        count(lit(1)).as("n"),
-        count(when(col("len") > 0, 1)).as("nt"),
-        coalesce(sum(col("len")), lit(0L)).as("tl")).head())
-      val nVictims = vstat.getLong(0)
-      val post = postingsOf(b.filter(col("__change").isin("insert", "update")),
-        "doc_id", "__text", meta.tok, meta.buckets).persist()
-      val dmap = docmapOf(ups, "doc_id", post, meta.buckets).persist()
+      val batch = hold(changes.select(col("change"),
+        col("doc_id").cast("long").as("doc_id"), col("text")))
+      val idBuckets = Timing("batch-agg")(batch
+        .agg(collect_set(Splits.hashBucket(col("doc_id"), meta.buckets))).head().getSeq[Int](0))
+      if (idBuckets.isEmpty) return
+      val ups = batch.filter(col("change").isin("insert", "update"))
+      val post = hold(postingsOf(ups, "doc_id", "text", meta.tok, meta.buckets))
+      val dmap = hold(docmapOf(ups, "doc_id", post, meta.buckets))
+      // the victims: docmap rows of every changed id (deletes AND re-adds),
+      // shuffled by doc_id so the rewrites' drop-key distincts need none
+      val dm = store.readPartitions("docmap", idBuckets.map(_.toString))
+      val victims = hold((if (dm.columns.isEmpty) dmap.limit(0) else dm)
+        .join(batch.select(col("doc_id"), col("change")).hint("shuffle_hash"), "doc_id"))
+      // ONE row for the whole delta: victims count -1 and fresh docmap
+      // rows +1. A victim spans one row per old term bucket
+      // (posexplode_outer keeps a token-less victim as one null-bucket
+      // row); position 0 or null marks its first.
+      val old = col("__old")
+      val first = coalesce(col("__pos"), lit(0)) === 0
+      val sign = when(old, -1L).otherwise(1L)
+      val d = Timing("delta-agg")(victims
+        .select(lit(true).as("__old"), col("len"), col("dbucket"), col("change"),
+          posexplode_outer(col("buckets")).as(Seq("__pos", "__bk")))
+        .unionByName(dmap.select(lit(false).as("__old"), col("len"), col("dbucket"),
+          lit(null).cast("string").as("change"), lit(0).as("__pos"),
+          lit(null).cast("int").as("__bk")))
+        .agg(count(when(old && first, 1)), count(when(!old, 1)),
+          coalesce(sum(when(first && col("len") > 0, sign)), lit(0L)),
+          coalesce(sum(when(first, sign * col("len"))), lit(0L)),
+          collect_set(col("__bk")), collect_set(when(col("change") === "delete", col("dbucket"))))
+        .head())
+      val nVictims = d.getLong(0)
+      if (nVictims == 0 && d.getLong(1) == 0) return
       if (nVictims == 0) {
-        if (upCount > 0) {
-          Timing("append-postings")(store.append("postings", post))
-          Timing("append-docmap")(store.append("docmap", dmap))
-        }
+        Timing("append-postings")(store.append("postings", post))
+        Timing("append-docmap")(store.append("docmap", dmap))
       } else {
-        // touched term buckets: bounded by the committed bucket count
-        val oldBuckets = Timing("bulk-oldbuckets")(
-          victims.select(explode(col("buckets")).as("__bk")).distinct()
-            .collect().map(_.getInt(0)).toSeq)
         Timing("upsertDropping-postings")(store.upsertDropping("postings", post,
           keys = Seq("bucket", "term", "doc_id"),
           dropKeysDf = victims.select(col("doc_id")), dropKeys = Seq("doc_id"),
-          dropParts = Some(oldBuckets.map(_.toString))))
-        val delVictims = victims
-          .join(b.filter(col("__change") === "delete").select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-        val delDbs = delVictims.select(col("dbucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq
+          dropParts = Some(d.getSeq[Int](4).map(_.toString))))
         Timing("upsertDropping-docmap")(store.upsertDropping("docmap", dmap,
           keys = Seq("dbucket", "doc_id"),
-          dropKeysDf = delVictims.select(col("doc_id")),
+          dropKeysDf = victims.filter(col("change") === "delete").select(col("doc_id")),
           dropKeys = Seq("doc_id"),
-          dropParts = Some(delDbs.map(_.toString))))
+          dropParts = Some(d.getSeq[Int](5).map(_.toString))))
       }
-      val st = Timing("stats-agg")(dmap.agg(
-        count(when(col("len") > 0, 1)).as("nt"),
-        coalesce(sum(col("len")), lit(0L)).as("tl")).head())
-      post.unpersist(blocking = false)
-      dmap.unpersist(blocking = false)
-      victims.unpersist(blocking = false)
       Timing("writeMeta")(writeMeta(store, meta.copy(
-        nDocs = meta.nDocs + upCount - nVictims,
-        nTokened = meta.nTokened + st.getLong(0) - vstat.getLong(1),
-        totalLen = meta.totalLen + st.getLong(1) - vstat.getLong(2))))
-    } finally b.unpersist(blocking = false)
+        nDocs = meta.nDocs + d.getLong(1) - nVictims,
+        nTokened = meta.nTokened + d.getLong(2),
+        totalLen = meta.totalLen + d.getLong(3))))
+    } finally held.foreach(_.unpersist(blocking = false))
   }
 
   /** The pruned posting stream for a term set: ≤ |terms| buckets read via

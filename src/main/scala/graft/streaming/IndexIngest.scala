@@ -9,26 +9,27 @@ import graft.search.InvertedIndex
   * q161 batch sync — the reference keeps its search index "searchable
   * in near real-time" by applying point add/remove as data changes
   * (AddRemoveData.cs:64-105, README.md:182-194); here the change feed
-  * is a Structured Streaming source and the sink applies
-  * [[InvertedIndex.add]]/[[InvertedIndex.remove]] per micro-batch, so
-  * a freshly ingested document is phrase/BM25/tf·idf-searchable one
-  * trigger later.
+  * is a Structured Streaming source and the sink hands each
+  * micro-batch to the index's one maintenance path,
+  * [[InvertedIndex.applyChanges]] (one postings commit and one docmap
+  * commit per trigger), so a freshly ingested document is
+  * phrase/BM25/tf·idf-searchable one trigger later.
   *
   * Input contract: rows (change, id, text) where `change` ∈
   * {insert, update, delete} — exactly [[graft.store.DocumentStore.changeFeed]]'s
   * shape, or any CDC feed mapped onto it.
   *
   * Delivery semantics: foreachBatch may replay a batch after a crash;
-  * both index mutations are idempotent re-applications of the same
-  * delta (add replaces a doc's postings wholesale via the docmap,
-  * remove of an absent doc is a no-op), so replays converge to the
-  * same index — the same effective-exactly-once-per-key argument as
-  * [[VectorIngest]]. In-batch duplicates for one key collapse to the
-  * LAST change before applying (a delete+reinsert in one batch lands
-  * as the reinsert).
+  * applying a batch is an idempotent re-application of the same delta
+  * (a replayed id is found in docmap and replaced wholesale, a delete of
+  * an absent doc is a no-op), so replays converge to the same index —
+  * the same effective-exactly-once-per-key argument as [[VectorIngest]].
+  * In-batch duplicates for one key collapse to the LAST change before
+  * applying (a delete+reinsert in one batch lands as the reinsert).
   *
-  * Scale notes: each micro-batch's cost is the q161 bound — touched
-  * term buckets only, COW, corpus stats by integer delta; index state
+  * Scale notes: the sink collects nothing per trigger — every driver
+  * result of the apply path is bounded by the index's bucket count, so
+  * a 20-doc trigger and a bulk backfill take the same path; index state
   * lives on disk + checkpoint, executors hold nothing across batches. */
 object IndexIngest {
 
@@ -43,70 +44,16 @@ object IndexIngest {
     changes.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        import graft.tools.Timing
-        val spark = batch.sparkSession
         // last change per key wins within the batch
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col(idCol))
           .orderBy(versionCol.map(col(_).desc)
             .getOrElse(monotonically_increasing_id().desc))
-        val one = batch
+        InvertedIndex.applyChanges(batch.sparkSession, indexDir, batch
           .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .persist()
-        try {
-          // ONE delta-bounded collect serves emptiness, the delete ids,
-          // AND the upsert ids (the per-trigger isEmpty probe plus two
-          // id collects each cost a full driver job — guide §5).
-          // GUARDED (r20): the collect is only delta-bounded because
-          // triggers are (maxFilesPerTrigger) — a bulk backfill replayed
-          // through this sink would collect millions of ids, so the
-          // probe stops at the threshold and oversized batches take the
-          // fully distributed path instead (guide §5: the driver does
-          // no data work it cannot bound).
-          val maxCollect = spark.conf
-            .getOption("spark.graft.index.maxTriggerCollect")
-            .map(_.trim) match {
-            case None => 100000
-            case Some(s) =>
-              val v = try s.toInt catch {
-                case _: NumberFormatException =>
-                  throw new IllegalArgumentException(
-                    "spark.graft.index.maxTriggerCollect must be a " +
-                      s"positive integer, got '$s'")
-              }
-              require(v >= 1,
-                s"spark.graft.index.maxTriggerCollect must be >= 1, got $v")
-              v
-          }
-          val changed = Timing("collect-changes")(one
-            .select(col(changeCol).as("__c"), col(idCol).cast("long").as("__id"))
-            .limit(maxCollect + 1)
-            .collect())
-          if (changed.length > maxCollect) {
-            // oversized trigger: never finish the collect — apply the
-            // whole batch distributed (bounded driver results only)
-            InvertedIndex.applyChangesDistributed(spark, indexDir,
-              one.select(col(changeCol).as("__change"),
-                col(idCol).cast("long").as("doc_id"),
-                col(textCol).as("__text")))
-          } else if (changed.nonEmpty) {
-            val dels = changed.iterator
-              .filter(_.getString(0) == "delete").map(_.getLong(1)).toSeq
-            val upIds = changed.iterator
-              .filter(r => r.getString(0) == "insert" || r.getString(0) == "update")
-              .map(_.getLong(1)).toSeq
-            val ups = one.filter(col(changeCol).isin("insert", "update"))
-              .select(col(idCol), col(textCol))
-            // ONE postings commit + ONE docmap commit for the whole
-            // batch (deletes and re-adds drop in the same COW cycle the
-            // new rows land in; pure inserts append) — remove-then-add
-            // paid two full cycles over the same buckets per trigger
-            InvertedIndex.applyChangesImpl(spark, indexDir, dels, ups,
-              idCol, textCol, knownUpIds = Some(upIds))
-          }
-        } finally { one.unpersist(); () }
-        ()
+          .filter(col("__rn") === 1)
+          .select(col(changeCol).as("change"), col(idCol).as("doc_id"),
+            col(textCol).as("text")))
       }
       .start()
 }

@@ -98,6 +98,31 @@ class LocalUpsertSpec extends AnyFunSuite with SparkSuite {
     assert(f.exists(!_.matches("part-00000-[0-9a-f]{8}\\.parquet")), f.toString)
   }
 
+  test("Spark-written timestamp partition returns to the driver-local path") {
+    val store = newStore()
+    // more rows than the local writer's gate: `create` goes through
+    // Spark's writer, which must store the timestamp as INT64 micros.
+    // Nullable columns, as in a chat session table (Spark writes a
+    // non-nullable column as REQUIRED, which the footer gate declines)
+    val big = spark.range(12000).select((col("id") % 3).cast("string").as("sid"),
+      col("id"), timestamp_micros(col("id") * 1000003L).as("ts"), col("id").as("v"))
+    store.create("t", spark.createDataFrame(big.rdd,
+      StructType(big.schema.map(_.copy(nullable = true)))), partitionCol = Some("sid"))
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456")
+    store.upsert("t", Seq(("1", 1L, ts, 10L), ("1", 12001L, ts, 11L))
+      .toDF("sid", "id", "ts", "v"), keys = Seq("sid", "id"))
+    val files = new java.io.File(new java.net.URI(store.layout("t")("1")).getPath)
+      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq
+    assert(files.size == 1 && files.head.matches("part-00000-[0-9a-f]{8}\\.parquet"),
+      files.toString)
+    assert(store.read("t").count() == 12001)
+    val got = store.read("t").filter(col("id").isin(1L, 4L)).orderBy(col("id"))
+      .collect().map(r => (r.getLong(1), r.getTimestamp(2), r.getLong(3))).toSeq
+    val carried = new java.sql.Timestamp(4000L) // 4 * 1000003 micros
+    carried.setNanos(12000)
+    assert(got == Seq((1L, ts, 10L), (4L, carried, 4L)))
+  }
+
   test("double keys: NaN, -0.0 and 0.0 match exactly as in the distributed upsert") {
     import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(StructField("sid", StringType),
