@@ -1747,9 +1747,11 @@ object RagQueries extends QuerySet {
       completions = new SqlReplayClient,
       maxConversationTokens = 12,
       maxCompletionTokens = 300)
-    eng.ingest("corpus", docs, "text")
-    val sid = eng.createSession("chat gate", id = "gate-session")
-    chatQs.foreach(q => eng.complete(sid, "corpus", q))
+    try {
+      eng.ingest("corpus", docs, "text")
+      val sid = eng.createSession("chat gate", id = "gate-session")
+      chatQs.foreach(q => eng.complete(sid, "corpus", q))
+    } finally eng.close() // releases the pinned corpus
     store.read(eng.CompletionsTable)
       .select(col("Type").as("type"),
         coalesce(col("Sender"), lit("")).as("sender"),

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import java.util.UUID
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.embed.{Embed, Embedder, HashProjectionEmbedder}
 import graft.functions.Tokenizer
 import graft.model.CompletionRow
@@ -32,6 +33,18 @@ final class EchoCompletionClient extends CompletionClient {
   * (V2); vectorize-on-write embeds documents in one batched stage (V4)
   * instead of per-document HTTP; persistence is the single-commit
   * manifest swap (TX1: session row + prompt + completion message).
+  *
+  * The corpus a search hands its searcher is a PINNED read: the first
+  * search of a table persists its read in Spark's block manager
+  * (`MEMORY_AND_DISK`, so the storage manager spills or evicts instead
+  * of filling the heap), and later searches scan those decoded blocks
+  * for as long as the table's committed segment set stays the same
+  * ([[DocumentStore.keyedRead]]) — the analog of the reference's
+  * memory-resident vector index (MongoDbService.cs:194-227). A commit
+  * by any writer moves the key; the next search releases the old read
+  * and pins the new one. Nothing is pinned at ingest, and `persist` is
+  * lazy, so a searcher that ignores `corpus` never materializes it.
+  * [[close]] releases every pinned read.
   */
 class ChatEngine(
     spark: SparkSession,
@@ -48,7 +61,7 @@ class ChatEngine(
     // ONE codec for both sides of the MaxEmbeddingTokens contract —
     // ingest's document cap and the query-side truncation must count
     // tokens identically or the two halves of the budget disagree
-    codec: graft.functions.TokenCodec = Tokenizer) {
+    codec: graft.functions.TokenCodec = Tokenizer) extends AutoCloseable {
 
   import spark.implicits._
 
@@ -71,6 +84,30 @@ class ChatEngine(
 
   private def messages(rows: Seq[CompletionRow]): Seq[CompletionRow] =
     rows.filter(_.Type == CompletionRow.TypeMessage)
+
+  // table -> (keyedRead key, the persisted read of that version)
+  private val pinned = scala.collection.mutable.Map.empty[String, (String, DataFrame)]
+
+  /** The pinned read of `table`'s current version: re-pinned when the
+    * key moved, or when someone else dropped the cached blocks
+    * (`clearCache`, or another engine's release of an equal plan). */
+  private def corpus(table: String): DataFrame = synchronized {
+    val (key, read) = store.keyedRead(table)
+    pinned.get(table) match {
+      case Some((k, df)) if k == key && df.storageLevel != StorageLevel.NONE => df
+      case old =>
+        old.foreach(_._2.unpersist(blocking = false))
+        val df = read().persist(StorageLevel.MEMORY_AND_DISK)
+        pinned(table) = (key, df)
+        df
+    }
+  }
+
+  /** Releases every pinned corpus read. */
+  override def close(): Unit = synchronized {
+    pinned.values.foreach(_._2.unpersist(blocking = true))
+    pinned.clear()
+  }
 
   // retail system prompt, OpenAiService.cs:26-36
   val systemPrompt: String =
@@ -137,7 +174,7 @@ class ChatEngine(
                           idCol: String = "id", chunkFanout: Int = 3): DataFrame = {
     val qv = embedder.embed(
       Seq(codec.truncateHead(question, maxEmbeddingTokens))).head
-    val chunks = store.read(table)
+    val chunks = corpus(table)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("sim").desc, col("chunk_key"))
     searcher.topK(chunks, "vector", "chunk_num", qv, maxSearchResults * chunkFanout)
@@ -148,7 +185,7 @@ class ChatEngine(
       .limit(maxSearchResults)
   }
 
-  /** V2: embed the question, cosine top-k over the corpus, strip vector
+  /** V2: embed the question, cosine top-k over the pinned corpus, strip vector
     * and id (P1's `$project {_id:0, vector:0}`), space-join stringified
     * hits (A4). `filter` scopes retrieval to matching rows (the
     * reference's data model is category-keyed — (categoryId, _id)
@@ -160,14 +197,12 @@ class ChatEngine(
                    filter: Option[org.apache.spark.sql.Column] = None): String = {
     val qv = embedder.embed(
       Seq(codec.truncateHead(question, maxEmbeddingTokens))).head
-    val corpus = store.read(table)
-    val hits0 = filter match {
-      case Some(p) => searcher.topKWhere(corpus, "vector", idCol, qv, maxSearchResults, p)
-      case None => searcher.topK(corpus, "vector", idCol, qv, maxSearchResults)
+    val rows = corpus(table)
+    val hits = filter match {
+      case Some(p) => searcher.topKWhere(rows, "vector", idCol, qv, maxSearchResults, p)
+      case None => searcher.topK(rows, "vector", idCol, qv, maxSearchResults)
     }
-    val hits = hits0.drop("vector", "sim", idCol)
-    val jsons = hits.toJSON.collect() // k rows only
-    jsons.mkString(" ")
+    ChatEngine.jsonRows(hits.drop("vector", "sim", idCol)).mkString(" ") // k rows only
   }
 
   /** GetChatCompletionAsync (ChatService.cs:119-165). */
@@ -251,4 +286,16 @@ class ChatEngine(
   /** Session TokensUsed (NavMenu.razor:63 surface). */
   def tokensUsed(sessionId: String): Int =
     sessionRow(sessionRows(sessionId)).flatMap(_.TokensUsed).getOrElse(0)
+}
+
+object ChatEngine {
+
+  /** Each row of `df` as one JSON object, byte for byte `df.toJSON`
+    * (differential-tested), but as a projection. Over a top-k it folds
+    * into `TakeOrderedAndProject`, whose collect merges the per-task
+    * heaps on the driver: one stage, no exchange. `toJSON`'s
+    * mapPartitions on top of the top-k forced the single-partition
+    * exchange and a second stage. */
+  private[rag] def jsonRows(df: DataFrame): Array[String] =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0))
 }

@@ -35,7 +35,10 @@ trait VectorSearcher extends Serializable {
     topK(corpus.filter(pred), vecCol, idCol, probe, k)
 }
 
-/** Brute-force scan — always exact, reads the whole corpus once. */
+/** Brute-force scan — always exact, reads the whole corpus it is handed
+  * once per search. [[graft.rag.ChatEngine]] hands it a read pinned in
+  * the block manager while the table's segment set stays the same, so a
+  * chat turn scans decoded blocks instead of re-decoding parquet. */
 object ExactSearcher extends VectorSearcher {
   override def topK(corpus: DataFrame, vecCol: String, idCol: String,
                     probe: Array[Float], k: Int): DataFrame =

@@ -417,6 +417,19 @@ class DocumentStore(val spark: SparkSession, root: String) {
   private def readSnapshot(s: Snapshot): DataFrame =
     if (s.parts.isEmpty) spark.emptyDataFrame else readDirs(s, dirsOf(s.parts))
 
+  /** A key of the current version's contents and its [[read]], from ONE
+    * snapshot; the read is only built when asked for. The key is the
+    * committed schema and the sorted segment dirs, never the version
+    * number: dirs carry attempt-unique tokens, so the key moves with
+    * every commit that changes what a read returns, also across a table
+    * dropped and rebuilt at the same root, whose numbering restarts. A
+    * caller that keeps a read cached (ChatEngine's corpus) re-reads when
+    * the key moves. */
+  def keyedRead(table: String): (String, () => DataFrame) = {
+    val s = snapshot(table)
+    ((s.schema.json +: dirsOf(s.parts).sorted).mkString("\n"), () => readSnapshot(s))
+  }
+
   /** Time-travel read: the table exactly as of committed version `v`
     * (1-based; `version(table)` is the newest). COW segments are
     * immutable, so the snapshot is consistent by construction. Valid
@@ -526,6 +539,8 @@ class DocumentStore(val spark: SparkSession, root: String) {
     *    no scan);
     *  - updates' fields match the committed schema by (name, type) —
     *    schema-evolution upserts take the generic path;
+    *  - no update row holds a null in a field the committed schema
+    *    makes non-nullable (parquet `required`);
     *  - the touched partitions' files total ≤ [[LocalMaxBytes]] COMBINED
     *    — the bound on the driver heap the merge holds — and every
     *    file's footer matches the committed layout byte-for-byte
@@ -541,6 +556,8 @@ class DocumentStore(val spark: SparkSession, root: String) {
     if (!s.partCol.forall(keys.contains) || shape(committed) != shape(updates.schema))
       return false
     val (uRows, keyFn) = localRows(updates, s.partCol, keys).getOrElse(return false)
+    val required = committed.fields.indices.filterNot(committed(_).nullable)
+    if (uRows.exists(r => required.exists(r.isNullAt))) return false
     val touched = uRows.map(keyFn).toSet
     val files = dataFiles(dirsOf(s.parts.filter { case (k, _) => touched.contains(k) }))
     if (files.map(_.getLen).sum > LocalMaxBytes) return false

@@ -32,21 +32,23 @@ import org.apache.spark.sql.types._
 object LocalParquet {
 
   /** Spark → parquet type mapping for the supported atomics (mirrors
-    * SparkToParquetSchemaConverter for these types). None = unsupported,
-    * caller must fall back. */
+    * SparkToParquetSchemaConverter for these types, whose repetition is
+    * `required` for a non-nullable field). None = unsupported, caller
+    * must fall back. */
   private def parquetField(f: StructField): Option[Type] = {
+    val rep = if (f.nullable) Type.Repetition.OPTIONAL else Type.Repetition.REQUIRED
     val b = f.dataType match {
-      case BooleanType => Some(Types.optional(BOOLEAN))
-      case IntegerType => Some(Types.optional(INT32))
-      case LongType => Some(Types.optional(INT64))
-      case FloatType => Some(Types.optional(FLOAT))
-      case DoubleType => Some(Types.optional(DOUBLE))
-      case StringType => Some(Types.optional(BINARY)
+      case BooleanType => Some(Types.primitive(BOOLEAN, rep))
+      case IntegerType => Some(Types.primitive(INT32, rep))
+      case LongType => Some(Types.primitive(INT64, rep))
+      case FloatType => Some(Types.primitive(FLOAT, rep))
+      case DoubleType => Some(Types.primitive(DOUBLE, rep))
+      case StringType => Some(Types.primitive(BINARY, rep)
         .as(LogicalTypeAnnotation.stringType()))
-      case TimestampType => Some(Types.optional(INT64)
+      case TimestampType => Some(Types.primitive(INT64, rep)
         .as(LogicalTypeAnnotation.timestampType(true,
           LogicalTypeAnnotation.TimeUnit.MICROS)))
-      case DateType => Some(Types.optional(INT32)
+      case DateType => Some(Types.primitive(INT32, rep)
         .as(LogicalTypeAnnotation.dateType()))
       case _ => None
     }
@@ -66,7 +68,8 @@ object LocalParquet {
 
   /** Write `rows` as ONE parquet file at `file`. Timestamps are encoded
     * as micros-since-epoch (adjusted to UTC), dates as epoch days —
-    * exactly Spark's encoding for these types. */
+    * exactly Spark's encoding for these types. A null in a non-nullable
+    * field fails loudly: a `required` column cannot hold it. */
   def write(conf: Configuration, file: HPath, schema: StructType,
             rows: Seq[Row]): Unit = {
     val mt = messageType(schema)
@@ -109,6 +112,8 @@ object LocalParquet {
           case other =>
             throw new IllegalArgumentException(s"unsupported type $other")
         }
+        else if (!schema.fields(i).nullable)
+          throw new IllegalArgumentException(s"null in non-nullable field ${schema.fields(i).name}")
         i += 1
       }
       w.write(g)

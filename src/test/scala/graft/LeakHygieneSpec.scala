@@ -73,6 +73,13 @@ class LeakHygieneSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("the q398 chat-turn gate leaves zero pinned RDDs (its engine closes " +
+      "the pinned corpus)") {
+    sweep()
+    assert(SparkEntry.queries("q398_chat_turn")(spark, sf).count() > 0)
+    assert(pinned == 0, s"q398_chat_turn left $pinned persistent RDDs pinned")
+  }
+
   test("every iterative graph gate leaves zero pinned RDDs " +
       "(kcore, label_prop, bfs, harmonic, hits)") {
     for (q <- Seq("q190_kcore", "q191_label_propagation", "q194_bfs_hops",

@@ -2,6 +2,7 @@ package graft.rag
 
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftSqlBridge
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,8 +34,9 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
     Product("p8", "c-helmets", "Accessories, Helmets", "HL-2", "Tour Helmet",
       "aero tour helmet", 44.99))
 
-  private def newEngine(completions: CompletionClient = new EchoCompletionClient) = {
-    val store = new DocumentStore(spark, Scratch.dir(spark, "rag"))
+  private def newEngine(completions: CompletionClient = new EchoCompletionClient,
+                        root: String = Scratch.dir(spark, "rag")) = {
+    val store = new DocumentStore(spark, root)
     val eng = new ChatEngine(spark, store, completions = completions, maxSearchResults = 4)
     eng.ingest("products",
       products.toDS().toDF().withColumn("doc_text",
@@ -45,6 +47,18 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
       textCol = "doc_text", partitionCol = Some("categoryId"))
     (eng, store)
   }
+
+  /** Product rows as `ingest` stores them: embedded `doc_text`. */
+  private def embedded(ps: Seq[Product]) = {
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    graft.embed.Embed.withEmbedding(ps.toDS().toDF().withColumn("doc_text",
+      concat_ws(" ", col("name"), col("description"), col("categoryName"))),
+      "doc_text", "vector", graft.embed.HashProjectionEmbedder(dims = 64))
+  }
+
+  private val cosmic = Product("99", "c-socks", "Clothing, Socks", "SO-R999-M",
+    "Cosmic Racing Socks, M", "The product called Cosmic Racing Socks, M", 6.00)
+  private val cosmicText = "Cosmic Racing Socks, M The product called Cosmic Racing Socks, M Clothing, Socks"
 
   /** Echo client that keeps the user-side prompt of every call: the
     * conversation history the engine assembled, then the question. */
@@ -110,16 +124,7 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
       eng.vectorSearch("products", "socks").split("\\{").count(_.contains("Socks"))
     val before = sockCount()
     // add: upsert keyed (categoryId, id) like UpsertProductAsync
-    val sock = Seq(Product("99", "c-socks", "Clothing, Socks", "SO-R999-M",
-      "Cosmic Racing Socks, M", "The product called Cosmic Racing Socks, M", 6.00))
-    val withText = sock.toDS().toDF().withColumn("doc_text",
-      org.apache.spark.sql.functions.concat_ws(" ",
-        org.apache.spark.sql.functions.col("name"),
-        org.apache.spark.sql.functions.col("description"),
-        org.apache.spark.sql.functions.col("categoryName")))
-    val embedded = graft.embed.Embed.withEmbedding(
-      withText, "doc_text", "vector", graft.embed.HashProjectionEmbedder(dims = 64))
-    store.upsert("products", embedded, keys = Seq("categoryId", "id"))
+    store.upsert("products", embedded(Seq(cosmic)), keys = Seq("categoryId", "id"))
     val after = sockCount()
     assert(after >= before) // new sock is searchable immediately
     // remove (DeleteProductAsync)
@@ -205,10 +210,11 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
     assert(a.tokensUsed(sid) == sum && b.tokensUsed(sid) == sum, "TokensUsed != its messages' sum")
   }
 
-  /** Spark jobs one `complete` submits while `others` other sessions (a
-    * session row and 2 messages each) sit in `completions`. Only jobs
-    * carrying this thread's marker property count. */
-  private def jobsPerTurn(others: Int): Int = {
+  /** The stage count of each Spark job one `complete` submits while
+    * `others` other sessions (a session row and 2 messages each) sit in
+    * `completions`. Only jobs carrying this thread's marker property
+    * count. */
+  private def turnJobStages(others: Int): Seq[Int] = {
     val (eng, store) = newEngine()
     val t0 = new java.sql.Timestamp(0L)
     val rows = CompletionRow.session("target") +: (0 until others).flatMap { i =>
@@ -219,11 +225,11 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
     }
     store.create(eng.CompletionsTable, rows.toDS().toDF(), partitionCol = Some("SessionId"))
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val counter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.spec.turn") == "on"))
-          jobs.incrementAndGet()
+          jobs.add(e.stageInfos.size)
     }
     assert(GraftSqlBridge.drainListeners(sc))
     sc.addSparkListener(counter)
@@ -234,14 +240,73 @@ class ChatEngineSpec extends AnyFunSuite with SparkSuite {
     } finally {
       sc.setLocalProperty("graft.spec.turn", null)
       sc.removeSparkListener(counter)
+      eng.close()
     }
-    jobs.get()
+    jobs.asScala.toSeq
   }
 
   test("a turn reads only its session: equal jobs with 0 and 200 other sessions") {
-    val alone = jobsPerTurn(0)
+    val alone = turnJobStages(0).size
     assert(alone > 0)
-    assert(jobsPerTurn(200) == alone)
+    assert(turnJobStages(200).size == alone)
+  }
+
+  test("every job of a turn runs one stage: the top-k heaps merge on the driver") {
+    // the retrieval's JSON projection folds into TakeOrderedAndProject,
+    // whose collect needs no exchange; the session read is one scan
+    val stages = turnJobStages(0)
+    assert(stages.nonEmpty && stages.forall(_ == 1), s"stages per job: $stages")
+  }
+
+  test("pinned corpus: another writer's product upsert is in the next search") {
+    val root = Scratch.dir(spark, "rag-pin")
+    val (a, _) = newEngine(root = root)
+    try {
+      assert(!a.vectorSearch("products", cosmicText).contains("Cosmic"))
+      // engine B: its own store over the same root, as another process
+      val storeB = new DocumentStore(spark, root)
+      val b = new ChatEngine(spark, storeB, maxSearchResults = 4)
+      storeB.upsert("products", embedded(Seq(cosmic)), keys = Seq("categoryId", "id"))
+      assert(b.vectorSearch("products", cosmicText).contains("Cosmic"))
+      assert(a.vectorSearch("products", cosmicText).contains("Cosmic"), "A served its stale pin")
+      b.close()
+    } finally a.close()
+  }
+
+  test("pinned corpus: a store dropped and rebuilt at the same root is never served stale") {
+    val root = Scratch.dir(spark, "rag-rebuild")
+    val (eng, store) = newEngine(root = root)
+    try {
+      assert(eng.vectorSearch("products", "warm wool mountain socks").contains("Socks"))
+      val v = store.version("products")
+      val dir = java.nio.file.Paths.get(root)
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+      Files.createDirectories(dir)
+      // same table, same version numbers, no socks
+      eng.ingest("products", products.filterNot(_.categoryId == "c-socks").toDS().toDF()
+        .withColumn("doc_text", org.apache.spark.sql.functions.col("description")),
+        textCol = "doc_text", partitionCol = Some("categoryId"))
+      assert(store.version("products") == v)
+      val payload = eng.vectorSearch("products", "warm wool mountain socks")
+      assert(payload.nonEmpty && !payload.contains("Socks"), s"stale payload: ${payload.take(200)}")
+    } finally eng.close()
+  }
+
+  test("pinned corpus: at most one pin across version moves; close() releases it") {
+    val (eng, store) = newEngine()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    def pins: Int = (sc.getPersistentRDDs.keySet.toSet -- before).size
+    eng.vectorSearch("products", "socks")
+    assert(pins == 1)
+    for (i <- 1 to 5) {
+      store.upsert("products", embedded(Seq(cosmic.copy(id = s"c$i"))),
+        keys = Seq("categoryId", "id"))
+      assert(eng.vectorSearch("products", s"Cosmic Racing Socks c$i").nonEmpty)
+      assert(pins == 1, s"pinned corpora after version move $i")
+    }
+    eng.close()
+    assert(pins == 0, "close() left the pinned corpus")
   }
 
   test("two session ids on one partition key keep separate histories and totals") {

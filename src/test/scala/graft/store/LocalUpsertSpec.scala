@@ -102,8 +102,7 @@ class LocalUpsertSpec extends AnyFunSuite with SparkSuite {
     val store = newStore()
     // more rows than the local writer's gate: `create` goes through
     // Spark's writer, which must store the timestamp as INT64 micros.
-    // Nullable columns, as in a chat session table (Spark writes a
-    // non-nullable column as REQUIRED, which the footer gate declines)
+    // Nullable columns, as in a chat session table
     val big = spark.range(12000).select((col("id") % 3).cast("string").as("sid"),
       col("id"), timestamp_micros(col("id") * 1000003L).as("ts"), col("id").as("v"))
     store.create("t", spark.createDataFrame(big.rdd,
@@ -121,6 +120,34 @@ class LocalUpsertSpec extends AnyFunSuite with SparkSuite {
     val carried = new java.sql.Timestamp(4000L) // 4 * 1000003 micros
     carried.setNanos(12000)
     assert(got == Seq((1L, ts, 10L), (4L, carried, 4L)))
+  }
+
+  test("Spark-written non-nullable partition takes the driver-local path") {
+    val store = newStore()
+    // spark.range-derived columns are non-nullable: Spark's writer
+    // stores them as `required`, and the footer gate must match that
+    val big = spark.range(12000).select(substring(col("id").cast("string"), -1, 1).as("sid"),
+      col("id"), (col("id") * 2).as("v"))
+    assert(big.schema.forall(!_.nullable))
+    store.create("t", big, partitionCol = Some("sid"))
+    store.upsert("t", Seq(("1", 1L, 10L), ("1", 12001L, 11L)).toDF("sid", "id", "v"),
+      keys = Seq("sid", "id"))
+    val files = new java.io.File(new java.net.URI(store.layout("t")("1")).getPath)
+      .listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq
+    assert(files.size == 1 && files.head.matches("part-00000-[0-9a-f]{8}\\.parquet"),
+      files.toString)
+    assert(store.read("t").count() == 12001)
+    val got = store.read("t").filter(col("id").isin(1L, 4L, 12001L)).orderBy(col("id"))
+      .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((1L, 10L), (4L, 8L), (12001L, 11L)))
+    // a null where the committed column is non-nullable declines to the
+    // generic path, which widens the committed schema
+    val withNull = spark.createDataFrame(
+      java.util.Arrays.asList(Row("2", 2L, null)),
+      StructType(big.schema.map(_.copy(nullable = true))))
+    store.upsert("t", withNull, keys = Seq("sid", "id"))
+    assert(store.read("t").filter(col("id") === 2L).head().isNullAt(2))
+    assert(store.read("t").count() == 12001)
   }
 
   test("double keys: NaN, -0.0 and 0.0 match exactly as in the distributed upsert") {
