@@ -30,8 +30,11 @@ import org.apache.spark.sql.functions._
   * size is bounded by the features' distinct-value domains (the house
   * rule: integral micro-scale features — lengths, token counts), not
   * the corpus; the cumulation is the two-level super-bucket scan
-  * (ExactQuantile.cumulateBuckets's recipe), so even a wide integer
-  * domain never funnels one window task.
+  * (ExactQuantile.cumulateBuckets's recipe), so a wide integer domain
+  * never funnels one window task. Its broadcast offsets relation holds
+  * one row per populated super-bucket of 2^[[SuperBits]] values, so a
+  * feature whose value span needs more than [[MaxSuperBuckets]] of them
+  * fails loudly instead of broadcasting a corpus-scale relation.
   *
   * Selection: minimize weighted Gini ⇔ maximize
   * h = ((posL² + negL²)·nR + (posR² + negR²)·nL) / (nL·nR). Both
@@ -41,6 +44,15 @@ import org.apache.spark.sql.functions._
   * order, so the trained stump replays exactly. */
 object Stump {
 
+  /** Width of a cumulation super-bucket: 2^16 consecutive values. */
+  val SuperBits: Int = 16
+
+  /** The most super-buckets one feature's value span (max - min) may
+    * need: 2^16, i.e. a span below 2^32 values. It bounds the broadcast
+    * offsets relation at 65536 rows per feature; a wider feature (cents
+    * or bytes over ~4e9) must be rescaled first. */
+  val MaxSuperBuckets: Long = 1L << 16
+
   /** Two-level exact cumulation of (count, pos) over the per-value
     * histogram — ExactQuantile.cumulateBuckets generalized to carry
     * the label sum alongside the row count (same three steps:
@@ -48,8 +60,8 @@ object Stump {
     * partitioned in-super cumsum + broadcast offset; integer sums at
     * every level, bit-identical on any partitioning). Adds __hi/__lo
     * (cumulative/exclusive row count) and __cp (cumulative pos). */
-  private def cumulateHist(hist: DataFrame, superBits: Int = 16): DataFrame = {
-    val withSb = hist.withColumn("__sb", shiftright(col("__x"), superBits))
+  private def cumulateHist(hist: DataFrame): DataFrame = {
+    val withSb = hist.withColumn("__sb", shiftright(col("__x"), SuperBits))
     val superTotals = withSb.groupBy(col("feature"), col("__sb"))
       .agg(sum(col("__c")).as("__sc"), sum(col("__p")).as("__sp"))
     val wOff = Window.partitionBy(col("feature")).orderBy(col("__sb"))
@@ -96,14 +108,22 @@ object Stump {
         sum(when(col("__y"), 1L).otherwise(0L)).as("__p"))
       .persist()
     try {
-      // action 1 (materializes the cache): per-feature totals — the
-      // loud population check plus the rank grid, k rows to the driver
+      // action 1 (materializes the cache): per-feature totals and value
+      // range — the loud population and span checks plus the rank grid,
+      // k rows to the driver
       val totRows = hist.groupBy(col("feature"))
-        .agg(sum(col("__c")).as("n"), sum(col("__p")).as("pos"))
-        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+        .agg(sum(col("__c")).as("n"), sum(col("__p")).as("pos"),
+          min(col("__x")).as("lo"), max(col("__x")).as("hi"))
+        .collect().map(r => r.getString(0) ->
+          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
       featureCols.foreach { f =>
         require(totRows.get(f).map(_._1).getOrElse(0L) >= 2,
           s"stump: feature $f has ${totRows.get(f).map(_._1).getOrElse(0L)} usable rows")
+        val (_, _, lo, hi) = totRows(f)
+        val supers = (hi >> SuperBits) - (lo >> SuperBits) + 1
+        require(supers <= MaxSuperBuckets,
+          s"stump: feature $f spans [$lo, $hi], which needs $supers super-buckets of " +
+            s"2^$SuperBits values; Stump.MaxSuperBuckets is $MaxSuperBuckets — rescale the feature")
       }
       // candidate ranks: k·n/(t+1) for k = 1..t (exact integer
       // arithmetic, ranks never exceed n), one (feature, rank) row each

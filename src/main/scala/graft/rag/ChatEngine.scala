@@ -2,7 +2,7 @@ package graft.rag
 
 import java.sql.Timestamp
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.embed.{Embed, Embedder, HashProjectionEmbedder}
@@ -67,17 +67,18 @@ class ChatEngine(
 
   val CompletionsTable = "completions"
 
-  // TX2 (ChatService.cs:15, :45-73) as a per-session partition read:
-  // `completions` is partitioned by SessionId, so one read and one
-  // collect fetch a session's messages (J1) and its session row. A call
-  // costs O(its session), not O(every session), and always sees the
-  // last commit, whichever engine made it.
-  private def sessionRows(sessionId: String): Seq[CompletionRow] = {
-    val df = store.readPartitions(CompletionsTable, Seq(sessionId))
-    if (df.columns.isEmpty) Seq.empty
-    // two ids can sanitize to one partition key: keep the exact id only
-    else df.filter(col("SessionId") === sessionId).as[CompletionRow].collect().toSeq
-  }
+  // TX2 (ChatService.cs:15, :45-73) as a per-session point read on the
+  // driver: `completions` is partitioned by SessionId, so one
+  // `readPartitionRows` fetches a session's messages (J1) and its
+  // session row — from the partition's parquet files directly, with no
+  // Spark job, whenever the store's driver-local read accepts them. A
+  // call costs O(its session), not O(every session), and always sees
+  // the last commit, whichever engine made it.
+  private def sessionRows(sessionId: String): Seq[CompletionRow] =
+    store.readPartitionRows(CompletionsTable, Seq(sessionId))
+      .map(ChatEngine.completionRow)
+      // two ids can sanitize to one partition key: keep the exact id only
+      .filter(_.SessionId == sessionId)
 
   private def sessionRow(rows: Seq[CompletionRow]): Option[CompletionRow] =
     rows.find(_.Type == CompletionRow.TypeSession)
@@ -289,6 +290,25 @@ class ChatEngine(
 }
 
 object ChatEngine {
+
+  /** A `completions` row as a [[CompletionRow]], by field name. */
+  private def completionRow(r: Row): CompletionRow = {
+    def opt[T](name: String)(get: Int => T): Option[T] = {
+      val i = r.fieldIndex(name)
+      if (r.isNullAt(i)) None else Some(get(i))
+    }
+    CompletionRow(
+      Id = r.getAs[String]("Id"), Type = r.getAs[String]("Type"),
+      SessionId = r.getAs[String]("SessionId"),
+      TokensUsed = opt("TokensUsed")(r.getInt), Name = opt("Name")(r.getString),
+      TimeStamp = opt("TimeStamp")(i => r.get(i) match {
+        // java.time.Instant under spark.sql.datetime.java8API.enabled
+        case t: Timestamp => t
+        case t: java.time.Instant => Timestamp.from(t)
+      }),
+      Sender = opt("Sender")(r.getString), Tokens = opt("Tokens")(r.getInt),
+      PromptTokens = opt("PromptTokens")(r.getInt), Text = opt("Text")(r.getString))
+  }
 
   /** Each row of `df` as one JSON object, byte for byte `df.toJSON`
     * (differential-tested), but as a projection. Over a top-k it folds

@@ -348,6 +348,25 @@ class DocumentStore(val spark: SparkSession, root: String) {
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     })
 
+  /** The driver-local read of `s`'s partitions `keys`, with no Spark
+    * job: their rows under the committed schema when every condition
+    * holds, None otherwise (the caller reads with Spark):
+    *
+    *  - the schema's types are all [[LocalParquet.supports]]ed atomics;
+    *  - the partitions' files total ≤ [[LocalMaxBytes]] COMBINED — the
+    *    bound on the driver heap the rows hold;
+    *  - every file's footer matches the committed layout byte-for-byte
+    *    ([[LocalParquet.readIfExact]] — INT96/evolved files decline).
+    *
+    * A partition `s` does not hold reads as no rows. */
+  private def localParts(s: Snapshot, keys: Set[String]): Option[Seq[Row]] = {
+    if (!LocalParquet.supports(s.schema)) return None
+    val files = dataFiles(dirsOf(s.parts.filter { case (k, _) => keys.contains(k) }))
+    if (files.map(_.getLen).sum > LocalMaxBytes) return None
+    Some(files.flatMap(st =>
+      LocalParquet.readIfExact(hconf, st.getPath, s.schema).getOrElse(return None)))
+  }
+
   /** The victim locator: partitions of `s` holding rows whose `keys`
     * tuple appears in `keyRows` (SQL equi-join — null key components
     * never match). When the partition column is part of the key, the
@@ -529,6 +548,20 @@ class DocumentStore(val spark: SparkSession, root: String) {
     if (s.parts.isEmpty) spark.emptyDataFrame else readParts(s, safeKeys(partKeys))
   }
 
+  /** The rows of the named partitions of `table`'s current version, on
+    * the driver, under its committed schema (rows resolve fields by
+    * name) — all from ONE snapshot. Served by [[localParts]] with no
+    * Spark job when it accepts, else by collecting [[readParts]], its
+    * Spark twin; a never-created table has no rows. For session-sized
+    * point reads (ChatEngine's TX2): the Spark path collects whatever
+    * the partitions hold. */
+  def readPartitionRows(table: String, partKeys: Seq[String]): Seq[Row] = {
+    val s = snapshot(table)
+    if (s.parts.isEmpty) return Seq.empty
+    val keys = safeKeys(partKeys)
+    localParts(s, keys).getOrElse(readParts(s, keys).collect().toSeq)
+  }
+
   /** The keyed-upsert driver-local fast path: applies — and commits —
     * the upsert entirely on the driver when every condition holds,
     * returning true; otherwise false with nothing written, and the
@@ -541,10 +574,8 @@ class DocumentStore(val spark: SparkSession, root: String) {
     *    schema-evolution upserts take the generic path;
     *  - no update row holds a null in a field the committed schema
     *    makes non-nullable (parquet `required`);
-    *  - the touched partitions' files total ≤ [[LocalMaxBytes]] COMBINED
-    *    — the bound on the driver heap the merge holds — and every
-    *    file's footer matches the committed layout byte-for-byte
-    *    ([[LocalParquet.readIfExact]] — INT96/evolved files decline).
+    *  - the touched partitions' kept side reads driver-locally
+    *    ([[localParts]]: ≤ [[LocalMaxBytes]] combined, exact footers).
     *
     * Semantics mirror the generic path exactly: SQL anti-join (null
     * keys never match), update-batch duplicates all survive, commit is
@@ -559,10 +590,7 @@ class DocumentStore(val spark: SparkSession, root: String) {
     val required = committed.fields.indices.filterNot(committed(_).nullable)
     if (uRows.exists(r => required.exists(r.isNullAt))) return false
     val touched = uRows.map(keyFn).toSet
-    val files = dataFiles(dirsOf(s.parts.filter { case (k, _) => touched.contains(k) }))
-    if (files.map(_.getLen).sum > LocalMaxBytes) return false
-    val kept = files.flatMap(st =>
-      LocalParquet.readIfExact(hconf, st.getPath, committed).getOrElse(return false))
+    val kept = localParts(s, touched).getOrElse(return false)
     // SQL left_anti on the key columns: null key components never match
     val kidx = keys.map(committed.fieldIndex)
     def keyOf(r: Row): Option[Seq[Any]] = {
@@ -1177,9 +1205,10 @@ object DocumentStore {
   private val SchemaKey = "#schema"
   private val PartColKey = "#partcol"
 
-  /** Combined file bytes of the touched partitions above which a keyed
-    * upsert declines the driver-local path. It bounds the driver heap the
-    * local merge holds (every kept row is materialized there), so it is
-    * a constant, not a knob. */
+  /** Combined file bytes of the partitions above which a driver-local
+    * read ([[DocumentStore.localParts]]: a keyed upsert's kept side,
+    * [[DocumentStore.readPartitionRows]]) declines to Spark. It bounds
+    * the driver heap the local read holds (every row is materialized
+    * there), so it is a constant, not a knob. */
   private[store] val LocalMaxBytes: Long = 8L << 20
 }

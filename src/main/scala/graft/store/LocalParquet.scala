@@ -2,28 +2,32 @@ package graft.store
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
-/** Driver-local parquet writer for METADATA-SCALE commits (guide §5: the
-  * driver should do almost no data work — but a 1-row meta table or a
-  * 10-row chat-session commit is not data work, and launching a full
-  * Spark write job for it costs ~200-900 ms of plan+schedule+commit per
-  * call; measured on the q172/q398 profiles this was a fifth of their
-  * wall). Writes rows straight through parquet-mr with the exact
+/** Driver-local parquet writer and reader for METADATA-SCALE commits
+  * and reads (guide §5: the driver should do almost no data work — but
+  * a 1-row meta table or a 10-row chat-session commit is not data work,
+  * and launching a full Spark write job for it costs ~200-900 ms of
+  * plan+schedule+commit per call; measured on the q172/q398 profiles
+  * this was a fifth of their wall). Writes rows straight through parquet-mr with the exact
   * physical/logical types Spark's own writer would choose for the
   * supported atomic types, so the store's schema-pinned read path
   * (`spark.read.schema(committed)`) is oblivious to which writer
-  * produced a segment.
+  * produced a segment. [[readIfExact]] is the inverse, for partitions
+  * whose every footer is exactly that layout.
   *
   * Scope is deliberately narrow: rows must already be ON the driver (a
   * LocalRelation plan — never a collect of distributed data) and every
@@ -121,61 +125,72 @@ object LocalParquet {
   }
 
   /** Driver-local read of ONE parquet file into Spark-external Rows —
-    * the inverse of [[write]], for the metadata-scale keyed-upsert fast
-    * path (r20): merging a 10-row update into a kB-sized partition does
-    * not need two Spark jobs when parquet-mr can read the kept side in
-    * ~ms. STRICTLY gated by the footer: returns None unless the file's
-    * MessageType is byte-for-byte the layout [[write]] (and Spark, for
-    * these atomics) produces for `schema` — an INT96-timestamp file, a
-    * field-id-annotated file, or any evolved/reordered layout falls
-    * back to the Spark read path at the call site. Values come back in
+    * the inverse of [[write]], for the store's driver-local reads of
+    * metadata-scale partitions (the kept side of a keyed upsert, a chat
+    * session's history): a kB-sized partition does not need a Spark job
+    * when parquet-mr reads it in ~ms. STRICTLY gated by the footer:
+    * returns None unless the file's MessageType is byte-for-byte the
+    * layout [[write]] (and Spark, for these atomics) produces for
+    * `schema` — an INT96-timestamp file, a field-id-annotated file, or
+    * any evolved/reordered layout falls back to the Spark read path at
+    * the call site. Rows carry `schema` (fields resolve by name) and
     * Spark's default external representations (java.sql.Timestamp/Date
     * — consumers writing them back through [[write]] round-trip
-    * exactly). */
+    * exactly).
+    *
+    * The file is opened ONCE, under the caller's `conf`: the footer
+    * check and every row group are read from the same reader. The
+    * one-argument `ParquetFileReader.open` and `ParquetReader.builder`
+    * each build a fresh Hadoop `Configuration`, whose first lookup
+    * re-parses the default XML resources out of the classpath jars —
+    * most of a kB-sized read's cost. */
   def readIfExact(conf: Configuration, file: HPath,
                   schema: StructType): Option[Seq[Row]] = {
     val expected = messageType(schema)
-    val in = HadoopInputFile.fromPath(file, conf)
-    val footerReader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    val actual =
-      try footerReader.getFooter.getFileMetaData.getSchema
-      finally footerReader.close()
-    if (actual != expected) return None
-    val hc = new Configuration(conf)
-    hc.set(ReadSupport.PARQUET_READ_SCHEMA, expected.toString)
-    val reader: ParquetReader[Group] =
-      ParquetReader.builder(new GroupReadSupport(), file).withConf(hc).build()
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file).build())
     try {
+      if (reader.getFooter.getFileMetaData.getSchema != expected) return None
+      val columnIO = new ColumnIOFactory().getColumnIO(expected)
       val out = Seq.newBuilder[Row]
-      var g = reader.read()
-      while (g != null) {
-        val vals = new Array[Any](schema.length)
-        var i = 0
-        while (i < schema.length) {
-          if (g.getFieldRepetitionCount(i) > 0) vals(i) = schema.fields(i).dataType match {
-            case BooleanType => g.getBoolean(i, 0)
-            case IntegerType => g.getInteger(i, 0)
-            case LongType => g.getLong(i, 0)
-            case FloatType => g.getFloat(i, 0)
-            case DoubleType => g.getDouble(i, 0)
-            case StringType => g.getString(i, 0)
-            case TimestampType =>
-              val micros = g.getLong(i, 0)
-              val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-              ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-              ts
-            case DateType =>
-              java.sql.Date.valueOf(
-                java.time.LocalDate.ofEpochDay(g.getInteger(i, 0).toLong))
-            case other =>
-              throw new IllegalArgumentException(s"unsupported type $other")
-          }
-          i += 1
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records = columnIO.getRecordReader(pages, new GroupRecordConverter(expected))
+        var left = pages.getRowCount
+        while (left > 0) {
+          out += fromGroup(records.read(), schema)
+          left -= 1
         }
-        out += Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
-        g = reader.read()
+        pages = reader.readNextRowGroup()
       }
       Some(out.result())
     } finally reader.close()
+  }
+
+  private def fromGroup(g: Group, schema: StructType): Row = {
+    val vals = new Array[Any](schema.length)
+    var i = 0
+    while (i < schema.length) {
+      if (g.getFieldRepetitionCount(i) > 0) vals(i) = schema.fields(i).dataType match {
+        case BooleanType => g.getBoolean(i, 0)
+        case IntegerType => g.getInteger(i, 0)
+        case LongType => g.getLong(i, 0)
+        case FloatType => g.getFloat(i, 0)
+        case DoubleType => g.getDouble(i, 0)
+        case StringType => g.getString(i, 0)
+        case TimestampType =>
+          val micros = g.getLong(i, 0)
+          val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
+          ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+          ts
+        case DateType =>
+          java.sql.Date.valueOf(
+            java.time.LocalDate.ofEpochDay(g.getInteger(i, 0).toLong))
+        case other =>
+          throw new IllegalArgumentException(s"unsupported type $other")
+      }
+      i += 1
+    }
+    new GenericRowWithSchema(vals, schema)
   }
 }

@@ -59,4 +59,16 @@ class StumpSpec extends AnyFunSuite with SparkSuite {
       Seq("n_chars", "n_tokens"), "is_en").head().toString
     assert(a == b)
   }
+
+  test("a feature spanning more than MaxSuperBuckets super-buckets fails loudly") {
+    val width = Stump.MaxSuperBuckets << Stump.SuperBits
+    def rows(hi: Long) = (0L until 40L).map(i => (if (i % 2 == 0) -1L else hi, i % 3 == 0))
+    // at the bound: -1 and width - 1 - 2^16 sit MaxSuperBuckets buckets apart
+    val atBound = width - 1L - (1L << Stump.SuperBits)
+    assert(Stump.train(rows(atBound).toDF("x", "y"), Seq("x"), "y").count() == 1)
+    val e = intercept[IllegalArgumentException](
+      Stump.train(rows(atBound + (1L << Stump.SuperBits)).toDF("x", "y"), Seq("x"), "y"))
+    assert(e.getMessage.contains("Stump.MaxSuperBuckets"), e.getMessage)
+    assert(e.getMessage.contains(s"needs ${Stump.MaxSuperBuckets + 1} super-buckets"), e.getMessage)
+  }
 }

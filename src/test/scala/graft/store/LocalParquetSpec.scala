@@ -93,4 +93,33 @@ class LocalParquetSpec extends AnyFunSuite with SparkSuite {
     assert(back.get(0) == java.sql.Timestamp.from(ins))
     assert(back.get(1) == java.sql.Date.valueOf("2026-02-03"))
   }
+
+  test("readIfExact reads every row group of a multi-group file, and declines a foreign footer") {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val src = spark.range(0, 20000, 1, 1)
+      .select(col("id").cast("int").as("i"), sha2(col("id").cast("string"), 256).as("s"))
+    val schema = StructType(src.schema.map(_.copy(nullable = true)))
+    val dir = Scratch.dir(spark, "lp-groups")
+    // 64 KB row groups: the ~1.5 MB file holds many
+    spark.createDataFrame(src.rdd, schema).write.option("parquet.block.size", 64 << 10)
+      .mode("overwrite").parquet(dir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    val Seq(f) = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf),
+      HadoopReadOptions.builder(conf, f).build())
+    val groups = try reader.getFooter.getBlocks.size finally reader.close()
+    assert(groups >= 2, s"row groups: $groups")
+    val back = LocalParquet.readIfExact(conf, f, schema).get
+    assert(back.map(r => (r.getInt(0), r.getString(1))) ==
+      spark.read.parquet(dir).collect().toSeq.map(r => (r.getInt(0), r.getString(1))))
+    assert(back.map(_.getAs[Int]("i")) == (0 until 20000))
+    assert(LocalParquet.readIfExact(conf, f,
+      StructType(Seq(StructField("i", org.apache.spark.sql.types.LongType),
+        StructField("s", org.apache.spark.sql.types.StringType)))).isEmpty)
+  }
 }
