@@ -1,6 +1,5 @@
 package graft.search
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,14 +73,22 @@ object HnswIndex {
     val (m, efC) = (params.m, params.efConstruction)
     corpus
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      // the repartition's own partition rule as a column: Spark drops the
+      // repartition when the input is already hash-partitioned by id, and
+      // AQE may then coalesce partitions, so a task can hold several
+      // segments — one graph per run of `seg`, never per task
+      .withColumn("seg", pmod(hash(col("id")), lit(params.numSegments)))
       .repartition(params.numSegments, col("id"))
-      .sortWithinPartitions("id")
-      .as[(Long, Array[Float])]
+      .sortWithinPartitions("seg", "id")
+      .as[(Long, Array[Float], Int)]
       .mapPartitions { rows =>
-        val seg = TaskContext.getPartitionId()
-        val b = new HnswBuilder(m, efC)
-        rows.foreach { case (id, v) => b.add(id, v) }
-        if (b.size == 0) Iterator.empty else Iterator.single(b.freeze(seg))
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+          val seg = it.head._3
+          val b = new HnswBuilder(m, efC)
+          while (it.hasNext && it.head._3 == seg) { val (id, v, _) = it.next(); b.add(id, v) }
+          b.freeze(seg)
+        }
       }
       .toDF()
   }

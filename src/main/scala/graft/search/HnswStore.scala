@@ -1,111 +1,105 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.store.DocumentStore
 
 /** HNSW index with incremental maintenance — the reference's point
   * add/remove path (AddRemoveData.cs:64-105 "searchable in near
   * real-time"; upsert MongoDbService.cs:241-269, delete :271-293) for
   * the segmented graph index, done the way every segment-architecture
-  * ANN system does it (Lucene HNSW, Milvus growing/sealed segments):
+  * ANN system does it (Lucene HNSW, Milvus growing/sealed segments).
   *
-  *  - '''add''': the batch builds a NEW segment graph (embarrassingly
-  *    parallel, never touches frozen segments) appended under the next
-  *    generation number — searchable as soon as the append lands, since
-  *    serve scans all segment rows. Ids already present (found with a
-  *    distributed semi-join against the segments' id columns — never a
-  *    corpus collect) are tombstoned at the current generation first,
-  *    so an updated vector replaces its stale copy atomically-per-read.
-  *  - '''remove''': an id tombstone stamped with the current generation.
-  *    A tombstone kills rows in segments of generation ≤ its stamp —
-  *    re-adding the id later (higher generation) resurrects it without
-  *    touching the tombstone, exactly the Lucene liveDocs rule.
-  *  - '''serve''': each segment counts its own dead ids and over-fetches
-  *    just k + deadInSegment (NOT k + global tombstone count — a skewed
-  *    delete pattern then only widens the beam where the dead actually
-  *    live), the generation rule filters, and the global
-  *    TakeOrderedAndProject merges. No graph is ever edited in place:
-  *    in-place HNSW deletion breaks the navigability invariants the
-  *    insert heuristic maintains, which is why no production system
-  *    does it.
-  *  - '''rebuild thresholds''': the store compacts — live (id, vector)
-  *    rows are extracted from the segments (latest generation per id,
-  *    tombstone rule applied) to a scratch parquet, the base is rebuilt
-  *    from it at generation 0 with the configured segment count, and
-  *    tombstones truncate — when EITHER trigger fires: tombstones
-  *    exceed `maxTombstoneFrac` of live rows (delete-heavy churn), or
-  *    the segment count exceeds `maxSegments` (insert-only churn: every
-  *    add appends segments and serve cost is linear in their count —
-  *    the Lucene merge-policy trigger). Both bounds amortize one
-  *    rebuild over many cheap incremental writes.
+  * The index is ONE [[DocumentStore]] table under `path`, partitioned by
+  * row kind: `seg` rows are frozen segment graphs, `tomb` rows are id
+  * tombstone batches, both [[HnswStore.Entry]] rows stamped with a
+  * generation `gen`. Every mutation reads one committed version `v` and
+  * commits over it, so the generation it writes is the version its
+  * commit claims, `v + 1`, and its tombstones are stamped `v`. Racing
+  * mutations meet at the store's claim: one lands, the other throws
+  * ConcurrentModificationException with nothing applied.
+  *
+  *  - '''add''': one append carrying the batch's new segment graph(s)
+  *    and the tombstones of the ids it replaces (found by a distributed
+  *    semi-join on the segments' id columns) — searchable as soon as the
+  *    commit lands; a failure before it leaves the index as it was.
+  *  - '''remove''': one append of a tombstone row. A tombstone kills
+  *    rows in segments of generation ≤ its stamp — re-adding the id later
+  *    (higher generation) resurrects it without touching the tombstone,
+  *    exactly the Lucene liveDocs rule.
+  *  - '''serve''': segments and tombstones come from one committed
+  *    version; the tombstone read touches only `tomb` files. Each segment
+  *    over-fetches by its own dead count (a skewed delete pattern widens
+  *    the beam only where the dead live). No graph is ever edited in
+  *    place: in-place HNSW deletion breaks the navigability invariants
+  *    the insert heuristic maintains.
+  *  - '''rebuild thresholds''': the live (id, vector) rows of one version
+  *    (latest generation per id, tombstone rule applied) are rebuilt into
+  *    the configured segment count and committed as one `create` over
+  *    that version, which drops every tombstone; readers keep the old
+  *    version until the `_CURRENT` swap. It fires when EITHER trigger
+  *    does: tombstones exceed `maxTombstoneFrac` of live rows
+  *    (delete-heavy churn), or the segment count exceeds `maxSegments`
+  *    (insert-only churn: every add appends segments and serve cost is
+  *    linear in their count — the Lucene merge-policy trigger). Both
+  *    bounds amortize one rebuild over many cheap incremental writes.
+  *
+  * Storage: as in every store table, the versions a mutation replaces —
+  * a rebuild's old segments too — stay on disk until
+  * [[DocumentStore.vacuum]] reclaims them. Nothing here vacuums, because
+  * vacuum deletes the unclaimed attempt directories of any mutation in
+  * flight.
   */
 final class HnswStore(spark: SparkSession, path: String,
                       params: HnswIndex.Params = HnswIndex.Params(),
                       maxTombstoneFrac: Double = 0.2,
                       maxSegments: Int = 64) {
   import spark.implicits._
-  import HnswStore.SegRow
+  import HnswStore._
 
-  private val graphsPath = s"$path/graphs"
-  private val tombPath = s"$path/tombstones"
+  private val store = new DocumentStore(spark, path)
 
-  // ------------------------------------------------------------- lifecycle
+  /** Bulk build (replaces any existing state). */
+  def build(corpus: DataFrame, vecCol: String, idCol: String): Unit =
+    replace(corpus, vecCol, idCol, store.version(Table))
 
-  /** Bulk build at generation 0 (replaces any existing state). */
-  def build(corpus: DataFrame, vecCol: String, idCol: String): Unit = {
-    HnswIndex.build(corpus, vecCol, idCol, params)
-      .withColumn("gen", lit(0L))
-      .write.mode("overwrite").parquet(graphsPath)
-    Seq.empty[(Long, Long)].toDF("id", "gen")
-      .write.mode("overwrite").parquet(tombPath)
-  }
-
-  /** Incremental add/replace: tombstone stale copies of incoming ids,
-    * then append the batch as new segment(s) under the next generation.
-    * The batch is its own graph — one segment per ~4k rows up to the
-    * configured count, so a small delta builds one small graph and a
-    * bulk backfill still parallelizes. */
+  /** Incremental add/replace: the batch is its own graph — one segment
+    * per ~4k rows up to the configured count, so a small delta builds
+    * one small graph and a bulk backfill still parallelizes. */
   def add(df: DataFrame, vecCol: String, idCol: String): Unit = {
-    if (!exists(graphsPath)) { build(df, vecCol, idCol); return }
-    val g = maxGen
-    // ids that already live in some segment: distributed semi-join over
-    // the column-pruned ids arrays; the collect is bounded by BATCH size
-    val stale = segRows.flatMap(r => r.ids.iterator).toDF("id")
+    val v = store.version(Table)
+    if (v == 0) { replace(df, vecCol, idCol, v); return }
+    // bounded by the BATCH size
+    val stale = rows(Seg, v).flatMap(_.ids.iterator).toDF("id")
       .join(df.select(col(idCol).cast("long").as("id")), "id")
       .distinct().as[Long].collect()
-    if (stale.nonEmpty) appendTombstones(stale.toSeq, g)
-    val batchN = df.count()
     val batchSegs = math.max(1L, math.min(params.numSegments.toLong,
-      batchN / 4096 + 1)).toInt
-    HnswIndex.build(df, vecCol, idCol, params.copy(numSegments = batchSegs))
-      .withColumn("gen", lit(g + 1))
-      .write.mode("append").parquet(graphsPath)
+      df.count() / 4096 + 1)).toInt
+    val segments = HnswIndex.build(df, vecCol, idCol, params.copy(numSegments = batchSegs))
+    val tombs = if (stale.isEmpty) Nil else Seq(tombstone(stale, v))
+    store.append(Table, stamped(segments, v + 1).unionByName(tombs.toDF()), v)
     maybeRebuild()
   }
 
-  /** Point/bulk remove: tombstone at the current generation. */
+  /** Point/bulk remove; removing from a never-built index is a no-op. */
   def remove(ids: Seq[Long]): Unit = {
-    appendTombstones(ids, maxGen)
+    val v = store.version(Table)
+    if (v == 0) return
+    store.append(Table, Seq(tombstone(ids.toArray, v)).toDF(), v)
     maybeRebuild()
   }
-
-  // ----------------------------------------------------------------- serve
 
   /** ANN top-k over live rows: per-segment beam over-fetches by that
     * segment's own dead count, the generation rule drops dead rows,
     * TakeOrderedAndProject merges segments×k short rows. */
   def search(probe: Array[Float], k: Int, ef: Int = 64): DataFrame = {
     val q = HnswGraph.normalized(probe)
-    val bc = spark.sparkContext.broadcast(readTombstones())
-    segRows.flatMap { row =>
+    val v = store.version(Table)
+    val bc = spark.sparkContext.broadcast(tombstones(v))
+    rows(Seg, v).flatMap { row =>
       val dead = bc.value
-      var deadInSeg = 0
-      var i = 0
-      while (i < row.ids.length) {
-        if (dead.get(row.ids(i)).exists(_ >= row.gen)) deadInSeg += 1
-        i += 1
-      }
-      val kFetch = k + deadInSeg
+      val kFetch = k + row.ids.count(id => dead.get(id).exists(_ >= row.gen))
       HnswGraph(row.graph).search(q, kFetch, math.max(ef, kFetch)).iterator
         .filter { case (id, _) => dead.get(id).forall(_ < row.gen) }
         .take(k)
@@ -114,15 +108,37 @@ final class HnswStore(spark: SparkSession, path: String,
       .limit(k)
   }
 
-  // ------------------------------------------------------------ inspection
-
   /** Live (id, normalized vector) rows — latest generation per id,
     * tombstone rule applied. Also the rebuild extraction path. (Vectors
     * were L2-normalized at segment build; renormalizing on rebuild is
     * idempotent, and cosine results are unaffected.) */
-  def liveVectors: DataFrame = {
-    val bc = spark.sparkContext.broadcast(readTombstones())
-    segRows.flatMap { row =>
+  def liveVectors: DataFrame = liveVectors(store.version(Table))
+
+  def tombstoneCount: Long = tombstones(store.version(Table)).size.toLong
+
+  def segmentCount: Long = rows(Seg, store.version(Table)).count()
+
+  /** The persisted segment graphs as a batched-search input
+    * ([[HnswIndex.searchMany]]/`searchManyWhere` decode it per task).
+    * Raw segments — tombstones are NOT applied here; on a store with
+    * live tombstones, filter results against [[liveVectors]] (or
+    * search per-probe via [[search]], which applies them). */
+  def graphs: DataFrame = rows(Seg, store.version(Table)).toDF().drop("kind")
+
+  /** `kind`'s rows of version `v` (none before the first build). */
+  private def rows(kind: String, v: Int): Dataset[Entry] = {
+    val df = store.readPartitions(Table, Seq(kind), v)
+    if (df.columns.isEmpty) spark.emptyDataset[Entry] else df.as[Entry]
+  }
+
+  /** Id → its newest tombstone stamp, as of version `v`. */
+  private def tombstones(v: Int): Map[Long, Long] =
+    rows(Tomb, v).collect().flatMap(t => t.ids.map(_ -> t.gen))
+      .groupBy(_._1).map { case (id, stamps) => id -> stamps.map(_._2).max }
+
+  private def liveVectors(v: Int): DataFrame = {
+    val bc = spark.sparkContext.broadcast(tombstones(v))
+    rows(Seg, v).flatMap { row =>
       val dead = bc.value
       row.ids.iterator.zipWithIndex.collect {
         case (id, i) if dead.get(id).forall(_ < row.gen) =>
@@ -131,74 +147,51 @@ final class HnswStore(spark: SparkSession, path: String,
     }.toDF("vec_id", "vec", "gen")
       // an id updated across generations: newest copy wins
       .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("gen").desc)))
+        Window.partitionBy(col("vec_id")).orderBy(col("gen").desc)))
       .filter(col("__rn") === 1)
       .select(col("vec_id"), col("vec"))
   }
 
-  def tombstoneCount: Long = readTombstones().size.toLong
-
-  def segmentCount: Long = segRows.count()
-
-  /** The persisted segment graphs as a batched-search input
-    * ([[HnswIndex.searchMany]]/`searchManyWhere` decode it per task).
-    * Raw segments — tombstones are NOT applied here; on a store with
-    * live tombstones, filter results against [[liveVectors]] (or
-    * search per-probe via [[search]], which applies them). */
-  def graphs: DataFrame = segRows.toDF()
-
-  // -------------------------------------------------------------- internal
-
-  private def segRows = spark.read.parquet(graphsPath).as[SegRow]
-
-  private def maxGen: Long =
-    spark.read.parquet(graphsPath)
-      .agg(coalesce(max(col("gen")), lit(0L))).head().getLong(0)
+  /** Replace the whole table, over version `v`, by `corpus`'s graphs. */
+  private def replace(corpus: DataFrame, vecCol: String, idCol: String, v: Int): Unit =
+    store.create(Table, stamped(HnswIndex.build(corpus, vecCol, idCol, params), v + 1),
+      Some("kind"), Nil, v)
 
   private def maybeRebuild(): Unit = {
-    val tombs = readTombstones()
-    val tooManySegments = segmentCount > maxSegments
-    if (tombs.isEmpty && !tooManySegments) return
-    val tombTrip = tombs.nonEmpty && {
-      val liveCnt = liveVectors.count()
-      liveCnt > 0 && tombs.size.toDouble / liveCnt > maxTombstoneFrac
-    }
-    if (tombTrip || tooManySegments) {
-      // Compact through a scratch parquet: build() overwrites the very
-      // files liveVectors reads, so the snapshot must be durable first.
-      val tmp = s"$path/compact_tmp"
-      liveVectors.write.mode("overwrite").parquet(tmp)
-      build(spark.read.parquet(tmp), "vec", "vec_id")
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
+    val v = store.version(Table)
+    val dead = tombstones(v).size.toDouble
+    lazy val live = liveVectors(v).count()
+    val tooDead = dead > 0 && live > 0 && dead / live > maxTombstoneFrac
+    // a lost claim means a newer commit landed; that mutation checks the
+    // triggers again on its own version
+    if (tooDead || rows(Seg, v).count() > maxSegments)
+      try replace(liveVectors(v), "vec", "vec_id", v)
+      catch { case _: java.util.ConcurrentModificationException => }
   }
-
-  private def exists(dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
-  }
-
-  private def readTombstones(): Map[Long, Long] =
-    if (!exists(tombPath)) Map.empty
-    else spark.read.parquet(tombPath).as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (id, rows) => id -> rows.map(_._2).max }
-
-  private def appendTombstones(ids: Seq[Long], gen: Long): Unit =
-    ids.map(id => (id, gen)).toDF("id", "gen")
-      .write.mode("append").parquet(tombPath)
 }
 
 object HnswStore {
-  /** One persisted segment row: a frozen [[HnswIndex.SegmentGraph]] plus
-    * its generation stamp. Top-level so the encoder needs no outer
-    * instance. */
-  private[search] case class SegRow(
-      gen: Long, segment: Int, dims: Int, entry: Int, max_level: Int,
+  private val Table = "index"
+  private val Seg = "seg"
+  private val Tomb = "tomb"
+
+  /** One row of the index table: a frozen [[HnswIndex.SegmentGraph]]
+    * (`kind` = `seg`) or a batch of tombstoned `ids` (`kind` = `tomb`,
+    * graph fields empty), with its generation stamp. Top-level so the
+    * encoder needs no outer instance. */
+  private[search] case class Entry(
+      kind: String, gen: Long, segment: Int, dims: Int, entry: Int, max_level: Int,
       ids: Array[Long], vecs: Array[Float], levels: Array[Int],
       node_slot: Array[Int], nbr_off: Array[Int], nbrs: Array[Int]) {
     def graph: HnswIndex.SegmentGraph = HnswIndex.SegmentGraph(
       segment, dims, entry, max_level, ids, vecs, levels, node_slot, nbr_off, nbrs)
   }
+
+  private def tombstone(ids: Array[Long], stamp: Int): Entry =
+    Entry(Tomb, stamp, 0, 0, 0, 0, ids, Array.empty, Array.empty,
+      Array.empty, Array.empty, Array.empty)
+
+  /** Segment graphs as `seg` rows of generation `gen`. */
+  private def stamped(graphs: DataFrame, gen: Long): DataFrame =
+    graphs.select(lit(Seg).as("kind"), lit(gen).as("gen"), col("*"))
 }

@@ -82,73 +82,20 @@ object InvertedIndex {
   private[search] final case class Meta(buckets: Int, nDocs: Long, nTokened: Long,
                                 totalLen: Long, tok: String)
 
-  /** Version-keyed meta memo: the 1-row meta table is re-read on every
-    * search/maintenance call and each read is a full Spark query
-    * (~150-300 ms of plan+job+task for one row). The committed version
-    * is a cheap `_CURRENT` file read; any mutation bumps it, so a memo
-    * keyed by (table path, version) can never serve stale — the same
-    * contract as a table format's manifest cache.
-    *
-    * Bounded + race-hardened: [[remember]] evicts the same path's
-    * OLDER versions (a long-lived process touching many temp indexes
-    * holds one live entry per path, never one per mutation epoch), a
-    * global cap clears the map outright if distinct paths somehow
-    * exceed it, and an entry is only memoized when the version re-reads
-    * UNCHANGED after the data read — a commit racing between the
-    * version probe and the read can therefore never cache new meta
-    * under the old version key (the racy read is served unmemoized
-    * instead). */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), Meta]()
-  private val MetaCacheMaxEntries = 512
-  /** Spec seam: the memo must stay bounded in a long-lived process. */
-  private[graft] def metaCacheSize: Int = metaCache.size
-
-  private[search] def memoized(path: String, v: Int): Option[Meta] =
-    Option(metaCache.get((path, v)))
-
-  /** Memoize `meta` as `path`'s version `v` and sweep only the path's
-    * OLDER epochs: a slow reader landing its stale put after a newer
-    * epoch's must never evict that newer entry. */
-  private[search] def remember(path: String, v: Int, meta: Meta): Unit = {
-    if (metaCache.size >= MetaCacheMaxEntries) metaCache.clear()
-    metaCache.put((path, v), meta)
-    metaCache.keySet.removeIf(k => k._1 == path && k._2 < v)
-  }
-
+  /** The one meta row: a driver-local read of one parquet file from one
+    * snapshot, with no Spark job ([[DocumentStore.readPartitionRows]] —
+    * the row is atomic-typed and written by the driver-local writer). */
   private def readMeta(store: DocumentStore): Meta = {
-    val path = store.tablePath("meta")
-    var attempts = 0
-    while (attempts < 5) {
-      val v0 = store.version("meta")
-      val hit = memoized(path, v0)
-      if (hit.isDefined) return hit.get
-      val r = store.read("meta").head()
-      val m = Meta(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))
-      if (store.version("meta") == v0) { remember(path, v0, m); return m }
-      attempts += 1 // version moved mid-read: retry against the new epoch
-    }
-    // writers racing faster than we can read: serve the latest, unmemoized
-    val r = store.read("meta").head()
+    val r = store.readPartitionRows("meta", Seq("all")).headOption.getOrElse(
+      throw new IllegalStateException(s"no index at ${store.tablePath("meta")}"))
     Meta(r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))
   }
 
   private def writeMeta(store: DocumentStore, m: Meta): Unit = {
     val spark = store.spark
     import spark.implicits._
-    val path = store.tablePath("meta")
-    val v0 = store.version("meta")
     store.create("meta", Seq((m.buckets, m.nDocs, m.nTokened, m.totalLen, m.tok))
       .toDF("buckets", "n_docs", "n_tokened", "total_len", "tok"))
-    // Memoize what we just committed (r20): the writer KNOWS the new
-    // meta, so the next maintenance/search call's readMeta becomes a
-    // pure hit instead of a ~200 ms Spark read job per mutation epoch.
-    // Guarded by the version delta: if any concurrent commit slipped
-    // around ours (nothing does under the single-writer contract, but
-    // the CAS makes it possible to observe), the delta isn't exactly +1
-    // and we memoize nothing — readMeta then re-reads from disk.
-    val v1 = store.version("meta")
-    if (v1 == v0 + 1) remember(path, v1, m)
   }
 
   /** Term → bucket routing, computed by the ENGINE'S OWN column

@@ -1,7 +1,7 @@
 package graft.store
 
 import java.nio.charset.StandardCharsets
-import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path => HPath}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,7 +33,7 @@ import org.apache.spark.util.sketch
   * committers exactly one owns `v+1`. The loser deletes its orphan
   * segments and throws ConcurrentModificationException (fail loudly,
   * never lose a mutation silently). The winner then swaps `_CURRENT`
-  * atomically (write temp + rename with Options.Rename.OVERWRITE);
+  * atomically (write temp + one overwriting rename, see [[ptrFs]]);
   * readers see the old version until the swap, and a crash mid-write
   * leaves garbage segments but a consistent table.
   *
@@ -53,6 +53,16 @@ class DocumentStore(val spark: SparkSession, root: String) {
   // FileContext provides rename-with-overwrite (FileSystem.rename refuses
   // an existing destination on HDFS) — the ATOMIC_MOVE analog.
   private lazy val fc: FileContext = FileContext.getFileContext(rootPath.toUri, hconf)
+  /** Where the `_CURRENT` pointer is written and read. On a checksummed
+    * filesystem (Hadoop's local one) that is the raw filesystem beneath
+    * it: a checksummed rename moves the file and its `.crc` in two
+    * steps, and a reader between them checks the new pointer against the
+    * old checksum. The raw rename is one POSIX rename(2), which replaces
+    * the old pointer atomically. */
+  private val ptrFs: FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
 
   private def tdir(table: String): HPath = new HPath(rootPath, table)
 
@@ -63,22 +73,24 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * a table (e.g. [[graft.search.ServePoint]]) live. */
   def tablePath(table: String): String = tdir(table).toString
 
-  private def readString(p: HPath): Option[String] =
-    if (!fs.exists(p)) None
+  private def readString(p: HPath, via: FileSystem = fs): Option[String] =
+    if (!via.exists(p)) None
     else {
-      val in = fs.open(p)
+      val in = via.open(p)
       try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
         StandardCharsets.UTF_8))
       finally in.close()
     }
 
-  private def writeString(p: HPath, body: String): Unit = {
-    val out = fs.create(p, true)
+  private def writeString(p: HPath, body: String, via: FileSystem = fs): Unit = {
+    val out = via.create(p, true)
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
+  private def pointer(table: String): HPath = new HPath(tdir(table), "_CURRENT")
+
   private def currentVersion(table: String): Int =
-    readString(new HPath(tdir(table), "_CURRENT")).map(_.trim.toInt).getOrElse(0)
+    readString(pointer(table), ptrFs).map(_.trim.toInt).getOrElse(0)
 
   /** A manifest VALUE is one segment dir — or several, comma-joined:
     * [[append]] grows a partition by ADDING a segment instead of
@@ -186,8 +198,10 @@ class DocumentStore(val spark: SparkSession, root: String) {
     graft.tools.Timing(s"commit-stats-$table")(refreshStats(table, base, next))
     graft.tools.Timing(s"commit-blooms-$table")(refreshBlooms(table, base, next))
     val tmp = new HPath(tdir(table), s"_CURRENT.tmp$v")
-    writeString(tmp, v.toString)
-    fc.rename(tmp, new HPath(tdir(table), "_CURRENT"), Options.Rename.OVERWRITE)
+    writeString(tmp, v.toString, ptrFs)
+    if (ptrFs eq fs) fc.rename(tmp, pointer(table), Options.Rename.OVERWRITE)
+    else if (!ptrFs.rename(tmp, pointer(table)))
+      throw new java.io.IOException(s"could not swap ${pointer(table)} to version $v")
   }
 
   /** The partition key expression: user column, or a single bucket for
@@ -397,15 +411,22 @@ class DocumentStore(val spark: SparkSession, root: String) {
       Snapshot(s.version + 1, (s.parts -- touched) ++ written, out.schema, s.partCol))
   }
 
-  def exists(table: String): Boolean = fs.exists(new HPath(tdir(table), "_CURRENT"))
+  def exists(table: String): Boolean = fs.exists(pointer(table))
 
   /** Create/replace the table (bulk load — the §3.2 ingest sink).
     * `sortBy` clusters rows within each partition's files so parquet
     * row-group min/max stats prune point/range predicates on those
     * columns at read time (the same lever compact exposes). */
   def create(table: String, df: DataFrame, partitionCol: Option[String] = None,
-             sortBy: Seq[String] = Nil): Unit = {
-    val s = snapshot(table)
+             sortBy: Seq[String] = Nil): Unit =
+    create(table, df, partitionCol, sortBy, currentVersion(table))
+
+  /** [[create]] committed over `base`, a version the caller read: if any
+    * commit landed after it, this one loses the claim and throws
+    * ConcurrentModificationException with nothing published. */
+  private[graft] def create(table: String, df: DataFrame, partitionCol: Option[String],
+                            sortBy: Seq[String], base: Int): Unit = {
+    val s = snapshot(table, base)
     fs.mkdirs(tdir(table))
     val written = writeSegments(table, df, s.version + 1, partitionCol, sortBy)
     commit(table, s, Snapshot(s.version + 1, written, df.schema, partitionCol))
@@ -541,8 +562,14 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * manifest-level partition pruning: segment dirs of other partitions
     * are never even listed, let alone opened. The IVF search path reads
     * only its nprobe centroid partitions through this. */
-  def readPartitions(table: String, partKeys: Seq[String]): DataFrame = {
-    val s = snapshot(table)
+  def readPartitions(table: String, partKeys: Seq[String]): DataFrame =
+    readPartitions(table, partKeys, currentVersion(table))
+
+  /** [[readPartitions]] of committed version `version`: two reads of one
+    * version see one state of the table. */
+  private[graft] def readPartitions(table: String, partKeys: Seq[String],
+                                    version: Int): DataFrame = {
+    val s = snapshot(table, version)
     // no matching partitions: keep the TABLE's schema (a zero-column
     // emptyDataFrame would crash callers selecting result columns)
     if (s.parts.isEmpty) spark.emptyDataFrame else readParts(s, safeKeys(partKeys))
@@ -700,8 +727,14 @@ class DocumentStore(val spark: SparkSession, root: String) {
     * Per-partition stats/bloom sidecars refresh incrementally — an
     * appended partition counts as changed and is rescanned (segment-
     * granular sidecars would make that O(batch) too; not yet needed). */
-  def append(table: String, rows: DataFrame): Unit = {
-    val s = snapshot(table)
+  def append(table: String, rows: DataFrame): Unit =
+    append(table, rows, currentVersion(table))
+
+  /** [[append]] committed over `base`, a version the caller read; a
+    * commit that landed after it makes this one throw
+    * ConcurrentModificationException, as in [[create]]'s form. */
+  private[graft] def append(table: String, rows: DataFrame, base: Int): Unit = {
+    val s = snapshot(table, base)
     // cluster the append by partition — the same discipline as
     // upsertDropping's rewrite: without it every task of `rows` sprays
     // a sliver file into every partition dir it holds rows for

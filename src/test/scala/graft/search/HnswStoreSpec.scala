@@ -1,5 +1,6 @@
 package graft.search
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSuite
@@ -132,5 +133,91 @@ class HnswStoreSpec extends AnyFunSuite with SparkSuite {
     val got = hits(store, probe, 10)
     assert(victims.toSet.intersect(got.toSet).isEmpty, "victims gone after rebuild")
     assert(got.contains(300L), "live self-hit survives the rebuild")
+  }
+
+  private def batch(rows: (Long, Array[Float])*) =
+    rows.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+
+  test("a failed add loses no id: the copies it was replacing stay live") {
+    val store = fresh()
+    val ids = Seq(3L, 7L)
+    // the vector column fails only when the segment build reads it, after
+    // the lookup of the ids the batch replaces (which reads ids alone)
+    val broken = udf { (v: Seq[Float]) =>
+      if (v.nonEmpty) throw new IllegalStateException("vector source failed"); v }
+    val bad = emb.filter($"vec_id".isin(ids: _*))
+      .select($"vec_id", broken($"embedding").as("embedding"))
+    intercept[Exception](store.add(bad, "embedding", "vec_id"))
+    ids.foreach(id => assert(hits(store, vecOf(id), 10).contains(id), s"id $id lost"))
+    assert(store.liveVectors.filter($"vec_id".isin(ids: _*)).count() == 2L)
+    assert(store.tombstoneCount == 0L)
+  }
+
+  test("a search during a rebuild sees the whole old index or the whole new one") {
+    val probe = vecOf(300L)
+    // ef above every segment's size makes each beam exhaustive, so an
+    // answer depends only on which version a search read
+    def answer(s: HnswStore) = s.search(probe, 10, ef = 512)
+      .select("vec_id").as[Long].collect().toSet
+    val store = fresh(frac = 0.05)
+    val before = answer(store)
+    // 50 of 500 ids (past the 5% trigger), five of them current hits
+    val victims = (before.toSeq.filter(_ != 300L).take(5) ++ (0L until 100L))
+      .distinct.take(50)
+    // the tombstoned old index answers as the rebuilt one will
+    val untriggered = fresh(frac = 1.0)
+    untriggered.remove(victims)
+    val after = answer(untriggered)
+    assert(after != before && after.intersect(victims.toSet).isEmpty)
+
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Either[Throwable, Set[Long]]]()
+    val searcher = new Thread(() => while (!done.get()) {
+      seen.add(try Right(answer(store)) catch { case e: Throwable => Left(e) })
+    })
+    searcher.start()
+    try store.remove(victims) finally { done.set(true); searcher.join() }
+    assert(store.tombstoneCount == 0L, "the removal must trigger the rebuild")
+    assert(answer(store) == after)
+    val results = seen.asScala.toSeq
+    assert(results.nonEmpty)
+    results.foreach {
+      case Left(e) => fail(s"a search during the rebuild threw: $e", e)
+      case Right(got) => assert(got == before || got == after, s"mixed answer $got")
+    }
+  }
+
+  test("two racing adds never share a generation") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val store = fresh()
+    val base = vecOf(11L)
+    def near(d: Float) = base.map(_ * (1f + d)) // the probe's direction
+    // both batches carry id 800000; each also carries one id of its own
+    val batches = Seq(
+      800001L -> batch(800000L -> near(0.01f), 800001L -> near(0.02f)),
+      800002L -> batch(800000L -> near(0.03f), 800002L -> near(0.04f)))
+    val gate = new java.util.concurrent.CountDownLatch(2)
+    val outcomes = Await.result(Future.sequence(batches.map { case (own, df) =>
+      Future {
+        gate.countDown(); gate.await()
+        try { store.add(df, "embedding", "vec_id"); Some(own) }
+        catch { case _: java.util.ConcurrentModificationException => None }
+      }
+    }), 5.minutes)
+    val landed = outcomes.flatten
+    assert(landed.nonEmpty, "at least one add lands")
+    val gens = landed.map { own =>
+      val g = store.graphs.filter(array_contains($"ids", own)).select("gen").as[Long].collect()
+      assert(g.length == 1, s"id $own is in ${g.length} segments")
+      g.head
+    }
+    assert(gens.distinct.size == gens.size, s"racing adds shared a generation: $gens")
+    // every landed id has exactly one live copy; a lost batch's own id none
+    val got = store.search(base, 20, ef = 96).select("vec_id").as[Long].collect().toSeq
+    (800000L +: landed).foreach(id => assert(got.count(_ == id) == 1, s"id $id: $got"))
+    batches.map(_._1).filterNot(landed.contains).foreach(id => assert(!got.contains(id)))
   }
 }

@@ -348,37 +348,37 @@ class InvertedIndexSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
-  test("meta memo stays bounded: one live version per index path") {
+  test("search serves the current meta after maintenance epochs") {
     import spark.implicits._
     val docs = (1L to 6L).map(i => (i, s"w$i common")).toDF("doc_id", "text")
-    val dir = Scratch.dir(spark, "memo")
+    val dir = Scratch.dir(spark, "meta-epochs")
     InvertedIndex.build(docs, "doc_id", "text", dir)
-    val before = InvertedIndex.metaCacheSize
-    // 6 mutation epochs: each bumps the meta version; the memo must not
-    // accumulate one entry per epoch for the same index path
+    // 6 mutation epochs, each a new meta version
     (1L to 3L).foreach(i => InvertedIndex.remove(spark, dir, Seq(i)))
     (11L to 13L).foreach { i =>
       InvertedIndex.add(spark, dir, Seq((i, s"new$i common")).toDF("doc_id", "text"),
         "doc_id", "text")
     }
-    assert(InvertedIndex.metaCacheSize <= before + 1,
-      s"memo grew: $before -> ${InvertedIndex.metaCacheSize}")
-    // and the memo serves the CURRENT stats (never stale)
     val hits = InvertedIndex.search(spark, dir, Seq("common"), k = 20)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(hits == Set(4L, 5L, 6L, 11L, 12L, 13L))
   }
 
-  test("meta memo: a stale put never evicts a newer epoch") {
-    val path = "memo-epoch-spec"
-    val m1 = InvertedIndex.Meta(1, 1L, 1L, 1L, "v1")
-    val m2 = InvertedIndex.Meta(2, 2L, 2L, 2L, "v2")
-    InvertedIndex.remember(path, 2, m2)
-    // a slow reader of epoch 1 lands its put after epoch 2's
-    InvertedIndex.remember(path, 1, m1)
-    assert(InvertedIndex.memoized(path, 2).contains(m2))
-    // a newer epoch still sweeps the older ones
-    InvertedIndex.remember(path, 3, m2.copy(tok = "v3"))
-    assert(InvertedIndex.memoized(path, 1).isEmpty && InvertedIndex.memoized(path, 2).isEmpty)
+  test("an index deleted and rebuilt at the same path serves the new stats") {
+    import spark.implicits._
+    val d = Scratch.dir(spark, "invidx-same-path")
+    InvertedIndex.build(corpus, "doc_id", "text", d, buckets = 8)
+    assert(InvertedIndex.search(spark, d, Seq("apple"), k = 10).count() == 3)
+    val p = new org.apache.hadoop.fs.Path(d)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    // the rebuild's meta is again version 1, with other stats: N = 8 and
+    // 16 buckets. apple df = 1 -> w = bits(8) - bits(1) = 3, tf 1 -> 3
+    val docs = (1L to 8L).map(i => (i, if (i == 1L) "apple" else s"kiwi$i"))
+      .toDF("doc_id", "text")
+    InvertedIndex.build(docs, "doc_id", "text", d, buckets = 16)
+    assert(InvertedIndex.layoutBuckets(spark, d) == 16)
+    val got = InvertedIndex.search(spark, d, Seq("apple"), k = 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == Seq((1L, 3L)))
   }
 }

@@ -132,4 +132,52 @@ class StoreConcurrencySpec extends AnyFunSuite with SparkSuite {
     val (keptLow, _) = s.statsPrunedParts("t", "score", 10, 40)
     assert(keptLow.size < total)
   }
+
+  test("readers racing a committer's _CURRENT swaps never fail") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val (s, _) = freshStore()
+    s.create("t", Seq((1L, "p0", "v0")).toDF("id", "p", "x"), partitionCol = Some("p"))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def reader(read: () => Long): Future[Seq[Long]] = Future {
+      val out = Seq.newBuilder[Long]
+      while (!done.get()) out += read()
+      out.result()
+    }
+    val readers = Seq(
+      reader(() => s.version("t").toLong),
+      reader(() => s.read("t").count()),
+      reader(() => s.readPartitionRows("t", Seq("p0")).size.toLong))
+    val writer = Future {
+      try (1 to 60).foreach { i =>
+        s.upsert("t", Seq((i % 5L, "p0", s"v$i")).toDF("id", "p", "x"), Seq("id", "p"))
+      } finally done.set(true)
+    }
+    Await.result(writer, 5.minutes)
+    val Seq(versions, counts, rows) = Await.result(Future.sequence(readers), 5.minutes)
+    assert(s.version("t") == 61)
+    assert(versions.nonEmpty && versions == versions.sorted, "a reader saw the version go back")
+    assert((counts ++ rows).forall(n => n >= 1 && n <= 5))
+  }
+
+  test("a _CURRENT checksum left by an earlier writer neither breaks a read nor a commit") {
+    val (s, root) = freshStore()
+    s.create("t", Seq((1L, "a")).toDF("id", "x"))
+    // an earlier writer wrote the pointer with a checksum; the pointer
+    // has since been rewritten without one, so the checksum is stale
+    val ptr = new org.apache.hadoop.fs.Path(s"$root/t/_CURRENT")
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    val out = local.create(ptr, true)
+    try out.write("1".getBytes) finally out.close()
+    val crc = new java.io.File(s"$root/t/._CURRENT.crc")
+    assert(crc.exists)
+    Files.writeString(new java.io.File(s"$root/t/_CURRENT").toPath, "1\n")
+    assert(s.version("t") == 1)
+    assert(s.read("t").count() == 1)
+    s.upsert("t", Seq((2L, "b")).toDF("id", "x"), Seq("id"))
+    assert(s.version("t") == 2)
+    assert(s.read("t").orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a"), (2L, "b")))
+  }
 }
